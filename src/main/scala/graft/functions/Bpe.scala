@@ -74,19 +74,15 @@ object Bpe {
     * `wordCol` string, `countCol` integral. */
   def train(wordCounts: DataFrame, nMerges: Int,
       wordCol: String = "w", countCol: String = "f"): Seq[Merge] = {
-    // per-round cache discipline (the connectedComponents pattern):
-    // persist the round, truncate its lineage, and free the PREDECESSOR
-    // only after the successor has materialized — exactly one copy of
-    // the vocab stays cached however many merge rounds run, and the
-    // fold plan never nests.
-    def materialize(df: DataFrame): (DataFrame, () => Unit) = {
-      val handle = df.persist()
-      handle.count() // one tiny vocab-table job materializes the cache
-      val truncated =
-        df.sparkSession.createDataFrame(handle.rdd, handle.schema)
-      (truncated, () => { handle.unpersist(); () })
-    }
-    var (cur, free) = materialize(wordCounts
+    // per-round cache discipline ([[graft.operators.Rounds.Persist]]):
+    // persist the round, truncate its plan, and free the PREDECESSOR
+    // only after the successor has materialized — the fold plan never
+    // nests however many merge rounds run.
+    val loop = new graft.operators.Rounds(wordCounts.sparkSession,
+      graft.operators.Rounds.Persist)
+    def materialize(df: DataFrame): DataFrame =
+      loop.next(df, count(lit(1))).frame
+    var cur = materialize(wordCounts
       .select(col(countCol).cast("long").as("f"),
         charSymbols(col(wordCol)).as("sym")))
     val merges = Seq.newBuilder[Merge]
@@ -106,15 +102,12 @@ object Bpe {
         case Some(row) =>
           val (a, b, n) = (row.getString(0), row.getString(1), row.getLong(2))
           merges += Merge(rank, a, b, n)
-          val (next, freeNext) = materialize(
+          cur = materialize(
             cur.select(col("f"), mergePair(col("sym"), a, b).as("sym")))
-          free() // predecessor's cache, after the successor landed
-          cur = next
-          free = freeNext
           rank += 1
       }
     }
-    free()
+    loop.close()
     merges.result()
   }
 

@@ -65,9 +65,6 @@ object Portable {
   /** Whitespace tokens (single-space split — the corpus is single-spaced). */
   def tokens(text: Column): Column = split(text, " ")
 
-  /** Distinct token set. */
-  def tokenSet(text: Column): Column = array_distinct(tokens(text))
-
   /** `n`-word shingles joined by a space: one string per window position.
     * Empty result if the document has fewer than `n` tokens.
     *
@@ -104,9 +101,6 @@ object Portable {
   /** Base hash per shingle: pmd5 reduced into the family field. */
   def baseHashes(shingles: Column): Column =
     transform(shingles, s => pmd5(s) % MinhashP)
-
-  def baseHashesSql(shinglesSql: String): String =
-    s"list_transform($shinglesSql, s -> ${pmd5Sql("s")} % $MinhashP)"
 
   /** 3-word-shingle hashes via token-hash combination: each TOKEN is
     * md5-hashed once, shingle hashes are polynomial combinations mod P.

@@ -118,12 +118,17 @@ object Bpe {
     * round: one vocab-bounded pair-count agg, ONE argmax row to the
     * driver, one staged projection applying the merge. Returns
     * (round, a, b, cnt) in learn order; stops early if no pair is
-    * left. Each round's vocabulary frame is persisted and the
-    * previous round's freed — peak cache is one vocab table. */
+    * left. Each round's vocabulary frame is materialized and its plan
+    * cut ([[graft.operators.Rounds.Persist]]), and the previous
+    * round's freed — peak cache is two vocab tables. */
   def trainMerges(docs: DataFrame, textCol: String,
       rounds: Int): Seq[(Int, String, String, Long)] = {
-    var forms = vocab(docs, textCol)
-      .withColumn("form", charSymbols(col("word"))).persist()
+    val loop = new graft.operators.Rounds(docs.sparkSession,
+      graft.operators.Rounds.Persist)
+    def materialize(df: DataFrame): DataFrame =
+      loop.next(df, count(lit(1))).frame
+    var forms = materialize(vocab(docs, textCol)
+      .withColumn("form", charSymbols(col("word"))))
     val learned = Seq.newBuilder[(Int, String, String, Long)]
     var r = 1
     var exhausted = false
@@ -135,15 +140,12 @@ object Bpe {
         val (a, b, c) =
           (top(0).getString(0), top(0).getString(1), top(0).getLong(2))
         learned += ((r, a, b, c))
-        val next = forms
-          .withColumn("form", mergeOnce(col("form"), a, b)).persist()
-        next.count() // materialize before dropping the parent cache
-        forms.unpersist()
-        forms = next
+        forms = materialize(
+          forms.withColumn("form", mergeOnce(col("form"), a, b)))
         r += 1
       }
     }
-    forms.unpersist()
+    loop.close()
     learned.result()
   }
 

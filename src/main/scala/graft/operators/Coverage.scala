@@ -19,13 +19,13 @@ import org.apache.spark.sql.functions._
   * Round-on-round state discipline: the exploded (id, feature)
   * projection is persisted ONCE (a round-7/8 lesson — every round's
   * anti-join and the winner-feature probe re-derive it otherwise), and
-  * the covered set is eagerly `localCheckpoint`ed every round, so BOTH
+  * the covered set is cut every round by [[Rounds.Local]], so BOTH
   * logical-plan depth and RDD lineage stay O(1) in k instead of the
   * O(k) chained `union().distinct()` history that re-registers every
   * ancestor stage per job (O(k^2) scheduler work) and overflows the
   * task-deserialization stack around k~50. See the in-loop comment for
-  * why the [[Dedup.connectedComponents]] lineage-kept persist idiom is
-  * NOT enough here, and the fault-tolerance tradeoff that buys.
+  * why the [[Rounds.Persist]] cut [[Dedup.connectedComponents]] uses
+  * is NOT enough here, and the fault-tolerance tradeoff that buys.
   *
   * The covered set's row count is a free by-product of the per-round
   * materialize action (the count that populates the cache before the
@@ -72,11 +72,10 @@ object Coverage {
       featCol: String, k: Int,
       broadcastMaxRows: Long): (Seq[(Long, Long)], () => Unit) = {
     require(k > 0, "need k > 0 rounds")
-    val spark = sets.sparkSession
     val pairs = sets.select(col(idCol).as("__id"),
       explode(col(featCol)).as("__f")).persist()
+    val loop = new Rounds(sets.sparkSession, Rounds.Local)
     var covered: Option[DataFrame] = None // plan-truncated view
-    var coveredFree: () => Unit = () => ()
     var coveredRows = 0L // == sum of gains so far (exact, see scaladoc)
     val picks = Seq.newBuilder[(Long, Long)]
     var round = 0
@@ -99,28 +98,26 @@ object Coverage {
           picks += ((id, gain))
           val winnerFeats = pairs.filter(col("__id") === id)
             .select(col("__f")).distinct()
-          // localCheckpoint, NOT persist + .rdd plan truncation (the CC
-          // idiom): persist cuts neither RDD lineage nor the per-job
-          // stage DAG, so round r's jobs re-register all r ancestor
-          // stages (skipped, but scheduled) and task serialization
-          // recurses through r rounds of nested RDD deps — at k=50 that
-          // is a StackOverflowError in task deserialization (observed)
-          // and O(k^2) scheduler work. CC survives on lineage-kept
-          // persist because its round count is ~log(diameter) <= 25;
-          // greedy selection's k is a caller budget with no such bound,
-          // so each round's covered set is MATERIALIZED (eager) and its
-          // lineage erased. Tradeoff, stated plainly: a lost executor
-          // now fails the job instead of recomputing — the covered set
-          // is tiny (feature keys only) and rounds are cheap to re-run,
+          // the Local cut, NOT lineage-kept persist (the CC cut):
+          // persist cuts neither RDD lineage nor the per-job stage DAG,
+          // so round r's jobs re-register all r ancestor stages
+          // (skipped, but scheduled) and task serialization recurses
+          // through r rounds of nested RDD deps — at k=50 that is a
+          // StackOverflowError in task deserialization (observed) and
+          // O(k^2) scheduler work. CC survives on lineage-kept persist
+          // because its round count is ~log(diameter) <= 25; greedy
+          // selection's k is a caller budget with no such bound, so
+          // each round's covered set is MATERIALIZED and its lineage
+          // erased. Tradeoff, stated plainly: a lost executor now
+          // fails the job instead of recomputing — the covered set is
+          // tiny (feature keys only) and rounds are cheap to re-run,
           // so restart-the-selection is the recovery story at scale.
-          val handle = covered.map(_.union(winnerFeats).distinct())
-            .getOrElse(winnerFeats).localCheckpoint(true)
-          // the size tracker reads the checkpointed blocks (one tiny
-          // job); on a precondition-respecting corpus it equals
-          // coveredRows + gain
-          coveredRows = handle.count()
-          coveredFree() // predecessor's checkpoint blocks
-          coveredFree = freeCheckpoint(handle)
+          // The size tracker rides the materialize job; on a
+          // precondition-respecting corpus it equals coveredRows + gain
+          val next = loop.next(covered.map(_.union(winnerFeats).distinct())
+            .getOrElse(winnerFeats), count(lit(1)))
+          coveredRows = next.stats.getLong(0)
+          val handle = next.frame
           covered = Some(handle)
           lastCoveredPlanDepth =
             handle.queryExecution.analyzed.collect { case p => p }.size
@@ -128,23 +125,6 @@ object Coverage {
         case None => exhausted = true // every feature covered
       }
     }
-    val freeAll = { val cf = coveredFree; () => { cf(); pairs.unpersist(); () } }
-    (picks.result(), freeAll)
-  }
-
-  /** Deterministic release of a `localCheckpoint`ed frame's executor
-    * blocks. `Dataset.localCheckpoint` persists an INTERNAL RDD that the
-    * public API never hands back (`.rdd` wraps it in a fresh
-    * deserializer whose unpersist would no-op), so without this the
-    * predecessor rounds' blocks wait for the ContextCleaner's GC sweep —
-    * unbounded executor storage on a long-lived driver. The internal
-    * handle is recoverable from the truncated plan's `LogicalRDD`.
-    * Shared by every round-truncating iterative operator (greedy
-    * coverage here, [[SuffixArray]]'s doubling rounds). */
-  private[operators] def freeCheckpoint(df: DataFrame): () => Unit = {
-    val rdds = df.queryExecution.analyzed.collect {
-      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
-    }
-    () => { rdds.foreach(_.unpersist(blocking = false)); () }
+    (picks.result(), () => { loop.close(); pairs.unpersist(); () })
   }
 }

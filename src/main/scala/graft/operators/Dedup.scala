@@ -96,7 +96,7 @@ object Dedup {
     val exploded = bandExplode(banded, idCol, idCol, nBands)
       // self-joined below: without materialization the whole upstream
       // signature pipeline (shingle + minhash) runs once PER SIDE.
-      // persist (not localCheckpoint): lineage is kept, so losing an
+      // persist (not a Rounds.Local cut): lineage is kept, so losing an
       // executor recomputes instead of failing the job, and the blocks
       // are owned by the session cache — `spark.catalog.clearCache()`
       // (or `unpersist`) frees them after the terminal action.
@@ -362,33 +362,6 @@ object Dedup {
     size(array_intersect(a, b)).cast(DoubleType) /
       (size(a) + size(b) - size(array_intersect(a, b)))
 
-  /** Blocked near-duplicate pairs by exact token-set Jaccard: candidate
-    * pairs are restricted to equal `blockCols` (an equi-join, shuffle-
-    * partitioned by block key), then verified with the exact measure. */
-  def blockedJaccardPairs(
-      df: DataFrame, textCol: String, idCol: String,
-      blockCols: Seq[String], threshold: Double): DataFrame = {
-    val withSet = df.select(
-      (col(idCol) +: blockCols.map(col)) :+
-        array_distinct(split(col(textCol), " ")).as("ts"): _*)
-    val l = withSet.as("l")
-    val r = withSet.as("r")
-    val blockCond = blockCols.map(c => col(s"l.$c") === col(s"r.$c")).reduce(_ && _)
-    l.join(r, blockCond && col(s"l.$idCol") < col(s"r.$idCol"))
-      .select(
-        col(s"l.$idCol").as("id_a"), col(s"r.$idCol").as("id_b"),
-        jaccard(col("l.ts"), col("r.ts")).as("jaccard"))
-      .filter(col("jaccard") >= threshold)
-  }
-
-  /** Character n-gram distinct-set column for [[jaccard]] verification. */
-  def charNgrams(text: Column, n: Int): Column =
-    array_distinct(
-      when(length(text) < n, array().cast(ArrayType(StringType)))
-        .otherwise(transform(
-          sequence(lit(1), length(text) - (n - 1)),
-          i => text.substr(i, lit(n)))))
-
   /** Hashed variant: n-grams reduced to 31-bit longs via the portable
     * hash. Set intersections then compare longs, not strings — the
     * per-pair verification cost at corpus scale. In-doc hash collisions
@@ -465,35 +438,31 @@ object Dedup {
     * and converges in O(log n) rounds regardless of chain length. No
     * driver-side graph state.
     *
-    * Execution harness (persist path): ONE Spark job per round — the
-    * round's edge set is persisted and a single aggregate computes
+    * Execution harness: each round is one [[Rounds]] step — the
+    * round's edge set is materialized by a single aggregate computing
     * (row count, two independently-keyed commutative checksums); the
     * fixpoint test compares those against the previous round. Both
     * sides are distinct sets, and each checksum is a sum of ~30-bit
     * residues (`pmod(xxhash64, prime)`), so one checksum bounds
     * false convergence at ~1e-9 per round and the two independent
-    * primes/column-orders jointly at ~1e-18 (~2^-60). The previous
-    * round's PERSISTED handle is unpersisted as soon as its successor
-    * is materialized, so the loop holds at most two edge sets in
-    * executor storage and leaves only the final one for the caller
-    * (see the public-API note below). The logical plan is truncated
-    * each round at an RDD boundary so plan size stays O(1) —
-    * lineage is KEPT (a lost executor recomputes through it), unlike
-    * `localCheckpoint`, which would make any block loss fatal on a
-    * real cluster. The truncation is not free: the `.rdd` round-trip
-    * decodes each row to an external `Row` and re-encodes it on every
-    * consumption, and the resulting `LogicalRDD` carries default
-    * (maximum) size statistics — acceptable here because each round's
-    * consumers are key equi-joins that shuffle regardless.
+    * primes/column-orders jointly at ~1e-18 (~2^-60). The loop holds
+    * at most two edge sets and leaves only the final one for the
+    * caller (see the public-API note below). The default cut is
+    * [[Rounds.Persist]]: lineage is KEPT (a lost executor recomputes
+    * through it), unlike [[Rounds.Local]], which would make any block
+    * loss fatal on a real cluster, and the plan is truncated at an RDD
+    * boundary so plan size stays O(1). The truncation is not free: the
+    * `.rdd` round-trip decodes each row to an external `Row` and
+    * re-encodes it on every consumption, and the resulting
+    * `LogicalRDD` carries default (maximum) size statistics —
+    * acceptable here because each round's consumers are key
+    * equi-joins that shuffle regardless.
     *
     * For very long chains on unreliable clusters, pass `checkpointDir`:
     * rounds then write reliable checkpoints to that directory
-    * (replicated storage), bounding recovery cost to one round. The
-    * checkpoint path costs THREE jobs per round (compute+cache, the
-    * checkpoint write from cache, then the stats aggregate over the
-    * checkpointed files) but computes each edge set once; each round's
-    * files are deleted as soon as the successor round is on disk, so
-    * the directory holds at most two rounds.
+    * ([[Rounds.Reliable]]), bounding recovery cost to one round, at
+    * the price of the checkpoint write from cache as a second job per
+    * round; the directory holds at most two rounds.
     *
     * Cache contract: the returned frame reads the final round's
     * persisted edge set (or checkpoint files). Free it after the
@@ -509,9 +478,8 @@ object Dedup {
       idB: String = "id_b", maxIter: Int = 25,
       checkpointDir: Option[String] = None,
       failOnNonConvergence: Boolean = true): DataFrame = {
-    val spark = pairs.sparkSession
-    checkpointDir.foreach(spark.sparkContext.setCheckpointDir)
-
+    val loop = new Rounds(pairs.sparkSession,
+      checkpointDir.map(Rounds.Reliable).getOrElse(Rounds.Persist))
     // stats aggregate: row count + two commutative checksums under
     // independent keys (different prime, different column order). Sums
     // of ~2^30 residues stay inside Long under ANSI arithmetic up to
@@ -521,52 +489,15 @@ object Dedup {
       coalesce(sum(pmod(xxhash64(col("src"), col("dst")), lit(1000000007L))), lit(0L)),
       coalesce(sum(pmod(xxhash64(col("dst"), col("src")), lit(998244353L))), lit(0L)))
 
-    final case class Round(frame: DataFrame, free: () => Unit,
-        count: Long, sum1: Long, sum2: Long)
-
-    // persist path: one job (the aggregate materializes the cache);
-    // `frame` is the plan-truncated view, `free` unpersists the
-    // PERSISTED handle (the truncated LogicalRDD has no cache entry —
-    // unpersisting it would be a no-op).
-    // checkpoint path: two jobs (eager checkpoint write + stats);
-    // `free` deletes that round's checkpoint files.
-    def materializeWithStats(df: DataFrame): Round = {
-      if (checkpointDir.isDefined) {
-        val rdd = df.rdd
-        // cache across the two actions: without it the checkpoint WRITE
-        // job recomputes the whole contraction lineage the count job
-        // just ran (the recompute the RDD.checkpoint docs warn about)
-        rdd.persist()
-        rdd.checkpoint()
-        rdd.count() // job 1 computes+caches; job 2 writes the checkpoint from cache
-        val frame = spark.createDataFrame(rdd, df.schema)
-        val row = frame.agg(statsCols.head, statsCols.tail: _*).head() // job 3
-        rdd.unpersist()
-        val free = () => rdd.getCheckpointFile.foreach { f =>
-          val p = new org.apache.hadoop.fs.Path(f)
-          p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
-          ()
-        }
-        Round(frame, free, row.getLong(0), row.getLong(1), row.getLong(2))
-      } else {
-        val handle = df.persist()
-        val row = handle.agg(statsCols.head, statsCols.tail: _*).head()
-        val truncated = spark.createDataFrame(handle.rdd, handle.schema)
-        Round(truncated, () => { handle.unpersist(); () },
-          row.getLong(0), row.getLong(1), row.getLong(2))
-      }
-    }
-
-    var cur = materializeWithStats(
+    var cur = loop.next(
       pairs.select(col(idA).as("src"), col(idB).as("dst"))
         .filter(col("src") =!= col("dst"))
-        .distinct())
+        .distinct(), statsCols: _*)
     var iter = 0
-    var done = cur.count == 0L
+    var done = cur.stats.getLong(0) == 0L
     while (!done && iter < maxIter) {
-      val next = materializeWithStats(smallStar(largeStar(cur.frame)))
-      cur.free() // predecessor's cache/files, not the truncated wrapper
-      done = next.count == cur.count && next.sum1 == cur.sum1 && next.sum2 == cur.sum2
+      val next = loop.next(smallStar(largeStar(cur.frame)), statsCols: _*)
+      done = next.stats == cur.stats
       cur = next
       iter += 1
     }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Iterative graph analytics over undirected pair lists (the near-dup
@@ -29,17 +29,16 @@ object Graph {
     *    contribution aggregate covers the full node set each round (no
     *    dangling-mass term);
     *  - `truncateEvery` bounds PLAN depth for long runs: every that
-    *    many rounds the rank frame is rebuilt from its own RDD (the
-    *    connected-components trick, [[Dedup.connectedComponents]]) —
-    *    plan size per round stays O(1) instead of unrolling a
-    *    30-join lineage that chokes the optimizer. Lineage is KEPT
-    *    (a lost block recomputes through it); pass `checkpointDir`
-    *    to instead write reliable per-round checkpoints (replicated
-    *    storage) that bound recovery to one round — each round's
-    *    files are deleted once the successor is on disk. The final
-    *    round is never truncated, so short runs (iters <=
-    *    truncateEvery, e.g. q70's 5) plan exactly as the plain
-    *    unrolled form.
+    *    many rounds the rank frame is cut by [[Rounds]]
+    *    ([[Rounds.Persist]]) — plan size per round stays O(1) instead
+    *    of unrolling a 30-join lineage that chokes the optimizer.
+    *    Lineage is KEPT (a lost block recomputes through it); pass
+    *    `checkpointDir` to instead write reliable per-round
+    *    checkpoints ([[Rounds.Reliable]]) that bound recovery to one
+    *    round — each round's files are deleted once the successor is
+    *    on disk. The final round is never truncated, so short runs
+    *    (iters <= truncateEvery, e.g. q70's 5) plan exactly as the
+    *    plain unrolled form.
     *
     * Cache contract: the returned frame reads the persisted edge list
     * (and, on truncated runs, the last truncation's cache); free them
@@ -51,13 +50,12 @@ object Graph {
       iters: Int = 5, teleport: Double = 0.15, damping: Double = 0.85,
       truncateEvery: Int = 5, checkpointDir: Option[String] = None): DataFrame = {
     require(iters >= 1, s"iters must be >= 1, got $iters")
-    val spark = pairs.sparkSession
-    checkpointDir.foreach(spark.sparkContext.setCheckpointDir)
+    val loop = new Rounds(pairs.sparkSession,
+      checkpointDir.map(Rounds.Reliable).getOrElse(Rounds.Persist))
     val sym = symmetrize(pairs, idA, idB)
     val deg = sym.groupBy("src").agg(count(lit(1)).as("deg"))
     val edges = sym.join(deg, "src").repartition(col("src")).persist()
     var ranks = deg.select(col("src").as("id"), lit(1.0).as("r"))
-    var freePrev: () => Unit = () => ()
     for (t <- 1 to iters) {
       val contrib = edges
         .join(ranks, edges("src") === ranks("id"))
@@ -69,8 +67,7 @@ object Graph {
       ranks = contrib.select(col("dst").as("id"),
         (lit(teleport) + lit(damping) * col("csum")).as("r"))
       if (truncateEvery > 0 && t % truncateEvery == 0 && t < iters)
-        ranks = truncate(spark, ranks, checkpointDir.isDefined,
-          freeHook = f => { freePrev(); freePrev = f })
+        ranks = loop.next(ranks).frame
     }
     ranks
   }
@@ -88,10 +85,10 @@ object Graph {
     * Scale design: each round is one count agg on the 8-byte node id
     * plus two semi-joins of the edge list against the (shrinking)
     * survivor set; nothing ever grows. Each round MATERIALIZES into a
-    * cache (one count job, the CC pattern from Dedup.connectedComponents)
-    * and the next round plans over the materialized rows: the round
-    * body references the edge frame three times (degree agg + two
-    * semi-joins), so an unmaterialized loop fans the logical plan out
+    * cache (one count job, [[Rounds.Persist]]) and the next round
+    * plans over the materialized rows: the round body references the
+    * edge frame three times (degree agg + two semi-joins), so an
+    * unmaterialized loop fans the logical plan out
     * 3^rounds and Catalyst analysis alone goes exponential by round
     * ~6 — measured as a multi-hour analysis stall at rounds=6 on an
     * 11-edge graph before this truncation. The previous round's cache
@@ -104,17 +101,14 @@ object Graph {
   def kCore(pairs: DataFrame, idA: String = "id_a", idB: String = "id_b",
       k: Int = 2, rounds: Int = 6): DataFrame = {
     require(k >= 1 && rounds >= 1, s"need k >= 1, rounds >= 1; got $k, $rounds")
-    val spark = pairs.sparkSession
     // materialize the INPUT edge set before peeling (r16): the round
     // body references `edges` three times (degree agg + two semi
     // joins), so an unmaterialized first round recomputes the whole
     // upstream pair pipeline (LSH minhash + verify at the call sites)
     // up to three times; one count job here makes round 1 read rows
     // like every later round.
-    var freePrev: () => Unit = () => ()
-    var edges = truncate(spark, symmetrize(pairs, idA, idB),
-      reliable = false, f => freePrev = f)
-    edges.count()
+    val loop = new Rounds(pairs.sparkSession, Rounds.Persist)
+    var edges = loop.next(symmetrize(pairs, idA, idB), count(lit(1))).frame
     for (_ <- 0 until rounds) {
       val keep = edges.groupBy("src").agg(count(lit(1)).as("n"))
         .filter(col("n") >= k).select(col("src").as("node"))
@@ -127,16 +121,9 @@ object Graph {
       val next = edges
         .join(keep, edges("src") === keep("node"), "left_semi")
         .join(keep, edges("dst") === keep("node"), "left_semi")
-      // reuse the shared lineage-cut helper (lazy persist variant),
-      // then materialize eagerly: one job per round. The previous
-      // round's cache is freed only AFTER this round's rows are in —
-      // the round computes FROM it, so freeing at truncate time (when
-      // the hook fires) would force a recompute of the whole chain
-      var thisRound: () => Unit = () => ()
-      edges = truncate(spark, next, reliable = false, f => thisRound = f)
-      edges.count()
-      freePrev()
-      freePrev = thisRound
+      // one count job per round materializes it; the predecessor is
+      // freed only after that — the round computes FROM it
+      edges = loop.next(next, count(lit(1))).frame
     }
     edges.groupBy(col("src").as("id"))
       .agg(count(lit(1)).as("core_degree"))
@@ -171,11 +158,10 @@ object Graph {
       idB: String = "id_b", rounds: Int = 3,
       truncateEvery: Int = 5): DataFrame = {
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
-    val spark = pairs.sparkSession
+    val loop = new Rounds(pairs.sparkSession, Rounds.Persist)
     val sym = symmetrize(pairs, idA, idB).repartition(col("src")).persist()
     var labels = sym.select(col("src").as("id")).distinct()
       .select(col("id"), col("id").as("lbl"))
-    var freePrev: () => Unit = () => ()
     for (t <- 1 to rounds) {
       val next = sym.join(labels, sym("src") === labels("id"))
         .groupBy(col("dst"), col("lbl")).agg(count(lit(1)).as("c"))
@@ -186,8 +172,7 @@ object Graph {
         .select(col("dst").as("id"), col("best.l").as("lbl"))
       labels = next
       if (truncateEvery > 0 && t % truncateEvery == 0 && t < rounds)
-        labels = truncate(spark, labels, reliable = false,
-          freeHook = f => { freePrev(); freePrev = f })
+        labels = loop.next(labels).frame
     }
     labels
   }
@@ -241,30 +226,4 @@ object Graph {
     pairs.select(col(idA).as("src"), col(idB).as("dst"))
       .unionAll(pairs.select(col(idB).as("src"), col(idA).as("dst")))
 
-  /** Rebuild `df` from its own RDD, hiding the upstream plan behind a
-    * LogicalRDD. Persist path: lazy cache (materialized by the next
-    * action). Checkpoint path: eager (the reliable write needs the
-    * rows now); `freeHook` receives the cleanup for THIS round and is
-    * expected to free the previous round's, so at most two rounds of
-    * cache/files exist at once. */
-  private def truncate(spark: SparkSession, df: DataFrame,
-      reliable: Boolean, freeHook: (() => Unit) => Unit): DataFrame =
-    if (reliable) {
-      val rdd = df.rdd
-      rdd.persist()
-      rdd.checkpoint()
-      rdd.count() // job 1 computes+caches; the checkpoint writes from cache
-      val out = spark.createDataFrame(rdd, df.schema)
-      rdd.unpersist()
-      freeHook(() => rdd.getCheckpointFile.foreach { f =>
-        val p = new org.apache.hadoop.fs.Path(f)
-        p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
-        ()
-      })
-      out
-    } else {
-      val handle = df.persist()
-      freeHook(() => { handle.unpersist(); () })
-      spark.createDataFrame(handle.rdd, handle.schema)
-    }
 }

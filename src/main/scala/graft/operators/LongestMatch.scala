@@ -107,17 +107,16 @@ object LongestMatch {
 
     // state: [lo, hi] per doc — match at lo holds (lo = 0 trivially),
     // no match past hi can hold (hi = cap, the stated ceiling).
-    // Eagerly localCheckpoint'ed every round (the Coverage contract):
-    // each round's plan references its predecessor TWICE (probe
-    // derivation + the hit join), so lineage-kept persist would double
-    // the logical plan per round — plan normalization alone goes
-    // exponential in the round count. Checkpoint blocks of the
-    // predecessor are released deterministically each round.
-    var state = evalDocs
+    // Cut every round by [[Rounds.Local]] (the Coverage cut): each
+    // round's plan references its predecessor TWICE (probe derivation
+    // + the hit join), so lineage-kept persist would double the
+    // logical plan per round — plan normalization alone goes
+    // exponential in the round count. The predecessor's blocks are
+    // released deterministically each round.
+    val loop = new Rounds(evalDocs.sparkSession, Rounds.Local)
+    var state = loop.next(evalDocs
       .select(col(eIdCol), col(eTextCol).as("__et"),
-        lit(0L).as("__lo"), lit(cap.toLong).as("__hi"))
-      .localCheckpoint(true)
-    var stateFree = Coverage.freeCheckpoint(state)
+        lit(0L).as("__lo"), lit(cap.toLong).as("__hi"))).frame
 
     // (eId, q) probe frame for the active docs at their own probe
     // length `lenCol`; a probe longer than the document yields no rows
@@ -199,7 +198,7 @@ object LongestMatch {
         // while the eval side is small. New interval: lo' = best hit
         // (or lo); hi' = just below the smallest probe past lo' (all
         // probes, when everything missed), or hi when the top probe hit
-        val next = state.join(gated(hits, qRows), Seq(eIdCol), "left")
+        state = loop.next(state.join(gated(hits, qRows), Seq(eIdCol), "left")
           .withColumn("__ps", psExpr)
           .select(col(eIdCol), col("__et"),
             when(col("__lo") < col("__hi"),
@@ -210,11 +209,7 @@ object LongestMatch {
                 "array_min(filter(__ps, p -> p > coalesce(__mh, __lo))) - 1"),
                 col("__hi"))).otherwise(col("__hi")).as("__hi2"))
           .withColumnRenamed("__lo2", "__lo")
-          .withColumnRenamed("__hi2", "__hi")
-          .localCheckpoint(true) // eager: this round's ONE materialize job
-        stateFree() // predecessor's checkpoint blocks
-        stateFree = Coverage.freeCheckpoint(next)
-        state = next
+          .withColumnRenamed("__hi2", "__hi")).frame // ONE materialize job
       }
       r += 1
     }
@@ -242,14 +237,14 @@ object LongestMatch {
       .groupBy(col(eIdCol)).agg(min(col("__q")).as("witness"))
 
     // materialize the eval-sized result eagerly so the corpus-sized
-    // snippet cache and the final state checkpoint can be released
-    // deterministically NOW; the result's own (small) checkpoint
-    // blocks go to the ContextCleaner when the caller drops the frame
-    val result = state.join(gated(witnesses, wRows), Seq(eIdCol), "left")
-      .select(col(eIdCol), col("__lo").as("match_len"),
-        col("witness").cast(StringType).as("witness"))
-      .localCheckpoint(true)
-    stateFree()
+    // snippet cache and the final state can be released
+    // deterministically NOW; the result's own (small) blocks go to the
+    // ContextCleaner when the caller drops the frame
+    val result = Rounds.result(
+      state.join(gated(witnesses, wRows), Seq(eIdCol), "left")
+        .select(col(eIdCol), col("__lo").as("match_len"),
+          col("witness").cast(StringType).as("witness")))
+    loop.close()
     snips.unpersist(blocking = false)
     result
   }

@@ -1127,13 +1127,6 @@ object Similarity {
     // BPE argmax
     val momentFrame = codes
       .agg(triSum(col("c")).as("tri"), count(lit(1)).as("n"))
-    // measurement hook: the registered q127/q129 frames are the
-    // driver-side eigensolve's LocalTableScan (vacuous in Explain), so
-    // the corpus-sized half's REAL plan is printed here on demand
-    if (corpus.sparkSession.conf.getOption("graft.pca.explainMoment")
-        .contains("true"))
-      println(momentFrame.queryExecution.explainString(
-        org.apache.spark.sql.execution.FormattedMode))
     val head = momentFrame.head()
     val tri = head.getAs[scala.collection.Seq[Long]]("tri")
     val n = head.getAs[Long]("n").toDouble

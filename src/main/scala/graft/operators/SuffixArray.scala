@@ -43,13 +43,13 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   * SCALE SHAPE: text is touched once (the `initKey`-char key
   * projection); rounds shuffle only (doc, pos, rank) triples of the
   * ACTIVE set plus the probe into the rank table (whose settled
-  * slices are checkpointed ONCE each and never rewritten — with the
-  * active probe side small, AQE turns that join into a broadcast, so
-  * settled rows never re-shuffle). Every checkpointed slice's blocks
-  * are released deterministically when the result materializes (the
-  * [[Coverage.freeCheckpoint]] contract); plan depth is the settled-
-  * slice count, bounded by the round count = log2 of the LONGEST
-  * DOCUMENT (documents bound suffix comparisons), not of the corpus.
+  * slices are cut ONCE each and never rewritten — with the active
+  * probe side small, AQE turns that join into a broadcast, so settled
+  * rows never re-shuffle). Every slice's blocks are released
+  * deterministically once the result materializes ([[Rounds.close]]);
+  * plan depth is the settled-slice count, bounded by the round count
+  * = log2 of the LONGEST DOCUMENT (documents bound suffix
+  * comparisons), not of the corpus.
   */
 object SuffixArray {
 
@@ -93,37 +93,34 @@ object SuffixArray {
     val (bases, freeBases) = sparseBases(keyCounts, "__k", "__n")
     def annotate(r: DataFrame): DataFrame =
       r.withColumn("__g", count(lit(1)).over(Window.partitionBy(col("__r"))))
-    val frees = scala.collection.mutable.Buffer.empty[() => Unit]
-    def checkpoint(df: DataFrame): DataFrame = {
-      val cp = df.localCheckpoint(true)
-      frees += Coverage.freeCheckpoint(cp)
-      cp
-    }
     // state split: settled ranks are FINAL — each settled slice is
-    // checkpointed once and never rewritten; only the ACTIVE (tied)
-    // frame re-ranks per round, so round cost tracks the DUPLICATED
-    // portion of the corpus, not the corpus
-    val round0 = checkpoint(annotate(keys.join(bases, Seq("__k"))
-      .select(col("__id"), col("__pos"), col("__r"))))
+    // cut once and never rewritten ([[Rounds.keep]]); only the ACTIVE
+    // (tied) frame re-ranks per round, so round cost tracks the
+    // DUPLICATED portion of the corpus, not the corpus. Each cut's
+    // materialize job also counts the rows still tied.
+    val loop = new Rounds(docs.sparkSession, Rounds.Local)
+    val tiedCount = count(when(col("__g") > 1, 1))
+    val round0 = loop.keep(annotate(keys.join(bases, Seq("__k"))
+      .select(col("__id"), col("__pos"), col("__r"))), tiedCount)
     freeBases()
     val settled = scala.collection.mutable.Buffer.empty[DataFrame]
-    settled += round0.filter(col("__g") === 1)
+    settled += round0.frame.filter(col("__g") === 1)
       .select(col("__id"), col("__pos"), col("__r"))
-    var active = round0.filter(col("__g") > 1)
+    var active = round0.frame.filter(col("__g") > 1)
       .select(col("__id"), col("__pos"), col("__r"), col("__g"))
-    var tied = active.count()
+    var tied = round0.stats.getLong(0)
     var d = effKey.toLong // ranks currently order by the first d chars
     while (tied > 0 && d < maxLen) {
       // rank at pos + d, looked up in the FULL table (a tied suffix's
       // continuation may itself be settled) — a union of already-
-      // checkpointed leaves, so no recompute; the active probe side is
+      // materialized leaves, so no recompute; the active probe side is
       // small, which AQE turns into a broadcast join (no full shuffle)
       val all = (settled :+ active.select(col("__id"), col("__pos"),
         col("__r"))).reduce(_ unionByName _)
       val shifted = all.select(col("__id"),
         (col("__pos") - d).cast("int").as("__pos"), col("__r").as("__r2"))
       val w = Window.partitionBy(col("__r")).orderBy(col("__r2"))
-      val refined = checkpoint(annotate(
+      val refined = loop.keep(annotate(
         active.select(col("__id"), col("__pos"), col("__r"))
           .join(shifted, Seq("__id", "__pos"), "left")
           .select(col("__id"), col("__pos"), col("__r"),
@@ -131,23 +128,22 @@ object SuffixArray {
           // sparse invariant: members below me in the group = rank()-1,
           // so the new "1 + instances strictly less" = base + rank() - 1
           .select(col("__id"), col("__pos"),
-            (col("__r") + rank().over(w) - 1).as("__r"))))
-      settled += refined.filter(col("__g") === 1)
+            (col("__r") + rank().over(w) - 1).as("__r"))), tiedCount)
+      settled += refined.frame.filter(col("__g") === 1)
         .select(col("__id"), col("__pos"), col("__r"))
-      active = refined.filter(col("__g") > 1)
-      tied = active.count()
+      active = refined.frame.filter(col("__g") > 1)
+      tied = refined.stats.getLong(0)
       d *= 2
     }
     val ranks = (settled :+ active.select(col("__id"), col("__pos"),
       col("__r"))).reduce(_ unionByName _)
     // sparse -> dense: one global pass over the distinct final ranks
     val (dm, freeDm) = denseRankOf(ranks.select("__r").distinct(), Seq("__r"))
-    frees += freeDm
-    val out = ranks.join(dm, Seq("__r"))
+    val out = Rounds.result(ranks.join(dm, Seq("__r"))
       .select(col("__id").as(idCol), col("__pos").cast(LongType).as("pos"),
-        col("__gr").as("suffix_rank"))
-      .localCheckpoint(true)
-    frees.foreach(_.apply())
+        col("__gr").as("suffix_rank")))
+    freeDm()
+    loop.close()
     out
   }
 

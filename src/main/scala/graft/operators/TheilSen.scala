@@ -32,8 +32,8 @@ import org.apache.spark.sql.types.LongType
   * shrink every group's candidate interval (P+1)x. Each round is
   * ONE distributed count job for ALL groups at once; the per-group
   * search state (g, k, lo, hi) stays a DataFrame — nothing per-group
-  * ever lands on the driver — and is localCheckpoint-truncated per
-  * round (the Coverage/SuffixArray lineage contract). Pairs with
+  * ever lands on the driver — and is cut per round by [[Rounds]]
+  * (the [[Rounds.Local]] cut Coverage and SuffixArray use). Pairs with
   * x_i = x_j have no slope and are excluded from both the count and
   * the median index.
   *
@@ -72,6 +72,10 @@ object TheilSen {
     * oracle's offset M must dominate 1000*|dy|, so |dy| < 2^21/1000
     * per pair — documented, generous for the harness features. */
   val MaxAbsMilli: Long = 1L << 21
+
+  /** Probes per search round: each round splits every open interval
+    * (P+1)x (see the round-width comment in [[slopeMilli]]). */
+  private val ProbesPerRound = 63
 
   /** Count, per (group, probe), the pairs with x_i < x_j and
     * z_j < z_i — the q253 three-class bucket decomposition over
@@ -137,17 +141,8 @@ object TheilSen {
     * < 2*occ rows by construction, heavy values sit in singleton
     * buckets whose pairs tie and are skipped. */
   def slopeMilli(df: DataFrame, g: String, xCol: String, yCol: String,
-      xTargetOcc: Long = 64L, zTargetOcc: Long = 64L,
-      probesPerRound: Int = 63): DataFrame = {
-    // Probe count is an EXECUTION knob only (any P yields the identical
-    // median — the search is exact); overridable per session for
-    // cluster deployments where the n x P probe frame dominates the
-    // fixed per-round cost and a smaller P wins (see the round-width
-    // comment in the loop).
-    val probesP = df.sparkSession.conf
-      .getOption("graft.theilsen.probesPerRound")
-      .map(_.toInt).getOrElse(probesPerRound)
-    require(xTargetOcc > 0 && zTargetOcc > 0 && probesP > 0)
+      xTargetOcc: Long = 64L, zTargetOcc: Long = 64L): DataFrame = {
+    require(xTargetOcc > 0 && zTargetOcc > 0)
     val rows = df
       .select(col(g).as("g"), col(xCol).cast(LongType).as("x"),
         col(yCol).cast(LongType).as("y"))
@@ -185,10 +180,15 @@ object TheilSen {
       // contain the median, so their intersection does too
       .agg(greatest(min(col("loAdj")), lit(-MaxAbsMilli)).as("lo"),
         least(max(col("hiAdj")), lit(MaxAbsMilli)).as("hi"))
-    var search = np.join(seed, Seq("g"))
+    // two cut streams: the per-group search state, whose materialize
+    // job also reads the widest open interval (the loop's exit test),
+    // and the per-round zb frame below
+    val searchLoop = new Rounds(df.sparkSession, Rounds.Local)
+    val zbLoop = new Rounds(df.sparkSession, Rounds.Local)
+    val maxSpan = coalesce(max(col("hi") - col("lo")), lit(0L))
+    var search = searchLoop.next(np.join(seed, Seq("g"))
       .select(col("g"), col("np"), expr("(np + 1) div 2").as("k"),
-        col("lo"), col("hi"))
-      .localCheckpoint()
+        col("lo"), col("hi")), maxSpan)
 
     // collapse pays one extra shuffle per round to shrink the joined
     // frames to the distinct (x, y) support — adaptive: measured once
@@ -201,9 +201,7 @@ object TheilSen {
     val (nRows, nCombos) = (tieStats.getLong(0), tieStats.getLong(1))
     val collapse = nCombos * 10L <= nRows * 9L
 
-    def maxSpan(s: DataFrame): Long =
-      s.agg(coalesce(max(col("hi") - col("lo")), lit(0L))).head().getLong(0)
-    while (maxSpan(search) > 0) {
+    while (search.stats.getLong(0) > 0) {
       // P probes split every open interval (P+1)x; closed groups carry
       // their answer through untouched. P trades per-round frame width
       // (n x P rows) against round count (log_{P+1}(span)): at bench
@@ -212,18 +210,18 @@ object TheilSen {
       // {63, 127, 255, 511}: by then the per-round frames' shuffle +
       // window sort grow with P as fast as the round count falls
       // (10.0 / 10.6 / 14.3 / 10.8 s warm, i.e. flat within host
-      // noise), so 63 stays the default and the sweep knob remains as
-      // graft.theilsen.probesPerRound for corpora with other balances.
+      // noise), so P stays 63 (any P yields the identical median — the
+      // search is exact).
       // Duplicate probes (hi - lo < P makes the integer split collide)
       // are dropped per-row with array_distinct INSIDE the transform —
       // search holds ONE row per group, so within-row distinct is
       // global distinct, without the Exchange a frame-level
       // .distinct() paid here before r16.
-      val split = probesP + 1
-      val probes = search.filter(col("lo") < col("hi"))
+      val split = ProbesPerRound + 1
+      val probes = search.frame.filter(col("lo") < col("hi"))
         .select(col("g"),
           explode(expr(
-            s"array_distinct(transform(sequence(1, $probesP)," +
+            s"array_distinct(transform(sequence(1, $ProbesPerRound)," +
               s" i -> lo + (hi - lo) * i div $split))"))
             .as("t"))
         .select(col("g"), col("t"))
@@ -232,7 +230,7 @@ object TheilSen {
       // frame feeds every class of the fused self-join (six references
       // across the two sides) and its lineage holds shuffles (the
       // collapse and/or the z-bucket window) — materialize it ONCE per
-      // round. localCheckpoint, NOT persist (r17): the frame's lineage
+      // round. The Local cut, NOT persist (r17): the frame's lineage
       // contains the probes explode over the checkpointed search
       // state, and DeduplicateRelations' newInstance() on that
       // LogicalRDD makes the re-aliased references (every union branch
@@ -241,8 +239,8 @@ object TheilSen {
       // recomputed the z-window pipeline from `b` instead of reading
       // the persisted frame (plans/r17/q254_theilsen_round_*.txt). A
       // checkpoint needs no cache lookup: every re-aliased instance
-      // scans the SAME materialized RDD. Blocks are released
-      // deterministically per round via Coverage.freeCheckpoint.
+      // scans the SAME materialized RDD. Each zb is freed once the
+      // next round's zb is in; the last one when the search ends.
       val zb0 = b.join(broadcast(probes.withColumnRenamed("t", "__t")
           .withColumn("pid", col("__t"))), "g")
         .select(col("g"), col("pid"), col("x"),
@@ -266,16 +264,14 @@ object TheilSen {
       // groupBy + window + join spelling measured 3 extra stages per
       // round (~2.5x wall) for identical output.
       val wz = Window.partitionBy(col("g"), col("pid")).orderBy(col("z"))
-      val zb = zb1
+      val zb = zbLoop.next(zb1
         .withColumn("__czb", coalesce(sum(col("cnt")).over(
           wz.rangeBetween(Window.unboundedPreceding, -1L)), lit(0L)))
         .withColumn("__tzm", sum(col("cnt")).over(wz.rangeBetween(0L, 0L)))
         .withColumn("bz", lit(2L) * expr(s"__czb div ${zTargetOcc}L")
           + when(col("__tzm") >= zTargetOcc, 1L).otherwise(0L))
         .withColumn("zlight", col("__tzm") < zTargetOcc)
-        .drop("__czb", "__tzm")
-        .localCheckpoint(true) // eager: this round's ONE materialize job
-      val freeZb = Coverage.freeCheckpoint(zb)
+        .drop("__czb", "__tzm")).frame
       // A probe below every pair's slope has ZERO inversions and so
       // no row in the class counts at all — left-join back onto the
       // probe grid and coalesce, or such probes would vanish from the
@@ -288,7 +284,7 @@ object TheilSen {
           coalesce(col("cnt"), lit(0L)).as("cnt"))
       // cnt(t) is monotone in t: the new interval is
       //   hi' = min probe with cnt >= k,  lo' = max probe with cnt < k, +1
-      val next = search.join(
+      val next = search.frame.join(
           counts.withColumnRenamed("pid", "t"), Seq("g"), "left")
         .groupBy(col("g"), col("np"), col("k"), col("lo"), col("hi"))
         .agg(
@@ -297,17 +293,10 @@ object TheilSen {
         .select(col("g"), col("np"), col("k"),
           greatest(col("lo"), coalesce(col("lo_c"), col("lo"))).as("lo"),
           least(col("hi"), coalesce(col("hi_c"), col("hi"))).as("hi"))
-      // measurement hook: q254's registered frame is checkpoint-backed
-      // (vacuous in Explain — the r16 verdict's evidence nit), so the
-      // per-round count pipeline's REAL plan is printed here on demand
-      if (df.sparkSession.conf.getOption("graft.theilsen.explainRound")
-          .contains("true"))
-        println(next.queryExecution.explainString(
-          org.apache.spark.sql.execution.FormattedMode))
-      search = next.localCheckpoint() // eager: zb consumed before the release
-      freeZb()
+      search = searchLoop.next(next, maxSpan)
     }
-    val out = search.select(col("g"), col("np").as("n_pairs"),
+    zbLoop.close()
+    val out = search.frame.select(col("g"), col("np").as("n_pairs"),
       col("lo").as("theilsen_milli"))
     b.unpersist()
     out

@@ -605,7 +605,7 @@ object StatsQueries {
         "SEEDED from the adjacent-slope envelope (every pairwise " +
         "slope is a mediant of adjacent ones), so near-linear groups " +
         "converge in 1-2 rounds instead of the ~6 the full +/-2^21 " +
-        "range needs; search state stays a localCheckpoint-truncated " +
+        "range needs; search state stays an operators.Rounds-cut " +
         "DataFrame, nothing per-group on the driver. The oracle " +
         "states the naive O(n^2) pair " +
         "median (offset +2^21 so DuckDB's floor-// agrees on " +

@@ -760,9 +760,9 @@ object TextQueries {
         "character projection); every doubling round shuffles only " +
         "(doc, pos, rank) triples and re-ranks a distinct-pair frame " +
         "via range-sort + zipWithIndex — never an unpartitioned " +
-        "window, never a suffix payload; rounds localCheckpoint-" +
-        "truncate with deterministic predecessor release (the " +
-        "operators.Coverage contract), so lineage stays O(1).",
+        "window, never a suffix payload; rounds are cut by " +
+        "operators.Rounds with deterministic release once the " +
+        "result lands, so lineage stays O(1).",
       (s, dir) => {
         val slice = t(s, dir, "documents")
           .filter(pmod(col("doc_id"), lit(25)) === 0)
@@ -1182,8 +1182,8 @@ object TextQueries {
         "(0/null) included. SCALE SHAPE: log7(cap) driver-sequenced " +
         "rounds (round latency is the toy-scale cost; each round is " +
         "one snippet-table scan regardless of scale), per-round " +
-        "state localCheckpoint'ed with deterministic predecessor " +
-        "release (the Coverage contract — lineage-kept persist " +
+        "state cut by operators.Rounds with deterministic predecessor " +
+        "release (the Coverage cut — lineage-kept persist " +
         "would double the logical plan per round).",
       (s, dir) => {
         val docs = spread(t(s, dir, "documents"), col("doc_id"))

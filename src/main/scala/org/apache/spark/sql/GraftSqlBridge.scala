@@ -41,6 +41,26 @@ object GraftSqlBridge {
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     classic.Dataset.ofRows(classicSession(spark), plan)
 
+  /** A frame scanning `rows`, already-planned output of `origin`,
+    * through a `LogicalRDD`. With `originStats` it is the node
+    * `Dataset.checkpoint` builds (origin's partitioning, ordering and
+    * statistics); without, the planner sees what `createDataFrame`
+    * over an RDD shows it (unknown partitioning, maximum size). */
+  def ofCheckpointRows(origin: DataFrame,
+      rows: org.apache.spark.rdd.RDD[catalyst.InternalRow],
+      originStats: Boolean): DataFrame = {
+    val spark = classicSession(origin.sparkSession)
+    ofRows(spark,
+      if (originStats) execution.LogicalRDD.fromDataset(rows,
+        origin.asInstanceOf[classic.Dataset[_]], isStreaming = false)
+      else execution.LogicalRDD(
+        origin.queryExecution.analyzed.output.map(_.newInstance()), rows)(spark))
+  }
+
+  /** Run a marked RDD's checkpoint now, as an eager `Dataset.checkpoint`
+    * does; a no-op once it ran. */
+  def doCheckpoint(rdd: org.apache.spark.rdd.RDD[_]): Unit = rdd.doCheckpoint()
+
   /** Column wrapping a raw Catalyst expression. The engine's native
     * expressions (graft.expressions.*) used to reach the plan via a
     * temp-function registration in whichever session was ACTIVE at

@@ -154,15 +154,6 @@ class DedupEndToEndSpec extends SparkSpec {
 
   test("connected components: checkpoint dir holds at most two rounds " +
       "of files during the loop") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-cc-gc").toString
-    val pairs = (1 until 40).map(i => (i.toLong, (i + 1).toLong))
-      .toDF("id_a", "id_b")
-    val comps = Dedup.connectedComponents(pairs, maxIter = 10,
-      checkpointDir = Some(dir))
-    assert(comps.count() == 40)
-    // per-round cleanup: everything but the final round's rdd-* files
-    // must be gone (each round deletes its predecessor once the
-    // successor is safely on disk)
     def rddDirs(p: java.nio.file.Path): Seq[java.nio.file.Path] = {
       val out = scala.collection.mutable.ArrayBuffer.empty[java.nio.file.Path]
       java.nio.file.Files.walk(p).forEach { q =>
@@ -171,9 +162,51 @@ class DedupEndToEndSpec extends SparkSpec {
       }
       out.toSeq
     }
+    // samples the directory as each job ends: a round left behind
+    // shows as a third rdd-* directory while the loop still runs
+    def peakRounds(dir: String)(body: => Unit): Int = {
+      val peak = new java.util.concurrent.atomic.AtomicInteger(0)
+      val listener = new org.apache.spark.scheduler.SparkListener {
+        override def onJobEnd(e: org.apache.spark.scheduler.SparkListenerJobEnd): Unit = {
+          // a walk racing the loop's own deletes may fail: skip that sample
+          scala.util.Try(rddDirs(java.nio.file.Paths.get(dir)).size)
+            .foreach(n => peak.accumulateAndGet(n, math.max))
+        }
+      }
+      spark.sparkContext.addSparkListener(listener)
+      try body finally spark.sparkContext.removeSparkListener(listener)
+      peak.get
+    }
+    val dir = java.nio.file.Files.createTempDirectory("graft-cc-gc").toString
+    val pairs = (1 until 40).map(i => (i.toLong, (i + 1).toLong))
+      .toDF("id_a", "id_b")
+    val ccPeak = peakRounds(dir) {
+      val comps = Dedup.connectedComponents(pairs, maxIter = 10,
+        checkpointDir = Some(dir))
+      assert(comps.count() == 40)
+    }
+    // per-round cleanup: everything but the final round's rdd-* files
+    // must be gone (each round deletes its predecessor once the
+    // successor is safely on disk)
     val remaining = rddDirs(java.nio.file.Paths.get(dir))
     assert(remaining.size == 1,
       s"expected only the final round's checkpoint on disk, got $remaining")
+    assert(ccPeak <= 2, s"$ccPeak rounds of checkpoint files seen at once")
+    // one more loop on the same reliable path: pageRank cutting every
+    // round over the same chain, in a directory of its own
+    val prDir = java.nio.file.Files.createTempDirectory("graft-pr-gc").toString
+    try {
+      val prPeak = peakRounds(prDir) {
+        assert(Graph.pageRank(pairs, iters = 6, truncateEvery = 1,
+          checkpointDir = Some(prDir)).count() == 40)
+      }
+      assert(rddDirs(java.nio.file.Paths.get(prDir)).size == 1,
+        "only pageRank's final cut may remain on disk")
+      assert(prPeak <= 2, s"$prPeak pageRank rounds of files seen at once")
+    } finally {
+      spark.catalog.clearCache()
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(prDir))
+    }
   }
 
   test("connected components: reliable checkpoint dir gives identical labels") {

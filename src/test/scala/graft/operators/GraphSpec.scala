@@ -47,6 +47,22 @@ class GraphSpec extends SparkSpec {
         .filter(_.getName.startsWith("rdd-"))
       assert(rddDirs.length <= 1,
         s"stale checkpoint rounds left behind: ${rddDirs.map(_.getName).toSeq}")
+      // one more loop on the same reliable path: connected components
+      // over this graph, in a directory of its own
+      val ccDir = java.nio.file.Files.createTempDirectory("graft-cc-ckpt")
+      try {
+        def labels(df: org.apache.spark.sql.DataFrame): Map[Long, Long] =
+          df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+        val viaPersist = labels(Dedup.connectedComponents(pairs))
+        val viaCkpt = labels(Dedup.connectedComponents(pairs,
+          checkpointDir = Some(ccDir.toString)))
+        assert(viaPersist.nonEmpty && viaCkpt == viaPersist,
+          "checkpointed components must match the persist path")
+        val ccRounds = ccDir.toFile.listFiles().flatMap(_.listFiles())
+          .filter(_.getName.startsWith("rdd-"))
+        assert(ccRounds.length == 1,
+          s"only the final round's files may remain: ${ccRounds.map(_.getName).toSeq}")
+      } finally org.apache.commons.io.FileUtils.deleteDirectory(ccDir.toFile)
     } finally {
       spark.catalog.clearCache()
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
