@@ -1,40 +1,18 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      // events.ts is parquet TIMESTAMP(NANOS); read as long, see Tables.t
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      // AQE's per-stage materialization barriers cost ~25% wall on these
-      // sub-second local queries; at real data sizes the runtime re-plan
-      // pays for itself — keep it ON in cluster deployments
-      .config("spark.sql.adaptive.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // AQE's per-stage materialization barriers cost ~25% wall on these
+    // sub-second local queries; at real data sizes the runtime re-plan
+    // pays for itself — keep it ON in cluster deployments
+    val spark = Harness.session(aqe = false)
+    val all = Harness.registry
+    def runSuite() = Harness.run(spark, all, sfDir)((_, df) => df.count())
     // warm the session (codegen, parquet reader, shuffle machinery) so
     // the first timed query doesn't absorb JVM init — against the SAME
-    // sfDir being benchmarked, not a hardcoded path
-    SparkEntry.queries.get("q02_company_filter")
-      .orElse(SparkEntry.queries.values.headOption)
-      .foreach { fn =>
-        try fn(spark, sfDir).count() catch { case _: Throwable => () }
-      }
-    def runSuite(): Map[String, Double] =
-      SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
-        val t0 = System.nanoTime()
-        try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
-        val dt = (System.nanoTime() - t0) / 1e9
-        // operators persist self-joined projections; clear between queries
-        spark.catalog.clearCache()
-        name -> dt
-      }.toMap
+    // sfDir being benchmarked; a failure here shows again in the passes
+    Harness.run(spark, all.find(_._1 == "q02_company_filter").orElse(all.headOption).toSeq,
+      sfDir)((_, df) => df.count())
     // Variance guard (BASELINE.md "Measurement method"): the host is
     // multi-tenant with ±50-100% wall-clock noise on single-shot runs.
     // Run the whole suite three times in this JVM and report, per
@@ -44,24 +22,21 @@ object Bench {
     // a pass, never speed it up), so per-query min estimates the
     // code's actual cost, not the host's worst moment. Three passes
     // (~1-2 min total) widen the window past most contention bursts.
+    // A query that fails in any pass gets no time at all.
     val passes = Seq.fill(3)(runSuite())
-    val results = passes.head.keys.map(k => k -> passes.map(_(k)).min).toMap
+    val failed = passes.flatMap(_.failed).distinct.sorted
+    val results = all.map(_._1).filterNot(failed.contains)
+      .map(k => k -> passes.map(_.seconds(k)).min).toMap
     def r3(v: Double): Double = math.rint(v * 1000) / 1000
     val total = if (results.nonEmpty) results.values.sum else 0.0
-    val pt = passes.map(_.values.sum)
+    val pt = passes.map(_.done.map(_.seconds).sum)
     val benchOut = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "/tmp/graft_bench.json")
     def fullJson: String = {
+      val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
       val qs = results.toSeq.sortBy(_._1)
         .map { case (k, v) => "\"" + k + "\":" + v }
         .mkString("{", ",", "}")
-      // standing per-query notes for the judge's round-over-round
-      // read — facts already adjudicated that would otherwise be
-      // re-derived each round
-      val notes =
-        """{"q254":"~11-15 s floor is fixed per-round stage overhead of the branching binary search at toy scale, adjudicated done in r11/r12; if it ever matters at real scale the envelope-seeding round count (probes/round) is the knob",""" +
-          """"suffix_index":"under min-of-3 the q245/q246/q260/q264 index builds are charged to pass_totals[0] only; later passes read the standing warehouse table (the amortization r11 sanctioned) - keep pass_totals visible so the build cost stays on the record",""" +
-          """"fingerprint_memo":"r17: standing-table freshness fingerprints are memoized per (canonical plan, file signature (path,len,mtime)) - passes 2-3 skip the ~0.3 s (id,len) scan for UNCHANGED files only; any corpus file change forces a re-scan (StampedCatalogSpec pins it), so this is metadata-keyed derived-value caching, not result caching"}"""
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"sf":"$sfDir","pass_totals":[${pt.mkString(",")}],"method":"per-query min of 3 in-JVM passes","notes":$notes}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"sf":"$sfDir","pass_totals":[${pt.mkString(",")}],"method":"per-query min of 3 in-JVM passes","failed":$failedJson}"""
     }
     // full-fidelity record (every query name, full precision) to a file
     // for judge-side per-query analysis — PLUS a repo-local copy
@@ -111,6 +86,6 @@ object Bench {
       Seq(s""""all_${results.size}":${r3(total)}""")
     val queriesJson = qsParts.mkString("{", ",", "}")
     println(s"""$head,"queries":$queriesJson,"value":${r3(total)}}""")
-    spark.stop()
+    Harness.finish(spark, failed)
   }
 }

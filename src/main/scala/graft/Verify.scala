@@ -1,41 +1,20 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the driver's DuckDB compare. A failed query
+  * writes no output and makes the run exit 1 once oracle_sql.json is
+  * written. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
     // optional third arg: comma-separated query-name filter (local iteration)
-    val only: Option[Set[String]] =
-      if (args.length > 2) Some(args(2).split(",").toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // events.ts is parquet TIMESTAMP(NANOS); read as long, see Tables.t
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // the cluster deployment path: native functions + the top-k
-      // strategy activate through the extension point, exactly as a
-      // consuming app would configure them (operators also self-
-      // register per session as a fallback, so this is belt+braces)
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val (queries, unknown) =
+      if (args.length > 2) Harness.resolve(args(2).split(",").toSeq)
+      else (Harness.registry, Nil)
+    val spark = Harness.session(aqe = true)
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-      }
-      // operators persist self-joined projections; drop them between
-      // queries so a long session doesn't accumulate cache
-      spark.catalog.clearCache()
+    val outcome = Harness.run(spark, queries, sfDir) { (name, df) =>
+      df.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
@@ -49,10 +28,11 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
+    val names = queries.map(_._1).toSet
     val json = SparkEntry.oracleSql
-      .filter { case (k, _) => only.forall(_.contains(k)) }
+      .filter { case (k, _) => names.contains(k) }
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    spark.stop()
+    Harness.finish(spark, unknown ++ outcome.failed)
   }
 }

@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.functions._
 
-import graft.{SparkEntry, SparkSpec}
+import graft.{Harness, SparkEntry, SparkSpec}
 
 /** Property-style checks for the curation queries on ADVERSARIAL
   * synthetic corpora — shapes the real testdata never exercises
@@ -31,17 +31,23 @@ class CurationPropertySpec extends SparkSpec {
     // references — unpersisted, each re-runs the corpus transform;
     // commit c8efd39 measured 14.6 s -> 3.3 s warm at sf0.1). The
     // query cannot unpersist it itself — its caller owns the terminal
-    // action — so the contract is the harness one: Verify.scala:38 and
-    // Bench.scala:35 clearCache after every query. This pins both
-    // halves: the cache IS populated by the run (the speedup is real,
-    // not a stale comment) and clearCache leaves NO residue (a leaked
-    // entry would accrete executor storage across a 242-query run).
+    // action — so the contract is the harness one: graft.Harness.run
+    // clears the cache after every query, for Bench and Verify alike.
+    // This pins both halves: the cache IS populated by the run (the
+    // speedup is real, not a stale comment) and the harness leaves NO
+    // residue (a leaked entry would accrete executor storage across a
+    // 286-query run).
     spark.catalog.clearCache()
-    val df = run("q229_coverage_select", "/root/testdata/sf0.001")
-    assert(df.collect().length == 2) // two greedy rounds
-    assert(!spark.sharedState.cacheManager.isEmpty,
+    val q229 = "q229_coverage_select"
+    val out = Harness.run(spark, Seq(q229 -> SparkEntry.queries(q229)),
+      "/root/testdata/sf0.001") { (_, df) =>
+      (df.collect().length, spark.sharedState.cacheManager.isEmpty)
+    }
+    assert(out.failed.isEmpty)
+    val Seq((rows, cacheEmptyInRun)) = out.done.map(_.value)
+    assert(rows == 2) // two greedy rounds
+    assert(!cacheEmptyInRun,
       "the bigram-set projection must be cached during the run")
-    spark.catalog.clearCache()
     assert(spark.sharedState.cacheManager.isEmpty,
       "clearCache must free every q229 cache entry")
   }
