@@ -27,8 +27,7 @@ object BestFile {
     * order); rows whose filename doesn't match the convention are
     * dropped with the same silent-skip semantics as the reference's
     * regex guard (src/transform.py:127-131). */
-  def parseManifest(files: DataFrame, pathCol: String = "path",
-      seqCol: String = "seq"): DataFrame = {
+  def parseManifest(files: DataFrame, pathCol: String = "path"): DataFrame = {
     val fname = element_at(split(col(pathCol), "/"), -1)
     files
       .withColumn("fname", fname)

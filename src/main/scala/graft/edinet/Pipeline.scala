@@ -12,10 +12,8 @@ object Sink {
     * `outDir/fileName`. Returns false (and writes nothing) on empty
     * input — the reference's empty-pipeline guard (src/load.py:20-22,
     * main.py:33-35). `coalesce(1)` mirrors the reference's
-    * one-output-file contract; for genuinely large outputs call with
-    * `single = false` to keep one file per partition. */
-  def writeCsv(df: DataFrame, outDir: String, fileName: String,
-      single: Boolean = true): Boolean = {
+    * one-output-file contract. */
+  def writeCsv(df: DataFrame, outDir: String, fileName: String): Boolean = {
     // persist around the guard: isEmpty is an action, and without the
     // cache the whole parse/transform plan would execute twice (once for
     // the probe, once for the write)
@@ -23,8 +21,7 @@ object Sink {
     try {
       if (cached.isEmpty) false
       else {
-        val out = if (single) cached.coalesce(1) else cached
-        out.write.mode("overwrite").option("header", "true")
+        cached.coalesce(1).write.mode("overwrite").option("header", "true")
           .csv(s"$outDir/$fileName")
         true
       }

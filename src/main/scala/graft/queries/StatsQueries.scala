@@ -970,7 +970,7 @@ object StatsQueries {
         "once by the (source, xb, yb) cell aggregation, which is also " +
         "MERGEABLE by addition: streaming/SpearmanStream binds this " +
         "exact operator (shared operators/SpearmanHist) to the " +
-        "AdditiveLog protocol, so a stream of per-batch cell deltas " +
+        "TwinLog additive protocol, so a stream of per-batch cell deltas " +
         "recovers this statistic after any prefix. Output is signed " +
         "rho^2 in bp via the same moment algebra as q248, with the " +
         "same ENFORCED n <= 20000 DECIMAL(38,0) exactness guard — " +

@@ -1,12 +1,12 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 /** Streaming twin of q269's trigram stupid-backoff LM: the three count
-  * tables the model needs are all additive, so THREE [[AdditiveLog]]s
+  * tables the model needs are all additive, so THREE [[TwinLog]] additive logs
   * carry per-batch deltas — trigram counts, bigram counts, token
   * counts — and every context denominator DERIVES at read time from
   * the log one order up's own numerator log (c12t = trigram log summed
@@ -74,32 +74,20 @@ object BackoffLmStream {
   /** Start the maintainer: ONE epoch appends the batch's trigram,
     * bigram and token deltas to the three logs under one batch id. */
   def start(docs: DataFrame, outDir: String, checkpointDir: String,
-      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
-    val step: (Dataset[Row], Long) => Unit = { (batch, batchId) =>
-      val df = batch.toDF()
-      def land(summary: DataFrame, dir: String): Unit = summary
-        .withColumn("__batch", lit(batchId))
-        .withColumn("__covers", lit(null).cast("long"))
-        .write.mode("append").parquet(dir)
-      land(trigramSummary(df), trigramDir(outDir))
-      land(bigramSummary(df), bigramDir(outDir))
-      land(tokenSummary(df), tokenDir(outDir))
-    }
-    docs.writeStream
-      .foreachBatch(step)
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .start()
-  }
+      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
+    TwinLog.start(docs, checkpointDir, trigger, additive = true)(
+      (trigramSummary(_), trigramDir(outDir)),
+      (bigramSummary(_), bigramDir(outDir)),
+      (tokenSummary(_), tokenDir(outDir)))
 
   def trigramCounts(spark: SparkSession, outDir: String): DataFrame =
-    AdditiveLog.merged(spark, trigramDir(outDir), triSchema(spark),
+    TwinLog.merged(spark, trigramDir(outDir), triSchema(spark),
       Seq("w1", "w2", "w3"), Seq("c123"))
   def bigramCounts(spark: SparkSession, outDir: String): DataFrame =
-    AdditiveLog.merged(spark, bigramDir(outDir), biSchema(spark),
+    TwinLog.merged(spark, bigramDir(outDir), biSchema(spark),
       Seq("w1", "w2"), Seq("c12"))
   def tokenCounts(spark: SparkSession, outDir: String): DataFrame =
-    AdditiveLog.merged(spark, tokenDir(outDir), tokSchema(spark),
+    TwinLog.merged(spark, tokenDir(outDir), tokSchema(spark),
       Seq("tok"), Seq("cnt"))
 
   /** Score `docs` (doc_id, text) against the standing model — q269's
@@ -155,12 +143,11 @@ object BackoffLmStream {
   }
 
   /** Fold all three logs' fully-committed prefixes into snapshots;
-    * returns total files collected — [[AdditiveLog.compactLog]]. */
+    * returns total files collected — [[TwinLog.compactAdditive]]. */
   def compactLog(spark: SparkSession, outDir: String): Long =
-    AdditiveLog.compactLog(spark, trigramDir(outDir), triSchema(spark),
-      Seq("w1", "w2", "w3"), Seq("c123")) +
-      AdditiveLog.compactLog(spark, bigramDir(outDir), biSchema(spark),
-        Seq("w1", "w2"), Seq("c12")) +
-      AdditiveLog.compactLog(spark, tokenDir(outDir), tokSchema(spark),
-        Seq("tok"), Seq("cnt"))
+    TwinLog.compactAdditive(spark, trigramDir(outDir), Seq("w1", "w2", "w3"),
+      Seq("c123")) +
+      TwinLog.compactAdditive(spark, bigramDir(outDir), Seq("w1", "w2"),
+        Seq("c12")) +
+      TwinLog.compactAdditive(spark, tokenDir(outDir), Seq("tok"), Seq("cnt"))
 }

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
@@ -20,10 +20,11 @@ import org.apache.spark.sql.types.StructType
   * (support-bounded, the q272 shape) — per-batch work never touches
   * the boundary computation, and no batch ever rescans earlier text.
   *
-  * Idempotence is [[LongestMatchStream]]'s protocol verbatim: with
+  * Idempotence is [[TwinLog]]'s RESULT-log protocol, as in
+  * [[LongestMatchStream]]: with
   * the model frozen, an epoch's score rows are a deterministic
   * function of (batchId, its rows), so an at-least-once replay
-  * appends byte-identical rows that the read-time full-row distinct
+  * appends byte-identical rows that the read-time per-epoch distinct
   * collapses. Doc ids must be UNIQUE across the stream, and the LM
   * logs must not be appended to while scoring runs (the
   * [[CurateStream.SemanticGate]] maintenance-window rule — a model
@@ -35,22 +36,19 @@ import org.apache.spark.sql.types.StructType
   */
 object CcnetStream {
 
-  private def resultDdl =
-    "doc_id BIGINT, lang STRING, n_chars BIGINT, mbits BIGINT"
-
   /** Score one batch against the frozen LM at `lmDir` and append
     * (doc_id, lang, n_chars, mbits) under the epoch tag — exposed for
     * crash/replay testing. `batch` carries (doc_id, text, lang,
     * n_chars). */
   def applyBatch(spark: SparkSession, batch: DataFrame, batchId: Long,
       lmDir: String, outDir: String): Unit = {
-    LmStream.score(spark, lmDir, batch.select("doc_id", "text"))
-      .select(col("doc_id"), col("milli_bits_per_bigram").as("mbits"))
-      .join(batch.select(col("doc_id"), col("lang"), col("n_chars")),
-        Seq("doc_id"))
-      .select(col("doc_id"), col("lang"), col("n_chars"), col("mbits"),
-        lit(batchId).as("__batch"))
-      .write.mode("append").parquet(outDir)
+    TwinLog.append(
+      LmStream.score(spark, lmDir, batch.select("doc_id", "text"))
+        .select(col("doc_id"), col("milli_bits_per_bigram").as("mbits"))
+        .join(batch.select(col("doc_id"), col("lang"), col("n_chars")),
+          Seq("doc_id"))
+        .select(col("doc_id"), col("lang"), col("n_chars"), col("mbits")),
+      outDir, batchId)
   }
 
   /** Start the maintainer: per arriving micro-batch, score against the
@@ -58,26 +56,15 @@ object CcnetStream {
   def start(docs: DataFrame, lmDir: String, outDir: String,
       checkpointDir: String,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    docs.writeStream
-      .foreachBatch { (b: Dataset[Row], id: Long) =>
-        applyBatch(b.sparkSession, b.toDF(), id, lmDir, outDir)
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .start()
+    TwinLog.foreachEpoch(docs, checkpointDir, trigger) { (b, id) =>
+      applyBatch(b.sparkSession, b, id, lmDir, outDir)
+    }
 
-  /** Everything scored so far — replayed epochs collapse under the
-    * full-row distinct; empty before the first commit. */
-  def scores(spark: SparkSession, outDir: String): DataFrame = {
-    val p = new Path(outDir)
-    if (!p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p))
-      spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
-        StructType.fromDDL(resultDdl))
-    else
-      spark.read.schema(s"$resultDdl, __batch BIGINT").parquet(outDir)
-        .distinct()
-        .drop("__batch")
-  }
+  /** Everything scored so far — replayed epochs collapse
+    * ([[TwinLog.results]]); empty before the first commit. */
+  def scores(spark: SparkSession, outDir: String): DataFrame =
+    TwinLog.results(spark, outDir, StructType.fromDDL(
+      "doc_id BIGINT, lang STRING, n_chars BIGINT, mbits BIGINT"))
 
   /** Derived histogram-support bound, ENFORCED (not asserted) by
     * [[boundariesOf]]: a per-bigram surprise is a BIGINT bitlength

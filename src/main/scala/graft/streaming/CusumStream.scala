@@ -23,7 +23,7 @@ import graft.operators.Cusum
   *
   * The log mechanics (replay idempotence, snapshot compaction safe
   * under crashes and concurrent streams, empty-before-first-commit
-  * reads) are [[AdditiveLog]]'s — this object binds them to
+  * reads) are [[TwinLog]]'s — this object binds them to
   * [[Cusum.daily]]'s keys (g, day) and sum (x). */
 object CusumStream {
 
@@ -45,21 +45,21 @@ object CusumStream {
     * (g, day, x) sums tagged with the epoch id. */
   def start(events: DataFrame, outDir: String, checkpointDir: String,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    AdditiveLog.start(events, Cusum.daily, logDir(outDir),
-      checkpointDir, trigger)
+    TwinLog.start(events, checkpointDir, trigger, additive = true)(
+      (Cusum.daily(_), logDir(outDir)))
 
   /** Current changepoints: merge the live day sums by addition,
     * finish with the exact integer argmax. Reads the log only —
     * bounded by batches x day support, never the event history. */
   def changepoints(spark: SparkSession, outDir: String): DataFrame =
-    Cusum.changepoints(AdditiveLog.merged(spark, logDir(outDir),
+    Cusum.changepoints(TwinLog.merged(spark, logDir(outDir),
       summarySchema(spark), Seq("g", "day"), Seq("x")))
 
   /** Fold the fully-committed prefix of the log into one snapshot,
     * then garbage-collect the superseded files. Returns the number of
     * files collected. Safe concurrently with a running stream —
-    * [[AdditiveLog.compactLog]]. */
+    * [[TwinLog.compactAdditive]]. */
   def compactLog(spark: SparkSession, outDir: String): Long =
-    AdditiveLog.compactLog(spark, logDir(outDir), summarySchema(spark),
+    TwinLog.compactAdditive(spark, logDir(outDir),
       Seq("g", "day"), Seq("x"))
 }

@@ -1,7 +1,6 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
@@ -23,14 +22,14 @@ import graft.operators.Dedup
   * stream result after any prefix equals batch `lshCandidates` over
   * every document seen — intra-batch and cross-batch pairs alike.
   *
-  * Unlike the ADDITIVE logs ([[AdditiveLog]]), band rows are SET
+  * Unlike the ADDITIVE logs ([[TwinLog.merged]]), band rows are SET
   * facts: priorities of the pair universe do not accumulate, they
   * exist or not — so a duplicate append (at-least-once replay, a
   * crashed attempt) is absorbed by the reader's distinct, the
-  * [[SampleStream]] idempotence story. Compaction rewrites the
-  * distinct rows under a fresh `__batch` generation BEFORE deleting
-  * the old files; a crash between the two leaves duplicates the
-  * reader already tolerates.
+  * [[SampleStream]] idempotence story. Compaction is
+  * [[TwinLog.compact]]: the distinct rows land as a fresh generation
+  * BEFORE the old files are deleted; a crash between the two leaves
+  * duplicates the reader already tolerates.
   */
 object DedupIndexStream {
 
@@ -54,11 +53,6 @@ object DedupIndexStream {
         .select((col("doc_id") +: (0 until NB).map(b => col(s"b$b"))): _*),
       "doc_id", "doc_id", NB)
 
-  private def logExists(spark: SparkSession, outDir: String): Boolean = {
-    val dir = new Path(logDir(outDir))
-    dir.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(dir)
-  }
-
   /** Schema for reads that arrive before the first commit — derived
     * from [[bandRows]] itself (one source of truth). */
   private def indexSchema(spark: SparkSession): StructType = {
@@ -69,21 +63,17 @@ object DedupIndexStream {
     bandRows(emptyDocs).schema
   }
 
+  /** The standing index (doc_id, band, key), persisted — replay/crash
+    * guard: duplicate appends collapse (band rows are deterministic
+    * functions of (doc_id, text)). EMPTY before the first commit. */
+  private def index(spark: SparkSession, outDir: String): DataFrame =
+    TwinLog.read(spark, logDir(outDir), indexSchema(spark)).persist()
+
   /** Start the index maintainer: per micro-batch, band the batch's
     * documents and append their index rows tagged with the epoch. */
   def start(docs: DataFrame, outDir: String, checkpointDir: String,
-      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
-    val step: (Dataset[Row], Long) => Unit = { (batch, batchId) =>
-      bandRows(batch.toDF())
-        .withColumn("__batch", lit(batchId))
-        .write.mode("append").parquet(logDir(outDir))
-    }
-    docs.writeStream
-      .foreachBatch(step)
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .start()
-  }
+      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
+    TwinLog.start(docs, checkpointDir, trigger)((bandRows(_), logDir(outDir)))
 
   /** Current candidate pairs: docs sharing at least one band key among
     * EVERYTHING indexed so far — (id_a, id_b), id_a < id_b, distinct.
@@ -113,16 +103,7 @@ object DedupIndexStream {
     *       the Dedup cache contract. */
   def candidates(spark: SparkSession, outDir: String,
       maxBucket: Option[Int] = None): DataFrame = {
-    val idx =
-      if (!logExists(spark, outDir))
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[Row], indexSchema(spark))
-      else spark.read.parquet(logDir(outDir))
-        .select(col("doc_id"), col("band"), col("key"))
-        // replay/crash guard: duplicate appends collapse — band rows
-        // are deterministic functions of (doc_id, text)
-        .distinct()
-        .persist()
+    val idx = index(spark, outDir)
     val joinSide = maxBucket match {
       case None => idx
       case Some(cap) =>
@@ -167,14 +148,7 @@ object DedupIndexStream {
     *       the Dedup cache contract. */
   def candidatesAcross(spark: SparkSession, outDir: String,
       evalDocs: DataFrame, maxBucket: Option[Int] = None): DataFrame = {
-    val idx =
-      if (!logExists(spark, outDir))
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[Row], indexSchema(spark))
-      else spark.read.parquet(logDir(outDir))
-        .select(col("doc_id"), col("band"), col("key"))
-        .distinct()
-        .persist()
+    val idx = index(spark, outDir)
     val trainSide = maxBucket match {
       case None => idx
       case Some(cap) =>
@@ -198,44 +172,14 @@ object DedupIndexStream {
       .distinct()
   }
 
-  /** Bytes of compacted output one rewrite task should produce — the
-    * standard ~128 MB parquet target. The compacted file count scales
-    * with index size (the index is CORPUS-sized, nBands rows per
-    * document — unlike [[AdditiveLog]]'s key-support-bounded folds, a
-    * single-file rewrite would funnel the whole corpus through one
-    * task at 100 TB). */
-  private val CompactBytesPerFile = 128L << 20
-
-  /** Rewrite the accreted log back to one distinct generation,
-    * PARTITIONED: the rewrite repartitions by (band, key) into a file
-    * count scaled to the pre-compaction byte size (≥1 file per
-    * [[CompactBytesPerFile]] of input — known from the file listing,
-    * no extra count job), so compaction parallelism grows with the
-    * corpus instead of serializing through one task. Crash-safe: the
-    * compacted rows land under a fresh `__batch` generation BEFORE the
-    * old files are removed; a crash between the two leaves duplicates
-    * [[candidates]]' distinct already tolerates. Returns the number of
-    * files collected. */
-  def compactLog(spark: SparkSession, outDir: String): Long = {
-    if (!logExists(spark, outDir)) return 0L
-    val dir = new Path(logDir(outDir))
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val before = fs.listStatus(dir).filter(_.getPath.getName.endsWith(".parquet"))
-    if (before.isEmpty) return 0L
-    val gen = spark.read.parquet(logDir(outDir))
-      .agg(max(col("__batch"))).head() match {
-        case r if r.isNullAt(0) => 1L
-        case r => r.getLong(0) + 1L
-      }
-    val nFiles = math.max(1L,
-      before.map(_.getLen).sum / CompactBytesPerFile).toInt
-    spark.read.parquet(logDir(outDir))
-      .select(col("doc_id"), col("band"), col("key"))
-      .distinct()
-      .withColumn("__batch", lit(gen))
-      .repartition(nFiles, col("band"), col("key"))
-      .write.mode("append").parquet(logDir(outDir))
-    before.foreach(f => fs.delete(f.getPath, false))
-    before.length.toLong
-  }
+  /** Rewrite the accreted log back to one distinct generation
+    * ([[TwinLog.compact]]). The index is CORPUS-sized (nBands rows per
+    * document), so the rewrite is repartitioned by (band, key) into a
+    * file count scaled to the pre-compaction bytes: compaction
+    * parallelism grows with the corpus instead of serializing through
+    * one task. Returns the number of files collected. */
+  def compactLog(spark: SparkSession, outDir: String): Long =
+    TwinLog.compact(spark, logDir(outDir), Seq("band", "key")) {
+      _.select(col("doc_id"), col("band"), col("key")).distinct()
+    }
 }

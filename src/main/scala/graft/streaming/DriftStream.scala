@@ -20,7 +20,7 @@ import graft.operators.DriftStat
   *
   * The log mechanics (replay idempotence, snapshot compaction safe
   * under crashes and concurrent streams, empty-before-first-commit
-  * reads) are [[AdditiveLog]]'s — this object binds them to
+  * reads) are [[TwinLog]]'s — this object binds them to
   * [[DriftStat.histogram]]'s keys (week, cents) and sums (cp, cc). */
 object DriftStream {
 
@@ -46,22 +46,22 @@ object DriftStream {
     * (week, cents) histogram tagged with the epoch id. */
   def start(events: DataFrame, outDir: String, checkpointDir: String,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    AdditiveLog.start(events, DriftStat.histogram, logDir(outDir),
-      checkpointDir, trigger)
+    TwinLog.start(events, checkpointDir, trigger, additive = true)(
+      (DriftStat.histogram(_), logDir(outDir)))
 
   /** Current drift statistics: merge the live histogram by addition,
     * finish with the exact one-pass stats. Reads the log only —
     * bounded by batches x weeks x value support, never the event
     * history. */
   def stats(spark: SparkSession, outDir: String): DataFrame =
-    DriftStat.stats(AdditiveLog.merged(spark, logDir(outDir),
+    DriftStat.stats(TwinLog.merged(spark, logDir(outDir),
       summarySchema(spark), Seq("week", "cents"), Seq("cp", "cc")))
 
   /** Fold the fully-committed prefix of the log into one snapshot,
     * then garbage-collect the superseded files. Returns the number of
     * files collected. Safe concurrently with a running stream —
-    * [[AdditiveLog.compactLog]]. */
+    * [[TwinLog.compactAdditive]]. */
   def compactLog(spark: SparkSession, outDir: String): Long =
-    AdditiveLog.compactLog(spark, logDir(outDir), summarySchema(spark),
+    TwinLog.compactAdditive(spark, logDir(outDir),
       Seq("week", "cents"), Seq("cp", "cc"))
 }

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.{BooleanType, LongType, StringType, StructField, StructType}
@@ -12,8 +12,8 @@ import graft.operators.Dsir
   * document stream, scoring any frame of documents (arriving batches,
   * selection candidates) at read time against the model-so-far.
   *
-  * Both model sides are additive, so [[AdditiveLog]]'s protocol fits
-  * exactly (the LmStream shape, one merge class earlier):
+  * Both model sides are additive, so [[TwinLog]]'s additive protocol
+  * fits exactly (the LmStream shape, one merge class earlier):
   *
   *  - raw bucket counts cr: per micro-batch, the batch's own
   *    (bucket, cnt) deltas — at most B rows per batch;
@@ -41,7 +41,7 @@ object DsirStream {
   /** The bucket count is part of the LOG IDENTITY (folded into the
     * directory name): a reader or appender with a different `buckets`
     * sees a separate (initially empty) log instead of silently mixing
-    * foreign bucket spaces — the AdditiveLog-flavored version of the
+    * foreign bucket spaces — the additive-log version of the
     * SRP index's stamped-parameters guard. */
   def rawDir(outDir: String, buckets: Int): String =
     s"${outDir}_dsraw_b$buckets"
@@ -79,35 +79,22 @@ object DsirStream {
     * `docs` must carry (doc_id, text, is_target). */
   def start(docs: DataFrame, outDir: String, checkpointDir: String,
       buckets: Int = Dsir.DefaultBuckets,
-      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
-    val step: (Dataset[Row], Long) => Unit = { (batch, batchId) =>
-      val df = batch.toDF()
-      rawSummary(df, buckets)
-        .withColumn("__batch", lit(batchId))
-        .withColumn("__covers", lit(null).cast("long"))
-        .write.mode("append").parquet(rawDir(outDir, buckets))
-      targetSummary(df, buckets)
-        .withColumn("__batch", lit(batchId))
-        .withColumn("__covers", lit(null).cast("long"))
-        .write.mode("append").parquet(targetDir(outDir, buckets))
-    }
-    docs.writeStream
-      .foreachBatch(step)
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .start()
-  }
+      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
+    TwinLog.start(docs, checkpointDir, trigger, additive = true)(
+      (rawSummary(_, buckets), rawDir(outDir, buckets)),
+      (targetSummary(_, buckets), targetDir(outDir, buckets)))
 
   /** The merged raw bucket model (bucket, cr) after any stream prefix. */
   def rawCounts(spark: SparkSession, outDir: String,
       buckets: Int = Dsir.DefaultBuckets): DataFrame =
-    AdditiveLog.merged(spark, rawDir(outDir, buckets), rawSchema(spark, buckets),
+    TwinLog.merged(spark, rawDir(outDir, buckets), rawSchema(spark, buckets),
       Seq("bucket"), Seq("cr"))
 
   /** The merged target bucket model (bucket, ct). */
   def targetCounts(spark: SparkSession, outDir: String,
       buckets: Int = Dsir.DefaultBuckets): DataFrame =
-    AdditiveLog.merged(spark, targetDir(outDir, buckets), targetSchema(spark, buckets),
+    TwinLog.merged(spark, targetDir(outDir, buckets),
+      targetSchema(spark, buckets),
       Seq("bucket"), Seq("ct"))
 
   /** Score `docs` (doc_id, text) against the standing model: q265's
@@ -132,11 +119,11 @@ object DsirStream {
       pivotBits)
 
   /** Fold both logs' fully-committed prefixes into snapshots; returns
-    * total files collected — [[AdditiveLog.compactLog]]. */
+    * total files collected — [[TwinLog.compactAdditive]]. */
   def compactLog(spark: SparkSession, outDir: String,
       buckets: Int = Dsir.DefaultBuckets): Long =
-    AdditiveLog.compactLog(spark, rawDir(outDir, buckets), rawSchema(spark, buckets),
-      Seq("bucket"), Seq("cr")) +
-      AdditiveLog.compactLog(spark, targetDir(outDir, buckets),
-        targetSchema(spark, buckets), Seq("bucket"), Seq("ct"))
+    TwinLog.compactAdditive(spark, rawDir(outDir, buckets), Seq("bucket"),
+      Seq("cr")) +
+      TwinLog.compactAdditive(spark, targetDir(outDir, buckets),
+        Seq("bucket"), Seq("ct"))
 }

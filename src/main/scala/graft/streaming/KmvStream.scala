@@ -1,7 +1,6 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
@@ -14,7 +13,7 @@ import graft.functions.Portable
   * without ever re-reading old text, in k longs of state per source.
   *
   * The mergeability here is the ORDER-STATISTIC class — a third kind
-  * beside the additive logs ([[AdditiveLog]]: summaries merge by
+  * beside the additive logs ([[TwinLog.merged]]: summaries merge by
   * addition) and the set-fact index ([[DedupIndexStream]]: rows exist
   * or not): the k smallest of a union equal the k smallest of the
   * union of per-part k-smallest sets, so each micro-batch appends ONLY
@@ -53,26 +52,12 @@ object KmvStream {
     graft.plans.TopKPerKey.topK(hs, Seq("source"), Seq(("h", true)), k)
   }
 
-  private def logExists(spark: SparkSession, outDir: String): Boolean = {
-    val dir = new Path(logDir(outDir))
-    dir.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(dir)
-  }
-
   /** Start the sketch maintainer: per micro-batch, append the batch's
     * bottom-k rows tagged with the epoch. */
   def start(docs: DataFrame, outDir: String, checkpointDir: String,
-      k: Int, trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
-    val step: (Dataset[Row], Long) => Unit = { (batch, batchId) =>
-      batchSummary(batch.toDF(), k)
-        .withColumn("__batch", lit(batchId))
-        .write.mode("append").parquet(logDir(outDir))
-    }
-    docs.writeStream
-      .foreachBatch(step)
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .start()
-  }
+      k: Int, trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
+    TwinLog.start(docs, checkpointDir, trigger)(
+      (batchSummary(_, k), logDir(outDir)))
 
   /** Current sketch: (source, h_k, kmv_estimate) — q69's columns over
     * everything ingested. Reads the log only (<= batches x sources x k
@@ -80,15 +65,11 @@ object KmvStream {
     * as EMPTY (source typed STRING by the canonical documents schema —
     * the [[DedupIndexStream]] convention). */
   def estimate(spark: SparkSession, outDir: String, k: Int): DataFrame = {
-    val logRows =
-      if (!logExists(spark, outDir))
-        spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
-          StructType(Seq(StructField("source", StringType),
-            StructField("h", LongType))))
-      else spark.read.parquet(logDir(outDir))
-        // replay/crash guard: duplicate appends collapse — bottom-k
-        // rows are deterministic functions of the batch's text
-        .select(col("source"), col("h")).distinct()
+    // replay/crash guard: duplicate appends collapse — bottom-k rows
+    // are deterministic functions of the batch's text
+    val logRows = TwinLog.read(spark, logDir(outDir),
+      StructType(Seq(StructField("source", StringType),
+        StructField("h", LongType))))
     graft.plans.TopKPerKey.topK(logRows, Seq("source"), Seq(("h", true)), k)
       .groupBy(col("source"))
       .agg(count(lit(1)).as("__n"), max(col("h")).as("__hk"))
@@ -100,30 +81,14 @@ object KmvStream {
   }
 
   /** Rewrite the accreted log back to one current bottom-k generation
-    * per source. The fold is KEY-SUPPORT-BOUNDED (sources x k rows —
-    * unlike [[DedupIndexStream]]'s corpus-sized index), so a
-    * single-file rewrite is the right shape. Crash-safe the usual
-    * way: new generation lands BEFORE old files are removed;
-    * leftovers collapse under the reader's distinct + re-min. */
-  def compactLog(spark: SparkSession, outDir: String, k: Int): Long = {
-    if (!logExists(spark, outDir)) return 0L
-    val dir = new Path(logDir(outDir))
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val before = fs.listStatus(dir).filter(_.getPath.getName.endsWith(".parquet"))
-    if (before.isEmpty) return 0L
-    val gen = spark.read.parquet(logDir(outDir))
-      .agg(max(col("__batch"))).head() match {
-        case r if r.isNullAt(0) => 1L
-        case r => r.getLong(0) + 1L
-      }
-    graft.plans.TopKPerKey.topK(
-        spark.read.parquet(logDir(outDir))
-          .select(col("source"), col("h")).distinct(),
+    * per source ([[TwinLog.compact]]: crash-safe, leftovers collapse
+    * under the reader's distinct + re-min). The fold is
+    * KEY-SUPPORT-BOUNDED (sources x k rows), so it stays one file
+    * until the log itself outgrows one file's bytes. */
+  def compactLog(spark: SparkSession, outDir: String, k: Int): Long =
+    TwinLog.compact(spark, logDir(outDir), Seq("source")) { log =>
+      graft.plans.TopKPerKey.topK(
+        log.select(col("source"), col("h")).distinct(),
         Seq("source"), Seq(("h", true)), k)
-      .withColumn("__batch", lit(gen))
-      .coalesce(1)
-      .write.mode("append").parquet(logDir(outDir))
-    before.foreach(f => fs.delete(f.getPath, false))
-    before.length.toLong
-  }
+    }
 }

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
@@ -10,7 +10,7 @@ import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType
   * stream, scoring any frame of documents (arriving batches, eval
   * sets) at read time against the model-so-far.
   *
-  * Everything the model needs is additive, so [[AdditiveLog]]'s
+  * Everything the model needs is additive, so [[TwinLog]]'s additive
   * protocol fits exactly:
   *
   *  - bigram counts c12: per micro-batch, the batch's own (w1, w2)
@@ -30,7 +30,7 @@ import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType
   * the epoch replay. A reader that lands between the two appends of a
   * LIVE epoch can see that epoch's bigrams without its tokens — the
   * same transient at-least-once visibility window every consumer of a
-  * live AdditiveLog already tolerates; after the epoch commits the
+  * live additive log already tolerates; after the epoch commits the
   * logs agree forever.
   *
   * [[score]] is the batch arithmetic verbatim (floor(-log2 p) with
@@ -82,33 +82,19 @@ object LmStream {
   /** Start the maintainer: ONE epoch appends the batch's bigram and
     * token deltas to both logs under the same batch id. */
   def start(docs: DataFrame, outDir: String, checkpointDir: String,
-      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
-    val step: (Dataset[Row], Long) => Unit = { (batch, batchId) =>
-      val df = batch.toDF()
-      bigramSummary(df)
-        .withColumn("__batch", lit(batchId))
-        .withColumn("__covers", lit(null).cast("long"))
-        .write.mode("append").parquet(bigramDir(outDir))
-      tokenSummary(df)
-        .withColumn("__batch", lit(batchId))
-        .withColumn("__covers", lit(null).cast("long"))
-        .write.mode("append").parquet(tokenDir(outDir))
-    }
-    docs.writeStream
-      .foreachBatch(step)
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .start()
-  }
+      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
+    TwinLog.start(docs, checkpointDir, trigger, additive = true)(
+      (bigramSummary(_), bigramDir(outDir)),
+      (tokenSummary(_), tokenDir(outDir)))
 
   /** The merged bigram model (w1, w2, c12) after any stream prefix. */
   def bigramCounts(spark: SparkSession, outDir: String): DataFrame =
-    AdditiveLog.merged(spark, bigramDir(outDir), bigramSchema(spark),
+    TwinLog.merged(spark, bigramDir(outDir), bigramSchema(spark),
       Seq("w1", "w2"), Seq("c12"))
 
   /** The merged vocabulary (tok, cnt); its row count is V. */
   def tokenCounts(spark: SparkSession, outDir: String): DataFrame =
-    AdditiveLog.merged(spark, tokenDir(outDir), tokenSchema(spark),
+    TwinLog.merged(spark, tokenDir(outDir), tokenSchema(spark),
       Seq("tok"), Seq("cnt"))
 
   /** Score `docs` (doc_id, text) against the standing model: q262's
@@ -144,10 +130,9 @@ object LmStream {
 
   /** Fold both logs' fully-committed prefixes into snapshots; returns
     * total files collected. Safe with a running stream —
-    * [[AdditiveLog.compactLog]]. */
+    * [[TwinLog.compactAdditive]]. */
   def compactLog(spark: SparkSession, outDir: String): Long =
-    AdditiveLog.compactLog(spark, bigramDir(outDir), bigramSchema(spark),
-      Seq("w1", "w2"), Seq("c12")) +
-      AdditiveLog.compactLog(spark, tokenDir(outDir), tokenSchema(spark),
-        Seq("tok"), Seq("cnt"))
+    TwinLog.compactAdditive(spark, bigramDir(outDir), Seq("w1", "w2"),
+      Seq("c12")) +
+      TwinLog.compactAdditive(spark, tokenDir(outDir), Seq("tok"), Seq("cnt"))
 }

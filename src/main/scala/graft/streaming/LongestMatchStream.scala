@@ -1,8 +1,6 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
 
@@ -18,12 +16,12 @@ import graft.operators.{LongestMatch, SuffixIndex}
   * corpus side (the per-batch cost is the batch's own k-ary probe
   * rounds against the persisted snippet table).
   *
-  * Idempotence is the AdditiveLog batch-id convention restated for
-  * RESULT rows (which are final values, not additive deltas): each
-  * appended row is a deterministic function of (batchId, the batch's
-  * rows) tagged `__batch`, so an at-least-once replay (foreachBatch
-  * re-runs the same epoch after a crash) appends byte-identical rows
-  * that [[read]]'s full-row distinct collapses. Eval ids must be
+  * Idempotence is [[TwinLog]]'s RESULT-log protocol (rows are final
+  * values, not additive deltas): each appended row is a deterministic
+  * function of (batchId, the batch's rows) tagged with the epoch, so
+  * an at-least-once replay (foreachBatch re-runs the same epoch after
+  * a crash) appends byte-identical rows that [[read]]'s per-epoch
+  * distinct collapses. Eval ids must be
   * UNIQUE across the stream (the eval-suite contract shared with every
   * decon operator): the same id arriving twice in different epochs is
   * two legitimate rows this protocol cannot tell from a replay. Eval
@@ -47,11 +45,10 @@ object LongestMatchStream {
       tag: String, corpus: DataFrame, idCol: String, textCol: String,
       eIdCol: String, eTextCol: String, outDir: String, cap: Int,
       fanout: Int = 6, root: Option[String] = None): Unit = {
-    LongestMatch.longestMatchFromRanks(
+    TwinLog.append(LongestMatch.longestMatchFromRanks(
         SuffixIndex.ranks(spark, tag, corpus, idCol, textCol, root),
-        corpus, idCol, textCol, batch, eIdCol, eTextCol, cap, fanout)
-      .withColumn("__batch", lit(batchId))
-      .write.mode("append").parquet(outDir)
+        corpus, idCol, textCol, batch, eIdCol, eTextCol, cap, fanout),
+      outDir, batchId)
     // the operator persists its snippet table per call (the documented
     // clearCache-after-terminal-action contract); a long-lived stream
     // must free it per batch
@@ -72,29 +69,17 @@ object LongestMatchStream {
       s"eval id column '$eIdCol' must be LONG (the engine id " +
         s"convention; read() states BIGINT), got " +
         s"${evalDocs.schema(eIdCol).dataType.simpleString}")
-    evalDocs.writeStream
-      .foreachBatch { (b: Dataset[Row], id: Long) =>
-        applyBatch(b.sparkSession, b.toDF(), id, tag, corpus, idCol,
-          textCol, eIdCol, eTextCol, outDir, cap, fanout, root)
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .start()
+    TwinLog.foreachEpoch(evalDocs, checkpointDir, trigger) { (b, id) =>
+      applyBatch(b.sparkSession, b, id, tag, corpus, idCol, textCol,
+        eIdCol, eTextCol, outDir, cap, fanout, root)
+    }
   }
 
   /** Everything scored so far: one (eIdCol, match_len, witness) row
-    * per eval document — replayed epochs collapse under the full-row
-    * distinct. A log whose first batch has not committed reads as
-    * EMPTY. */
-  def read(spark: SparkSession, outDir: String, eIdCol: String): DataFrame = {
-    val resultDdl = s"$eIdCol BIGINT, match_len BIGINT, witness STRING"
-    val p = new Path(outDir)
-    if (!p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p))
-      spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
-        StructType.fromDDL(resultDdl))
-    else
-      spark.read.schema(s"$resultDdl, __batch BIGINT").parquet(outDir)
-        .distinct()
-        .drop("__batch")
-  }
+    * per eval document — replayed epochs collapse
+    * ([[TwinLog.results]]). A log whose first batch has not committed
+    * reads as EMPTY. */
+  def read(spark: SparkSession, outDir: String, eIdCol: String): DataFrame =
+    TwinLog.results(spark, outDir, StructType.fromDDL(
+      s"$eIdCol BIGINT, match_len BIGINT, witness STRING"))
 }

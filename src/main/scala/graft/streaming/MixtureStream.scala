@@ -23,7 +23,7 @@ import graft.operators.{Dsir, DsirIndex}
   * ([[DsirIndex.scoreFromModel]] — one feature explode, a broadcast
   * weight join), applies [[Dsir.resampleKeep]], and appends ONE
   * additive per-source summary row set: (n_docs, n_kept, kept_chars)
-  * deltas on [[AdditiveLog]]'s protocol (replay collapse, covers-
+  * deltas on [[TwinLog]]'s additive protocol (replay collapse, covers-
   * tagged snapshot compaction). The non-additive columns — share_bp
   * and epoch_weight_bp — derive at READ time from the merged counts
   * through [[Dsir.mixtureWeights]], the SAME statement q276/q280
@@ -71,7 +71,7 @@ object MixtureStream {
       require(docs.columns.contains(c),
         s"MixtureStream needs a '$c' column; stream has " +
           docs.columns.mkString("[", ", ", "]")))
-    AdditiveLog.start(docs,
+    TwinLog.start(docs, checkpointDir, trigger, additive = true)((
       b => {
         val spark = b.sparkSession
         require(spark.catalog.tableExists(modelTable),
@@ -79,14 +79,14 @@ object MixtureStream {
             "before the monitor starts")
         summary(spark.table(modelTable))(b)
       },
-      logDir(outDir), checkpointDir, trigger)
+      logDir(outDir)))
   }
 
   /** The raw admission table — merged per-source counts (including
     * total docs seen), the ops view behind [[mixture]]. Empty
     * (correct schema) before the first commit. */
   def admission(spark: SparkSession, outDir: String): DataFrame =
-    AdditiveLog.merged(spark, logDir(outDir), summarySchema,
+    TwinLog.merged(spark, logDir(outDir), summarySchema,
       Seq("source"), CountCols)
 
   /** The current mixture table — q280's exact output shape over
@@ -99,9 +99,9 @@ object MixtureStream {
       admission(spark, outDir).filter(col("kept_chars") > 0)
         .select(col("source"), col("n_kept"), col("kept_chars")))
 
-  /** Fold the committed prefix into one snapshot (the AdditiveLog
-    * compaction contract); returns files collected. */
+  /** Fold the committed prefix into one snapshot (the TwinLog
+    * additive compaction contract); returns files collected. */
   def compactLog(spark: SparkSession, outDir: String): Long =
-    AdditiveLog.compactLog(spark, logDir(outDir), summarySchema,
-      Seq("source"), CountCols)
+    TwinLog.compactAdditive(spark, logDir(outDir), Seq("source"),
+      CountCols)
 }

@@ -16,7 +16,7 @@ import graft.operators.GopherRules
   * `repetitionGate` AND `c4Gate`) all deserve the same live mirror.
   * Every statistic is an ADDITIVE per-source count (docs, sentences,
   * per-rule violations, all-rules passes for each rule family), so the
-  * monitor rides [[AdditiveLog]]'s protocol verbatim: each micro-batch
+  * monitor rides [[TwinLog]]'s additive protocol verbatim: each micro-batch
   * appends its own source-bounded count deltas (the rule arithmetic is
   * [[GopherRules]] — the SAME statements q273/q277 and the CurateStream
   * gates run — the C4 half is [[graft.operators.C4Rules.audit]], the
@@ -98,7 +98,8 @@ object QualityAuditStream {
       require(docs.columns.contains(c),
         s"QualityAuditStream needs a '$c' column; stream has " +
           docs.columns.mkString("[", ", ", "]")))
-    AdditiveLog.start(docs, summary, logDir(outDir), checkpointDir, trigger)
+    TwinLog.start(docs, checkpointDir, trigger, additive = true)(
+      (summary(_), logDir(outDir)))
   }
 
   /** The current audit table — q273's and q277's exact output shapes
@@ -106,15 +107,15 @@ object QualityAuditStream {
     * read-derived pass rates. Empty (correct schema) before the first
     * commit. */
   def audit(spark: SparkSession, outDir: String): DataFrame =
-    AdditiveLog.merged(spark, logDir(outDir), summarySchema,
+    TwinLog.merged(spark, logDir(outDir), summarySchema,
         Seq("source"), CountCols)
       .withColumn("pass_bp", expr("n_pass * 10000 div n_docs"))
       .withColumn("rep_pass_bp", expr("n_rep_pass * 10000 div n_docs"))
       .withColumn("c4_pass_bp", expr("c4_pages * 10000 div n_docs"))
 
-  /** Fold the committed prefix into one snapshot (the AdditiveLog
-    * compaction contract); returns files collected. */
+  /** Fold the committed prefix into one snapshot (the TwinLog
+    * additive compaction contract); returns files collected. */
   def compactLog(spark: SparkSession, outDir: String): Long =
-    AdditiveLog.compactLog(spark, logDir(outDir), summarySchema,
-      Seq("source"), CountCols)
+    TwinLog.compactAdditive(spark, logDir(outDir), Seq("source"),
+      CountCols)
 }

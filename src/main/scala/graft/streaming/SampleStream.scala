@@ -1,9 +1,9 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, Row, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.types._
 
 import graft.operators.PrioritySample
 
@@ -39,29 +39,14 @@ object SampleStream {
     * `outDir`. */
   def logDir(outDir: String): String = outDir + "_prilog"
 
-  private def logExists(spark: SparkSession, outDir: String): Boolean = {
-    val dir = new Path(logDir(outDir))
-    dir.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(dir)
-  }
-
   /** Start the reservoir maintainer: per micro-batch, append the
     * batch-local top-(k+1) summary per group to the log. */
   def start(docs: DataFrame, groupCol: String, idCol: String,
       weightCol: String, k: Int, outDir: String, checkpointDir: String,
-      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
-    val step: (Dataset[Row], Long) => Unit = { (batch, batchId) =>
-      val pri = PrioritySample.withPriority(batch.toDF(), groupCol, idCol,
-        weightCol)
-      PrioritySample.topSummary(pri, groupCol, idCol, k)
-        .withColumn("__batch", lit(batchId))
-        .write.mode("append").parquet(logDir(outDir))
-    }
-    docs.writeStream
-      .foreachBatch(step)
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .start()
-  }
+      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
+    TwinLog.start(docs, checkpointDir, trigger)((batch =>
+      PrioritySample.topSummary(PrioritySample.withPriority(batch, groupCol,
+        idCol, weightCol), groupCol, idCol, k), logDir(outDir)))
 
   /** Current reservoir: merge every logged summary and finish with the
     * DLT rank/tau/estimator pass. Reads the log only — bounded by
@@ -79,74 +64,39 @@ object SampleStream {
   def sample(spark: SparkSession, outDir: String, groupCol: String,
       idCol: String, k: Int,
       schemaFrom: Option[(DataFrame, String)] = None): DataFrame = {
-    // a reservoir whose first micro-batch has not committed yet is
-    // simply EMPTY, not broken (the DriftStream rule)
-    if (!logExists(spark, outDir)) {
-      schemaFrom match {
-        case Some((docs, weightCol)) =>
-          // the committed path reads the LOG (parquet: every column
-          // nullable) and finishes with topSummary+estimate — mirror
-          // it exactly: derive the log row types from the caller's
-          // frame via withPriority, normalize to parquet nullability,
-          // then run the same finishing pass over zero rows
-          import org.apache.spark.sql.types.StructType
-          val logShaped = PrioritySample.withPriority(
-              docs.select(col(groupCol), col(idCol), col(weightCol))
-                .limit(0),
-              groupCol, idCol, weightCol)
-            .select(col(groupCol), col(idCol), col("w"), col("priority"))
-          val emptyLog = spark.createDataFrame(
-            spark.sparkContext.emptyRDD[Row],
-            StructType(logShaped.schema.map(_.copy(nullable = true))))
-          return PrioritySample.estimate(
-            PrioritySample.topSummary(emptyLog, groupCol, idCol, k),
-            groupCol, idCol, k)
-        case None =>
-          import org.apache.spark.sql.types._
-          return spark.createDataFrame(
-            spark.sparkContext.emptyRDD[Row],
-            StructType(Seq(StructField(groupCol, StringType),
-              StructField(idCol, LongType), StructField("w", LongType),
-              StructField("priority", DoubleType),
-              StructField("est_w", DoubleType))))
-      }
+    // the log row types: the committed path reads the LOG (parquet:
+    // every column nullable), so the caller's frame goes through
+    // withPriority over zero rows, normalized to parquet nullability
+    val logSchema = schemaFrom match {
+      case Some((docs, weightCol)) =>
+        StructType(PrioritySample.withPriority(
+            docs.select(col(groupCol), col(idCol), col(weightCol)).limit(0),
+            groupCol, idCol, weightCol)
+          .select(col(groupCol), col(idCol), col("w"), col("priority"))
+          .schema.map(_.copy(nullable = true)))
+      case None =>
+        StructType(Seq(StructField(groupCol, StringType),
+          StructField(idCol, LongType), StructField("w", LongType),
+          StructField("priority", DoubleType)))
     }
-    val log = spark.read.parquet(logDir(outDir))
-      .select(col(groupCol), col(idCol), col("w"), col("priority"))
-      // replay/crash guard: duplicate appends of the same member merge
-      // to one row (all its columns are deterministic recomputations)
-      .distinct()
+    // replay/crash guard: duplicate appends of the same member merge to
+    // one row (all its columns are deterministic recomputations); a
+    // reservoir whose first micro-batch has not committed yet is simply
+    // EMPTY, not broken, and runs the same finishing pass over zero rows
+    val log = TwinLog.read(spark, logDir(outDir), logSchema)
     PrioritySample.estimate(
       PrioritySample.topSummary(log, groupCol, idCol, k),
       groupCol, idCol, k)
   }
 
-  /** Rewrite the accreted log back to one current summary per group.
-    * Crash-safe: the compacted summary lands under a fresh `__batch`
-    * generation BEFORE the old files are removed; a crash between the
-    * two leaves duplicates that [[sample]]'s distinct already
-    * tolerates. */
+  /** Rewrite the accreted log back to one current summary per group
+    * ([[TwinLog.compact]]: a crash between landing the new generation
+    * and deleting the old files leaves duplicates that [[sample]]'s
+    * distinct already tolerates). */
   def compactLog(spark: SparkSession, outDir: String, groupCol: String,
-      idCol: String, k: Int): Long = {
-    if (!logExists(spark, outDir)) return 0L // nothing committed yet
-    val dir = new Path(logDir(outDir))
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val before = fs.listStatus(dir).filter(_.getPath.getName.endsWith(".parquet"))
-    if (before.isEmpty) return 0L
-    val gen = spark.read.parquet(logDir(outDir))
-      .agg(max(col("__batch"))).head() match {
-        case r if r.isNullAt(0) => 1L // a log of empty files: still generation-safe
-        case r => r.getLong(0) + 1L
-      }
-    val merged = PrioritySample.topSummary(
-      spark.read.parquet(logDir(outDir))
-        .select(col(groupCol), col(idCol), col("w"), col("priority"))
-        .distinct(),
-      groupCol, idCol, k)
-      .withColumn("__batch", lit(gen))
-      .coalesce(1)
-    merged.write.mode("append").parquet(logDir(outDir))
-    before.foreach(f => fs.delete(f.getPath, false))
-    before.length.toLong
-  }
+      idCol: String, k: Int): Long =
+    TwinLog.compact(spark, logDir(outDir), Seq(groupCol)) { log =>
+      PrioritySample.topSummary(log.select(col(groupCol), col(idCol),
+        col("w"), col("priority")).distinct(), groupCol, idCol, k)
+    }
 }

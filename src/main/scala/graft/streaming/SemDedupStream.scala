@@ -1,7 +1,7 @@
 package graft.streaming
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
@@ -47,10 +47,9 @@ import graft.operators.Similarity
   * standing log first — a replay (or a crash between the two appends)
   * re-derives the same rows and appends only what is missing; the
   * read's distinct collapses any torn remainder. [[compactLogs]]
-  * folds the per-batch files back to distinct rows under a fresh
-  * generation BEFORE deleting the files it supersedes (the
-  * DedupIndexStream order — a crash mid-compaction leaves duplicates
-  * the read-side distinct already absorbs, never data loss).
+  * folds the per-batch files back to distinct rows through
+  * [[TwinLog.compact]] (a crash mid-compaction leaves duplicates the
+  * read-side distinct already absorbs, never data loss).
   *
   * The occupancy guard is [[Similarity.semDedupKeepCells]] — the SAME
   * statement the batch forms run — evaluated per batch against the
@@ -76,15 +75,8 @@ object SemDedupStream {
   private def trainSidecar(centDir: String) =
     new Path(centDir, "_graft_train_n")
 
-  private val CompactBytesPerFile = 64L * 1024 * 1024
-
   private def fs(spark: SparkSession, p: Path) =
     p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  private def exists(spark: SparkSession, dir: String): Boolean = {
-    val p = new Path(dir)
-    fs(spark, p).exists(p)
-  }
 
   /** Offline centroid training for one corpus generation: writes the
     * frozen centroid table and (data first, marker last) the
@@ -112,13 +104,13 @@ object SemDedupStream {
     Seq(idCol, vecCol).foreach(c => require(vectors.columns.contains(c),
       s"SemDedupStream needs a '$c' column; stream has " +
         vectors.columns.mkString("[", ", ", "]")))
-    val step: (Dataset[Row], Long) => Unit = { (batch, batchId) =>
+    TwinLog.foreachEpoch(vectors, checkpointDir, trigger) { (batch, batchId) =>
       val spark = batch.sparkSession
-      require(exists(spark, centDir),
+      require(TwinLog.exists(spark, centDir),
         s"centroid table $centDir must be trained offline " +
           "(SemDedupStream.train) before the stream starts")
       val cents = spark.read.parquet(centDir)
-      val newAsg = Similarity.semDedupAssign(batch.toDF(), cents,
+      val newAsg = Similarity.semDedupAssign(batch, cents,
         idCol, vecCol).persist()
       // a zero-row epoch (the quiet-period shape) moves nothing — and
       // must not leave a schemaless partition-only footprint behind
@@ -128,16 +120,13 @@ object SemDedupStream {
         // and the partition-pruning key for every standing-side read
         val touched = newAsg.select(col("cell")).distinct()
           .collect().map(_.getLong(0)).toSeq
+        val inTouched =
+          col("cell").isin(touched.map(java.lang.Long.valueOf): _*)
         // partition-dir inference reads `cell` back as INT — cast to
         // the assignment's LONG so union/replay rows stay identical
-        val standing =
-          if (!exists(spark, asgDir(outDir)))
-            spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
-              newAsg.schema)
-          else spark.read.parquet(asgDir(outDir))
-            .filter(col("cell").isin(touched.map(java.lang.Long.valueOf): _*))
-            .withColumn("cell", col("cell").cast(LongType))
-            .select(newAsg.columns.map(col): _*).distinct()
+        val standing = TwinLog.read(spark, asgDir(outDir), newAsg.schema)
+          .filter(inTouched)
+          .withColumn("cell", col("cell").cast(LongType))
         // the touched-cell slice of the corpus so far — a crashed
         // attempt's own rows fold in through the distinct, so replays
         // see the same population
@@ -161,99 +150,61 @@ object SemDedupStream {
         // append only what the log does not already hold (replay/torn-
         // write hygiene; correctness rests on the read-side distinct)
         val standingIds = standing.select(col(idCol))
-        newAsg.join(standingIds, Seq(idCol), "left_anti")
-          .withColumn("__batch", lit(batchId))
-          .write.mode("append").partitionBy("cell")
-          .parquet(asgDir(outDir))
-        val priorDropIds =
-          if (!exists(spark, dropDir(outDir))) standingIds.limit(0)
-          else spark.read.parquet(dropDir(outDir))
-            .filter(col("cell").isin(touched.map(java.lang.Long.valueOf): _*))
-            .select(col(idCol))
+        TwinLog.append(newAsg.join(standingIds, Seq(idCol), "left_anti"),
+          asgDir(outDir), batchId, partitionBy = Seq("cell"))
+        val priorDropIds = TwinLog.read(spark, dropDir(outDir), StructType(
+            Seq(newAsg.schema(idCol), StructField("cell", LongType))))
+          .filter(inTouched)
+          .select(col(idCol))
         val freshDrops = dropped.join(priorDropIds, Seq(idCol), "left_anti")
-          .withColumn("__batch", lit(batchId))
           .persist()
         // never create the drop log as a schemaless (rows-free) dir —
         // a fact-free epoch leaves no footprint at all
         if (!freshDrops.isEmpty)
-          freshDrops.write.mode("append").partitionBy("cell")
-            .parquet(dropDir(outDir))
+          TwinLog.append(freshDrops, dropDir(outDir), batchId,
+            partitionBy = Seq("cell"))
         freshDrops.unpersist()
         all.unpersist()
       }
       newAsg.unpersist()
       ()
     }
-    vectors.writeStream
-      .foreachBatch(step)
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .start()
   }
 
   /** The current resolution — batch [[Similarity.semDedup]]'s output
     * shape (idCol, cell, cscore, drop) over everything that has
     * arrived. Empty (correct schema) before the first commit. */
   def read(spark: SparkSession, outDir: String, idCol: String): DataFrame = {
-    if (!exists(spark, asgDir(outDir)))
-      return spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
-        StructType(Seq(StructField(idCol, LongType),
-          StructField("cell", LongType),
-          StructField("cscore", DoubleType),
-          StructField("drop", BooleanType))))
-    val asg = spark.read.parquet(asgDir(outDir))
-      .select(col(idCol), col("cell").cast(LongType).as("cell"),
-        col("cscore")).distinct()
-    val drops =
-      if (!exists(spark, dropDir(outDir)))
-        asg.select(col(idCol)).limit(0)
-      else spark.read.parquet(dropDir(outDir)).select(col(idCol)).distinct()
+    val id = StructField(idCol, LongType)
+    val asg = TwinLog.read(spark, asgDir(outDir), StructType(Seq(id,
+        StructField("cell", LongType), StructField("cscore", DoubleType))))
+      .withColumn("cell", col("cell").cast(LongType))
+    val drops = TwinLog.read(spark, dropDir(outDir), StructType(Seq(id)))
     asg.join(drops.withColumn("__drop", lit(true)), Seq(idCol), "left")
       .withColumn("drop", coalesce(col("__drop"), lit(false)))
       .drop("__drop")
   }
 
-  /** Fold both logs' accreted per-batch files back to distinct rows —
-    * sized to pre-compaction bytes, appended under a fresh generation
-    * BEFORE the superseded files are deleted (the DedupIndexStream
-    * order: a crash anywhere leaves duplicates the read-side distinct
-    * absorbs, never data loss). Returns files collected. */
+  /** The id column name is whatever the stream wrote — recovered from
+    * the log's columns (everything but the known ones). None before
+    * the first commit. */
+  private def idColOf(spark: SparkSession, dir: String): Option[String] =
+    TwinLog.columns(spark, dir).flatMap(
+      _.find(c => !Seq("cell", "cscore", "v", "nv").contains(c)))
+
+  /** Fold both logs' accreted per-batch files back to distinct rows
+    * through [[TwinLog.compact]], keeping the `cell` layout. Returns
+    * files collected. */
   def compactLogs(spark: SparkSession, outDir: String): Long = {
-    def one(dir: String, dataCols: Seq[String]): Long = {
-      if (!exists(spark, dir)) return 0L
-      val root = new Path(dir)
-      val f = fs(spark, root)
-      val it = f.listFiles(root, true)
-      val before = Iterator.continually(it)
-        .takeWhile(_.hasNext).map(_.next())
-        .filter(_.getPath.getName.endsWith(".parquet")).toSeq
-      if (before.isEmpty) return 0L
-      val log = spark.read.parquet(dir)
-      val gen = log.agg(max(col("__batch"))).head() match {
-        case r if r.isNullAt(0) => 1L
-        case r => r.getLong(0) + 1L
-      }
-      val nFiles = math.max(1L,
-        before.map(_.getLen).sum / CompactBytesPerFile).toInt
-      log.select((dataCols :+ "cell").map(col): _*).distinct()
-        .withColumn("__batch", lit(gen))
-        .repartition(nFiles, col("cell"))
-        .write.mode("append").partitionBy("cell").parquet(dir)
-      before.foreach(s => f.delete(s.getPath, false))
-      before.length.toLong
-    }
-    // the id column name is whatever the stream wrote — recover it
-    // from the file schema (everything except the known columns)
-    def idColOf(dir: String): Option[String] =
-      if (!exists(spark, dir)) None
-      else spark.read.parquet(dir).columns
-        .find(c => c != "cell" && c != "cscore" && c != "v" &&
-          c != "nv" && c != "__batch")
-    val a = idColOf(asgDir(outDir)).map(id =>
-      one(asgDir(outDir), Seq(id, "v", "nv", "cscore"))).getOrElse(0L)
-    val d = idColOf(dropDir(outDir)).map(id =>
-      one(dropDir(outDir), Seq(id))).getOrElse(0L)
-    a + d
+    def one(dir: String, dataCols: String => Seq[String]): Long =
+      idColOf(spark, dir).map { id =>
+        val cols = dataCols(id) :+ "cell"
+        TwinLog.compact(spark, dir, Seq("cell"), partitionBy = Seq("cell")) {
+          _.select(cols.map(col): _*).distinct()
+        }
+      }.getOrElse(0L)
+    one(asgDir(outDir), id => Seq(id, "v", "nv", "cscore")) +
+      one(dropDir(outDir), id => Seq(id))
   }
 
   /** Corpus growth beyond the size the model was trained on, in bp of
@@ -261,8 +212,9 @@ object SemDedupStream {
     * (the AnnIndexStream staleness convention). Exact under the
     * bootstrap-ingest deployment (the trained seed corpus itself
     * streams through as the early batches); a seed corpus that never
-    * streams makes this a conservative floor. One column-pruned count
-    * of the log, never a vector read. */
+    * streams makes this a conservative floor. One column-pruned
+    * distinct-id count of the log, never a vector read — so the
+    * duplicates a crashed compaction leaves behind do not count. */
   def staleness(spark: SparkSession, outDir: String,
       centDir: String): Long = {
     val side = trainSidecar(centDir)
@@ -272,9 +224,9 @@ object SemDedupStream {
     val nTrain =
       try new String(in.readAllBytes(), "UTF-8").trim.toLong
       finally in.close()
-    val nAsg =
-      if (!exists(spark, asgDir(outDir))) 0L
-      else spark.read.parquet(asgDir(outDir)).select("__batch").count()
+    val nAsg = idColOf(spark, asgDir(outDir)).map(id =>
+      TwinLog.read(spark, asgDir(outDir),
+        StructType(Seq(StructField(id, LongType)))).count()).getOrElse(0L)
     if (nAsg == 0L) 0L else math.max(0L, nAsg - nTrain) * 10000L / nAsg
   }
 }

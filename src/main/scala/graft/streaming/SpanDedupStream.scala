@@ -1,7 +1,6 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
@@ -31,7 +30,7 @@ import graft.operators.C4Rules
   *     carry content, not hashes) and [[compactLogs]] migrates the
   *     span log to the current scheme.
   * Both are SET-FACT logs (the [[DedupIndexStream]] family, not
-  * [[AdditiveLog]] counts): every row is a deterministic function of
+  * [[TwinLog.merged]] counts): every row is a deterministic function of
   * its document alone, so the merge law holds trivially (multi-epoch
   * union == single-epoch union), an at-least-once replay re-appends
   * identical rows the reader's distinct absorbs, and an empty batch
@@ -55,18 +54,11 @@ import graft.operators.C4Rules
   * operator runs ([[C4Rules.rebuiltTextFrom]] — hashes travel, never
   * span text) and (b) reassembles only documents that actually lost
   * a span (the untouched-bypass shape). Compaction rewrites both
-  * logs to distinct rows, file count scaled to input bytes. */
+  * logs to distinct rows ([[TwinLog.compact]]). */
 object SpanDedupStream {
 
   def pageDir(outDir: String): String = outDir + "_c4pages"
   def spanDir(outDir: String): String = outDir + "_c4spans"
-
-  private val CompactBytesPerFile = 128L << 20
-
-  private def exists(spark: SparkSession, dir: String): Boolean = {
-    val p = new Path(dir)
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-  }
 
   private def pageSchema: StructType = StructType(Seq(
     StructField("doc_id", LongType),
@@ -75,9 +67,6 @@ object SpanDedupStream {
     StructField("doc_id", LongType),
     StructField("spos", LongType),
     StructField("sh", LongType)))
-
-  private def emptyDf(spark: SparkSession, schema: StructType): DataFrame =
-    spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
 
   /** Start the maintainer: per micro-batch, segment the batch's
     * documents (C4 line + page rules), append the surviving pages and
@@ -88,32 +77,23 @@ object SpanDedupStream {
       require(docs.columns.contains(c),
         s"SpanDedupStream needs a '$c' column; stream has " +
           docs.columns.mkString("[", ", ", "]")))
-    val step: (Dataset[Row], Long) => Unit = { (batch, batchId) =>
+    TwinLog.foreachEpoch(docs, checkpointDir, trigger) { (batch, batchId) =>
       // persisted: the page frame feeds both appends; freed before the
       // batch returns (per-batch grain, never session-lifetime)
-      val pg = C4Rules.pageRows(batch.toDF(), "doc_id", "text").persist()
+      val pg = C4Rules.pageRows(batch, "doc_id", "text").persist()
       try {
-        pg.withColumn("__batch", lit(batchId))
-          .write.mode("append").parquet(pageDir(outDir))
-        C4Rules.spansOf(pg, "doc_id")
-          .withColumn("__batch", lit(batchId))
-          .withColumn("__hv", lit(C4Rules.SpanHashVersion))
-          .write.mode("append").parquet(spanDir(outDir))
+        TwinLog.append(pg, pageDir(outDir), batchId)
+        TwinLog.append(C4Rules.spansOf(pg, "doc_id")
+          .withColumn("__hv", lit(C4Rules.SpanHashVersion)),
+          spanDir(outDir), batchId)
       } finally { pg.unpersist(); () }
     }
-    docs.writeStream
-      .foreachBatch(step)
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .start()
   }
 
   /** The standing page log, replay-collapsed. Empty (correct schema)
     * before the first commit. */
   def pages(spark: SparkSession, outDir: String): DataFrame =
-    if (!exists(spark, pageDir(outDir))) emptyDf(spark, pageSchema)
-    else spark.read.parquet(pageDir(outDir))
-      .select(col("doc_id"), col("kept")).distinct()
+    TwinLog.read(spark, pageDir(outDir), pageSchema)
 
   /** True iff every standing span-log row was hashed under the
     * CURRENT scheme ([[C4Rules.SpanHashVersion]]). A log from before
@@ -122,15 +102,13 @@ object SpanDedupStream {
     * reads surface foreign rows as NULL `__hv`) — both must not be
     * folded as-is. The check prunes to the one stamp column (footer
     * schema + a min over `__hv`), never the hashes themselves. */
-  private def spanLogCurrent(spark: SparkSession, outDir: String): Boolean = {
-    val raw = spark.read.parquet(spanDir(outDir))
+  private def spanLogCurrent(raw: DataFrame): Boolean =
     raw.columns.contains("__hv") && {
       raw.agg(min(coalesce(col("__hv"), lit(0L)))).head() match {
         case r if r.isNullAt(0) => true // zero-row log: nothing foreign
         case r => r.getLong(0) == C4Rules.SpanHashVersion
       }
     }
-  }
 
   /** The standing span log, replay-collapsed. When the log is not
     * entirely at the current hash scheme, spans are re-derived from
@@ -139,10 +117,9 @@ object SpanDedupStream {
     * log's documents because pages append first). One-time cost until
     * [[compactLogs]] migrates the log. */
   def spanLog(spark: SparkSession, outDir: String): DataFrame =
-    if (!exists(spark, spanDir(outDir))) emptyDf(spark, spanSchema)
-    else if (spanLogCurrent(spark, outDir))
-      spark.read.parquet(spanDir(outDir))
-        .select(col("doc_id"), col("spos"), col("sh")).distinct()
+    if (!TwinLog.exists(spark, spanDir(outDir)) ||
+        spanLogCurrent(spark.read.parquet(spanDir(outDir))))
+      TwinLog.read(spark, spanDir(outDir), spanSchema)
     else {
       org.slf4j.LoggerFactory.getLogger(getClass).warn(
         s"span log at ${spanDir(outDir)} predates hash scheme " +
@@ -174,44 +151,14 @@ object SpanDedupStream {
     * from the page log under [[C4Rules.SpanHashVersion]] (the one
     * sanctioned re-hash — compaction is already a full-log rewrite;
     * reads stay hash-only). Returns files collected. */
-  def compactLogs(spark: SparkSession, outDir: String): Long = {
-    val pagesCollected =
-      compactOne(spark, pageDir(outDir),
-        spark.read.parquet(pageDir(outDir))
-          .select(col("doc_id"), col("kept")).distinct())
-    val spansCollected =
-      if (!exists(spark, spanDir(outDir))) 0L
-      else if (spanLogCurrent(spark, outDir))
-        compactOne(spark, spanDir(outDir),
-          spark.read.parquet(spanDir(outDir))
-            .select(col("doc_id"), col("spos"), col("sh")).distinct()
-            .withColumn("__hv", lit(C4Rules.SpanHashVersion)))
-      else
-        compactOne(spark, spanDir(outDir),
-          C4Rules.spansOf(pages(spark, outDir), "doc_id")
-            .withColumn("__hv", lit(C4Rules.SpanHashVersion)))
-    pagesCollected + spansCollected
-  }
-
-  private def compactOne(spark: SparkSession, dir: String,
-      rows: => DataFrame): Long = {
-    if (!exists(spark, dir)) return 0L
-    val p = new Path(dir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val before = fs.listStatus(p).filter(_.getPath.getName.endsWith(".parquet"))
-    if (before.isEmpty) return 0L
-    val gen = spark.read.parquet(dir)
-      .agg(max(col("__batch"))).head() match {
-        case r if r.isNullAt(0) => 1L
-        case r => r.getLong(0) + 1L
-      }
-    val nFiles = math.max(1L,
-      before.map(_.getLen).sum / CompactBytesPerFile).toInt
-    rows
-      .withColumn("__batch", lit(gen))
-      .repartition(nFiles, col("doc_id"))
-      .write.mode("append").parquet(dir)
-    before.foreach(f => fs.delete(f.getPath, false))
-    before.length.toLong
-  }
+  def compactLogs(spark: SparkSession, outDir: String): Long =
+    TwinLog.compact(spark, pageDir(outDir), Seq("doc_id")) {
+      _.select(col("doc_id"), col("kept")).distinct()
+    } + TwinLog.compact(spark, spanDir(outDir), Seq("doc_id")) { log =>
+      val spans =
+        if (spanLogCurrent(log))
+          log.select(col("doc_id"), col("spos"), col("sh")).distinct()
+        else C4Rules.spansOf(pages(spark, outDir), "doc_id")
+      spans.withColumn("__hv", lit(C4Rules.SpanHashVersion))
+    }
 }

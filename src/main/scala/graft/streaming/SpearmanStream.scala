@@ -25,7 +25,7 @@ import graft.operators.SpearmanHist
   *
   * The log mechanics (replay idempotence, snapshot compaction safe
   * under crashes and concurrent streams, empty-before-first-commit
-  * reads) are [[AdditiveLog]]'s — this object binds them to
+  * reads) are [[TwinLog]]'s — this object binds them to
   * [[SpearmanHist.cells]]'s keys (source, xb, yb) and sum (cnt). */
 object SpearmanStream {
 
@@ -47,21 +47,21 @@ object SpearmanStream {
     * (source, xb, yb) cell counts tagged with the epoch id. */
   def start(docs: DataFrame, outDir: String, checkpointDir: String,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    AdditiveLog.start(docs, SpearmanHist.cells, logDir(outDir),
-      checkpointDir, trigger)
+    TwinLog.start(docs, checkpointDir, trigger, additive = true)(
+      (SpearmanHist.cells(_), logDir(outDir)))
 
   /** Current rank correlations: merge the live cells by addition,
     * finish with the exact midrank/moment pass. Reads the log only —
     * bounded by batches x bucket support, never the corpus. */
   def rho(spark: SparkSession, outDir: String): DataFrame =
-    SpearmanHist.rho(AdditiveLog.merged(spark, logDir(outDir),
+    SpearmanHist.rho(TwinLog.merged(spark, logDir(outDir),
       summarySchema(spark), Seq("source", "xb", "yb"), Seq("cnt")))
 
   /** Fold the fully-committed prefix of the log into one snapshot,
     * then garbage-collect the superseded files. Returns the number of
     * files collected. Safe concurrently with a running stream —
-    * [[AdditiveLog.compactLog]]. */
+    * [[TwinLog.compactAdditive]]. */
   def compactLog(spark: SparkSession, outDir: String): Long =
-    AdditiveLog.compactLog(spark, logDir(outDir), summarySchema(spark),
+    TwinLog.compactAdditive(spark, logDir(outDir),
       Seq("source", "xb", "yb"), Seq("cnt"))
 }

@@ -21,7 +21,7 @@ import graft.operators.Bpe
   * multi-epoch ingest agree and the merge law holds. Each micro-batch
   * runs [[Bpe.tokenStats]] — the SAME statement q286 oracles — over
   * its own rows plus a per-source doc count, and appends additive
-  * (n_docs, n_words, n_tokens) deltas on [[AdditiveLog]]'s protocol.
+  * (n_docs, n_words, n_tokens) deltas on [[TwinLog]]'s additive protocol.
   * The non-additive tokens_per_word_bp derives at READ time from the
   * merged counts through q286's exact integer arithmetic.
   *
@@ -71,15 +71,15 @@ object TokenBudgetStream {
       s"merge table $mergesTable must be trained (Bpe.saveMerges) " +
         "before the monitor starts")
     val merges = Bpe.loadMerges(spark, mergesTable)
-    AdditiveLog.start(docs, summary(merges),
-      logDir(outDir), checkpointDir, trigger)
+    TwinLog.start(docs, checkpointDir, trigger, additive = true)(
+      (summary(merges), logDir(outDir)))
   }
 
   /** The current budget table — merged per-source counts with q286's
     * derived tokens-per-word rate. Empty (correct schema) before the
     * first commit. */
   def budget(spark: SparkSession, outDir: String): DataFrame =
-    AdditiveLog.merged(spark, logDir(outDir), summarySchema,
+    TwinLog.merged(spark, logDir(outDir), summarySchema,
       Seq("source"), CountCols)
       // nullif: a source whose only documents carry NULL text counts
       // docs but prices no words — its rate is UNKNOWN (NULL), never a
@@ -87,9 +87,9 @@ object TokenBudgetStream {
       .withColumn("tokens_per_word_bp",
         expr("n_tokens * 10000 div nullif(n_words, 0)"))
 
-  /** Fold the committed prefix into one snapshot (the AdditiveLog
-    * compaction contract); returns files collected. */
+  /** Fold the committed prefix into one snapshot (the TwinLog
+    * additive compaction contract); returns files collected. */
   def compactLog(spark: SparkSession, outDir: String): Long =
-    AdditiveLog.compactLog(spark, logDir(outDir), summarySchema,
-      Seq("source"), CountCols)
+    TwinLog.compactAdditive(spark, logDir(outDir), Seq("source"),
+      CountCols)
 }

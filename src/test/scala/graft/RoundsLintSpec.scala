@@ -13,18 +13,23 @@ import org.scalatest.funsuite.AnyFunSuite
   * three ways round state used to be materialized by hand. Building a
   * frame from a computed RDD (`createDataFrame(rdd.mapPartitions...)`)
   * is an algorithm, not a cut, and stays allowed. Outside
-  * `graft/Harness.scala`, no main source may build a SparkSession. */
+  * `graft/Harness.scala`, no main source may build a SparkSession.
+  * Outside `graft/streaming/TwinLog.scala`, no main source may name a
+  * twin log's tag columns `__batch` or `__covers`. */
 class RoundsLintSpec extends AnyFunSuite {
 
   private val rounds = "graft/operators/Rounds.scala"
   private val harness = "graft/Harness.scala"
+  private val twinLog = "graft/streaming/TwinLog.scala"
 
   /** (pattern, the only main source allowed to contain it) */
   private val rules = Seq(
     "localCheckpoint".r -> rounds,
     """\.checkpoint\(""".r -> rounds,
     """createDataFrame\(\s*[\w.]+\.rdd\b""".r -> rounds,
-    """SparkSession\.builder\(""".r -> harness)
+    """SparkSession\.builder\(""".r -> harness,
+    "__batch".r -> twinLog,
+    "__covers".r -> twinLog)
 
   private val root = Paths.get("src/main/scala")
 
@@ -34,6 +39,10 @@ class RoundsLintSpec extends AnyFunSuite {
 
   test("sessions are built only in Harness.scala") {
     assertOwned(harness, "build sessions with graft.Harness.session instead")
+  }
+
+  test("twin log columns appear only in TwinLog.scala") {
+    assertOwned(twinLog, "read and write twin logs through TwinLog instead")
   }
 
   private def assertOwned(owner: String, fix: String): Unit = {

@@ -14,7 +14,7 @@ import graft.SparkSpec
   * merged logs must equal the from-first-principles reference trained
   * on exactly those documents — with arriving batches exercising every
   * backoff level including out-of-vocabulary. Replay and crash between
-  * ANY pair of the three appends ride [[AdditiveLog]]'s idempotence
+  * ANY pair of the three appends ride [[TwinLog]]'s idempotence
   * protocol. */
 class BackoffLmStreamSpec extends SparkSpec {
   import spark.implicits._

@@ -14,7 +14,7 @@ import graft.operators.Cusum
   * stream, merging the logged (type, day) cent-sum deltas and running
   * the exact integer argmax must equal batch q256 over every event
   * seen — and because the summary is ADDITIVE, replay and crashed
-  * compaction must not double-count (the AdditiveLog protocol, proven
+  * compaction must not double-count (the TwinLog protocol, proven
   * here on its second binding). */
 class CusumStreamSpec extends SparkSpec {
   import spark.implicits._

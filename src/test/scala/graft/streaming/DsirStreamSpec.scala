@@ -16,7 +16,7 @@ import graft.functions.Portable
   * counts come from exactly those documents — and scoring documents
   * whose buckets the model has NEVER seen must take the fully smoothed
   * ct = cr = 0 default. Replay and crash-between-the-two-appends ride
-  * [[AdditiveLog]]'s idempotence protocol. */
+  * [[TwinLog]]'s idempotence protocol. */
 class DsirStreamSpec extends SparkSpec {
   import spark.implicits._
 

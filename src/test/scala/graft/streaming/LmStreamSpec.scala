@@ -15,7 +15,7 @@ import graft.SparkSpec
   * exactly those documents — and scoring a NEVER-SEEN batch must take
   * the Laplace-smoothed path (c12 = 0, possibly c1 = 0) the batch
   * query's self-trained inner joins never exercise. Replay and
-  * crash-between-the-two-appends cases ride [[AdditiveLog]]'s
+  * crash-between-the-two-appends cases ride [[TwinLog]]'s
   * idempotence protocol. */
 class LmStreamSpec extends SparkSpec {
   import spark.implicits._

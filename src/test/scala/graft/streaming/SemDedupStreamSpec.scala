@@ -121,6 +121,33 @@ class SemDedupStreamSpec extends SparkSpec {
     assert(SemDedupStream.staleness(spark, out, cents) == 5000L)
   }
 
+  test("staleness counts distinct ids: a compaction that crashed after " +
+      "landing its new generation does not move it") {
+    val root = Files.createTempDirectory("semdedup-stale-crash")
+    Files.createDirectories(root.resolve("in"))
+    val cents = root.resolve("cents").toString
+    val out = root.resolve("out").toString
+    val cp = root.resolve("cp").toString
+    SemDedupStream.train(spark, toDf(seed), "vec_id", "embedding",
+      nCells = 3, trainIters = 1, dim = 4, centDir = cents)
+    stage(root, "a", b1)
+    runOnce(root, cents, out, cp)
+    stage(root, "b", b2)
+    runOnce(root, cents, out, cp)
+    assert(SemDedupStream.staleness(spark, out, cents) == 5000L)
+    val before = streamed(out)
+
+    // the crash: compactLogs' folded generation lands, its delete of
+    // the superseded files never runs
+    val asg = SemDedupStream.asgDir(out)
+    spark.read.parquet(asg).drop("__batch").distinct()
+      .withColumn("__batch", lit(2L))
+      .write.mode("append").partitionBy("cell").parquet(asg)
+    assert(SemDedupStream.staleness(spark, out, cents) == 5000L,
+      "duplicate assignment rows from a crashed compaction were counted")
+    assert(streamed(out) == before, "the crashed compaction moved the read")
+  }
+
   test("logs are partitioned by cell (standing reads prune to the " +
       "touched cells) and compaction folds them without moving the " +
       "read; post-compaction batches still land") {

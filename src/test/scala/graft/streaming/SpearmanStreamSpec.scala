@@ -16,7 +16,7 @@ import graft.operators.SpearmanHist
   * batch q259 over every document seen — the rank-statistic case the
   * additive protocol only reaches BECAUSE the statistic coarsens to a
   * histogram first (ranks do not merge; the histogram they are
-  * computed from does). Replay idempotence rides the AdditiveLog
+  * computed from does). Replay idempotence rides the TwinLog
   * protocol, proven here on its third binding. */
 class SpearmanStreamSpec extends SparkSpec {
   import spark.implicits._

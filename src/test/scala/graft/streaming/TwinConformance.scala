@@ -12,7 +12,7 @@ import graft.SparkSpec
 
 /** Shared conformance harness for the LOG-TWIN family — every
   * streaming twin whose state is an append-only parquet log with a
-  * read-time fold (AdditiveLog counts, order-statistic summaries, set
+  * read-time fold (TwinLog additive counts, order-statistic summaries, set
   * facts, result rows). Each twin declares its stream in ~15 lines (a
   * [[TwinFixture]]) and the harness proves the THREE operational
   * properties every such twin owes, uniformly:

@@ -37,7 +37,7 @@ class TwinConformanceSpec extends SparkSpec with TwinConformance {
       .select(col("event_id"), to_timestamp(col("tss")).as("ts"),
         col("event_type"), col("value"))
 
-  // ---- AdditiveLog count twins -------------------------------------
+  // ---- TwinLog additive count twins ----------------------------
 
   twinConformance("drift-monitor") {
     TwinFixture(

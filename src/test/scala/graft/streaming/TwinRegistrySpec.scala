@@ -21,7 +21,7 @@ class TwinRegistrySpec extends AnyFunSuite {
 
   // protocol/infra files that are deliberately not twins themselves
   private val Infra = Set(
-    "AdditiveLog", // the shared log protocol every count twin rides
+    "TwinLog", // the shared log protocol every log twin rides
     "TwinRegistry" // this matrix
   )
 
