@@ -1,6 +1,6 @@
 package graft.edinet
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -28,16 +28,20 @@ object BestFile {
     * dropped with the same silent-skip semantics as the reference's
     * regex guard (src/transform.py:127-131). */
   def parseManifest(files: DataFrame, pathCol: String = "path"): DataFrame = {
-    val fname = element_at(split(col(pathCol), "/"), -1)
+    val path = col(pathCol)
     files
-      .withColumn("fname", fname)
-      .withColumn("edinet_code", concat(lit("E"), regexp_extract(col("fname"), FilenamePattern, 1)))
-      .withColumn("submit_ymd", regexp_extract(col("fname"), FilenamePattern, 2))
-      .withColumn("doc_type", regexp_extract(col("fname"), FilenamePattern, 3))
-      .withColumn("fmt", regexp_extract(col("fname"), FilenamePattern, 4))
+      .withColumn("edinet_code", edinetCode(path))
+      .withColumn("submit_ymd", nameField(path, 2))
+      .withColumn("doc_type", nameField(path, 3))
+      .withColumn("fmt", nameField(path, 4))
       .filter(col("doc_type") =!= "") // non-matching filenames skipped
-      .drop("fname")
   }
+
+  /** The company code in the filename at the end of `path`. */
+  def edinetCode(path: Column): Column = concat(lit("E"), nameField(path, 1))
+
+  private def nameField(path: Column, group: Int): Column =
+    regexp_extract(element_at(split(path, "/"), -1), FilenamePattern, group)
 
   /** Top-1-per-company: corrected (130) wins; among 130s the last
     * ingest seq wins (every 130 overwrites), among plain filings the

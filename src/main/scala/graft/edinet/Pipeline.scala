@@ -1,5 +1,9 @@
 package graft.edinet
 
+import java.io.{BufferedReader, InputStreamReader}
+import java.nio.charset.StandardCharsets
+
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -9,23 +13,37 @@ import Model._
 object Sink {
 
   /** Write the final frame as a single UTF-8 headered CSV under
-    * `outDir/fileName`. Returns false (and writes nothing) on empty
-    * input — the reference's empty-pipeline guard (src/load.py:20-22,
-    * main.py:33-35). `coalesce(1)` mirrors the reference's
-    * one-output-file contract. */
+    * `outDir/fileName`. Returns false on empty input and leaves any
+    * earlier output there untouched — the reference's empty-pipeline
+    * guard (src/load.py:20-22, main.py:33-35).
+    *
+    * One Spark job: the frame is written once, as `repartition(1)` (the
+    * reference's one-output-file contract), into a staging dir next to
+    * the destination; emptiness is read from the staged file's first
+    * two lines on the driver, so there is no probe job and no cache.
+    * `coalesce(1)` would instead pull the whole upstream stage into the
+    * one writing task. */
   def writeCsv(df: DataFrame, outDir: String, fileName: String): Boolean = {
-    // persist around the guard: isEmpty is an action, and without the
-    // cache the whole parse/transform plan would execute twice (once for
-    // the probe, once for the write)
-    val cached = df.persist()
-    try {
-      if (cached.isEmpty) false
-      else {
-        cached.coalesce(1).write.mode("overwrite").option("header", "true")
-          .csv(s"$outDir/$fileName")
-        true
+    val out = new Path(outDir)
+    val dest = new Path(out, fileName)
+    val staging = new Path(out, s".$fileName.staging")
+    val fs = out.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
+    val outExisted = fs.exists(out)
+    df.repartition(1).write.mode("overwrite").option("header", "true")
+      .csv(staging.toString)
+    val hasRow = fs.listStatus(staging).exists { f =>
+      f.getPath.getName.startsWith("part-") && {
+        val in = new BufferedReader(
+          new InputStreamReader(fs.open(f.getPath), StandardCharsets.UTF_8))
+        try { in.readLine(); in.readLine() != null } finally in.close()
       }
-    } finally cached.unpersist()
+    }
+    if (hasRow) {
+      fs.delete(dest, true)
+      if (!fs.rename(staging, dest))
+        throw new java.io.IOException(s"could not move $staging to $dest")
+    } else fs.delete(if (outExisted) staging else out, true)
+    hasRow
   }
 }
 
@@ -34,8 +52,8 @@ object Sink {
   * against recorded fixtures; there is no egress in this environment).
   *
   * main.py:13-40 becomes one declarative plan:
-  *   company master -> best-file manifest -> per-format statement parse
-  *   -> union -> revenue transform -> guarded sink.
+  *   company master -> best-file manifest -> format-dispatching statement
+  *   parse -> revenue transform -> guarded sink.
   */
 object Pipeline {
 
@@ -47,6 +65,10 @@ object Pipeline {
     Sink.writeCsv(result, outDir, "japan_company_data")
   }
 
+  /** Builds the plan without running a Spark job. `filesDir` is loaded
+    * as one root path, so the driver lists it with one call; a glob over
+    * its files would expand to one root per file and, past Spark's
+    * parallel-discovery threshold, list them in a job of its own. */
   def transform(spark: SparkSession, masterCsv: String, filesDir: String): DataFrame = {
     val companies = CompanyMaster.load(spark, masterCsv)
 
@@ -57,9 +79,7 @@ object Pipeline {
     // (submit_ymd, fmt) ordering IS filename ordering — so a
     // hundred-million-file manifest needs no global single-partition
     // window sort.
-    val bin = spark.read.format("binaryFile")
-      .load(s"$filesDir/*")
-      .select(col("path"), col("content"))
+    val bin = spark.read.format("binaryFile").load(filesDir)
     val manifest = BestFile.parseManifest(bin.select(col("path")))
       .withColumn("seq",
         col("submit_ymd").cast("long") * 2 + (col("fmt") === "xbrl").cast("long"))
@@ -69,24 +89,16 @@ object Pipeline {
       .filter(col("doc_type").isin(targetDocTypes: _*))
     val best = BestFile.bestPerCompany(manifest)
 
-    // Parse only the winners (dedup-before-parse, SURVEY §4): semi-join
-    // the binary source against the selected manifest, then branch by
-    // format. The manifest is tiny -> broadcast semi-join.
-    val winners = bin.join(
-      broadcast(best.select(col("path"), col("fmt"), col("edinet_code"))),
-      Seq("path"))
-    val csvRows = StatementSources.parseCsvBytes(
-      spark, winners.filter(col("fmt") === "csv").select("path", "content"))
-    val xbrlRows = StatementSources.parseXbrlBytes(
-      spark, winners.filter(col("fmt") === "xbrl").select("path", "content"))
-    val stmts = csvRows.unionByName(xbrlRows)
+    // Parse only the winners (dedup-before-parse, SURVEY §4): one scan of
+    // the landed bytes, semi-joined against the one broadcast manifest
+    // (tiny), then one parse that dispatches on each winner's format.
+    val winners = bin.select(col("path"), col("content"))
+      .join(broadcast(best.select(col("path"), col("fmt"))), Seq("path"))
+    // edinet_code from the filename, as the manifest derived it
+    // (filename-as-metadata, SURVEY §1.1)
+    val stmts = StatementSources.parse(winners)
+      .withColumn("edinet_code", BestFile.edinetCode(col("file")))
 
-    // Attach edinet_code from the manifest (filename-as-metadata becomes
-    // a manifest column, SURVEY §1.1).
-    val withCode = stmts.join(
-      broadcast(best.select(col("path").as("file"), col("edinet_code"))),
-      Seq("file"))
-
-    RevenueTransform(withCode, companies)
+    RevenueTransform(stmts, companies)
   }
 }

@@ -60,7 +60,7 @@ object RevenueTransform {
     * values are SKIPPED via try_cast (src/transform.py:196-202).
     * The unit column passes through untouched: the reference's JPY
     * default is an XBRL-parse concern (src/transform.py:64, applied in
-    * [[StatementSources.parseXbrlBytes]]); a CSV row with a missing
+    * [[StatementSources.xbrlRows]]); a CSV row with a missing
     * ユニットID keeps its null, as in the reference. */
   def normalize(series: DataFrame): DataFrame = normalize(series, None)
 

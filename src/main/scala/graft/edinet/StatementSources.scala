@@ -2,11 +2,12 @@ package graft.edinet
 
 import java.io.ByteArrayInputStream
 import java.nio.charset.Charset
+import javax.xml.stream.{XMLInputFactory, XMLStreamConstants}
 
 import scala.collection.mutable.ArrayBuffer
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.catalyst.encoders.{ExpressionEncoder, RowEncoder}
+import org.apache.spark.sql.catalyst.encoders.RowEncoder
 import org.apache.spark.sql.functions._
 
 import Model._
@@ -27,48 +28,65 @@ object StatementSources {
 
   private val stmtEncoder = RowEncoder.encoderFor(statementSchema)
 
-  /** S2: UTF-16 tab-separated statement CSV (reference
-    * src/transform.py:77-106). Emits one row per line with row_idx
-    * (0-based, header excluded — matching pandas' integer index). */
-  def readCsv(spark: SparkSession, pathGlob: String): DataFrame = {
-    val bin = spark.read.format("binaryFile").load(pathGlob)
-      .select(col("path"), col("content"))
-    parseCsvBytes(spark, bin)
-  }
-
-  /** Parse (path, content) rows of UTF-16 TSV bytes into statement rows. */
-  def parseCsvBytes(spark: SparkSession, bin: DataFrame): DataFrame = {
-    val parsed = bin.mapPartitions { it =>
+  /** Parse (path, content, fmt) rows into statement rows, one file at a
+    * time: `fmt` "csv" goes to [[csvRows]], "xbrl" to [[xbrlRows]], any
+    * other value emits nothing. One pass serves both formats, so a mixed
+    * landing directory is scanned once. */
+  def parse(files: DataFrame): DataFrame =
+    files.select(col("path"), col("content"), col("fmt")).mapPartitions { it =>
+      // DTDs and external entities off: landed filings are untrusted input
+      lazy val factory = {
+        val f = XMLInputFactory.newInstance()
+        f.setProperty(XMLInputFactory.SUPPORT_DTD, false)
+        f.setProperty(XMLInputFactory.IS_SUPPORTING_EXTERNAL_ENTITIES, false)
+        f
+      }
       it.flatMap { r =>
         val path = r.getString(0)
         val bytes = r.getAs[Array[Byte]](1)
-        try {
-          // Charset "UTF-16" honors the BOM (the reference files carry one).
-          val text = new String(bytes, Charset.forName("UTF-16"))
-          val lines = text.split("\r\n|\r|\n").iterator.filter(_.nonEmpty)
-          if (!lines.hasNext) Iterator.empty
-          else {
-            val header = lines.next().split("\t", -1).map(_.trim)
-            val idx = Map(
-              StmtCols.ElementId -> header.indexOf(StmtCols.ElementId),
-              StmtCols.ContextId -> header.indexOf(StmtCols.ContextId),
-              StmtCols.UnitId -> header.indexOf(StmtCols.UnitId),
-              StmtCols.Value -> header.indexOf(StmtCols.Value))
-            if (idx.values.exists(_ < 0)) Iterator.empty // malformed: skip file
-            else lines.zipWithIndex.map { case (line, i) =>
-              val f = line.split("\t", -1)
-              def get(c: String): String = {
-                val j = idx(c); if (j < f.length) f(j) else null
-              }
-              Row(path, i.toLong, get(StmtCols.ElementId), get(StmtCols.ContextId),
-                get(StmtCols.UnitId), get(StmtCols.Value))
-            }
-          }
-        } catch { case _: Exception => Iterator.empty } // bad encoding: skip file
+        r.getString(2) match {
+          case "csv" => csvRows(path, bytes)
+          case "xbrl" => xbrlRows(factory, path, bytes)
+          case _ => Iterator.empty
+        }
       }
     }(stmtEncoder)
-    parsed
-  }
+
+  /** S2 over every file matching `pathGlob`, read as statement CSV. */
+  def readCsv(spark: SparkSession, pathGlob: String): DataFrame =
+    parse(spark.read.format("binaryFile").load(pathGlob).withColumn("fmt", lit("csv")))
+
+  /** S3 over every file matching `pathGlob`, read as XBRL. */
+  def readXbrl(spark: SparkSession, pathGlob: String): DataFrame =
+    parse(spark.read.format("binaryFile").load(pathGlob).withColumn("fmt", lit("xbrl")))
+
+  /** S2: UTF-16 tab-separated statement CSV (reference
+    * src/transform.py:77-106). Emits one row per line with row_idx
+    * (0-based, header excluded — matching pandas' integer index). */
+  private def csvRows(path: String, bytes: Array[Byte]): Iterator[Row] =
+    try {
+      // Charset "UTF-16" honors the BOM (the reference files carry one).
+      val text = new String(bytes, Charset.forName("UTF-16"))
+      val lines = text.split("\r\n|\r|\n").iterator.filter(_.nonEmpty)
+      if (!lines.hasNext) Iterator.empty
+      else {
+        val header = lines.next().split("\t", -1).map(_.trim)
+        val idx = Map(
+          StmtCols.ElementId -> header.indexOf(StmtCols.ElementId),
+          StmtCols.ContextId -> header.indexOf(StmtCols.ContextId),
+          StmtCols.UnitId -> header.indexOf(StmtCols.UnitId),
+          StmtCols.Value -> header.indexOf(StmtCols.Value))
+        if (idx.values.exists(_ < 0)) Iterator.empty // malformed: skip file
+        else lines.zipWithIndex.map { case (line, i) =>
+          val f = line.split("\t", -1)
+          def get(c: String): String = {
+            val j = idx(c); if (j < f.length) f(j) else null
+          }
+          Row(path, i.toLong, get(StmtCols.ElementId), get(StmtCols.ContextId),
+            get(StmtCols.UnitId), get(StmtCols.Value))
+        }
+      }
+    } catch { case _: Exception => Iterator.empty } // bad encoding: skip file
 
   /** S3: XBRL instance documents (reference src/transform.py:11-74).
     * StAX streaming parse in document order; emits the same statement
@@ -90,82 +108,65 @@ object StatementSources {
     *    element, which reproduces the CSV path's "element at row 1
     *    selects the series".
     */
-  def readXbrl(spark: SparkSession, pathGlob: String): DataFrame = {
-    val bin = spark.read.format("binaryFile").load(pathGlob)
-      .select(col("path"), col("content"))
-    parseXbrlBytes(spark, bin)
-  }
-
-  def parseXbrlBytes(spark: SparkSession, bin: DataFrame): DataFrame = {
-    val parsed = bin.mapPartitions { it =>
-      val factory = javax.xml.stream.XMLInputFactory.newInstance()
-      factory.setProperty(javax.xml.stream.XMLInputFactory.SUPPORT_DTD, false)
-      factory.setProperty(javax.xml.stream.XMLInputFactory.IS_SUPPORTING_EXTERNAL_ENTITIES, false)
-      it.flatMap { r =>
-        val path = r.getString(0)
-        val bytes = r.getAs[Array[Byte]](1)
-        try {
-          // Tracked element: text frozen at first child (ElementTree
-          // `.text` semantics); kind 0 = fiscal-date, 1 = revenue window.
-          final class Tracked(val kind: Int, val local: String,
-              val ctx: String, val unit: String) {
-            val text = new StringBuilder
-            var childSeen = false
-          }
-          val reader = factory.createXMLStreamReader(new ByteArrayInputStream(bytes))
-          val facts = ArrayBuffer.empty[Tracked]   // in pre-order start order
-          var stack = List.empty[Tracked]          // null entry = untracked
-          var afterMarker = false
-          var windowLeft = 0
-          while (reader.hasNext) {
-            reader.next() match {
-              case javax.xml.stream.XMLStreamConstants.START_ELEMENT =>
-                stack.headOption.foreach(t => if (t != null) t.childSeen = true)
-                val local = reader.getLocalName
-                val ctx = Option(reader.getAttributeValue(null, "contextRef")).orNull
-                val unit = Option(reader.getAttributeValue(null, "unitRef")).orNull
-                val tracked: Tracked =
-                  if (local.endsWith("CurrentPeriodEndDateDEI"))
-                    new Tracked(0, local, ctx, unit)
-                  else if (afterMarker && windowLeft > 0) {
-                    windowLeft -= 1 // every element consumes a slot
-                    new Tracked(1, local, ctx, unit)
-                  } else if (!afterMarker && local.contains("NumberOfSubmissionDEI")) {
-                    afterMarker = true; windowLeft = 5; null
-                  } else null
-                if (tracked != null) facts += tracked
-                stack = tracked :: stack
-              case javax.xml.stream.XMLStreamConstants.CHARACTERS =>
-                stack.headOption.foreach { t =>
-                  if (t != null && !t.childSeen) t.text.append(reader.getText)
-                }
-              case javax.xml.stream.XMLStreamConstants.END_ELEMENT =>
-                if (stack.nonEmpty) stack = stack.tail
-              case _ => ()
-            }
-          }
-          reader.close()
-          val out = ArrayBuffer.empty[Row]
-          var rowIdx = 0L
-          var revenueElementId: String = null
-          facts.foreach { t =>
-            val raw = t.text.toString
-            if (t.kind == 0) {
-              if (raw.trim.nonEmpty) {
-                out += Row(path, rowIdx, fiscalYearEndElement, t.ctx, t.unit, raw.trim)
-                rowIdx += 1
-              }
-            } else if (t.ctx != null && raw.nonEmpty) { // reference truthiness
-              if (revenueElementId == null) revenueElementId = t.local
-              out += Row(path, rowIdx, revenueElementId, t.ctx,
-                if (t.unit == null) "JPY" else t.unit, raw)
-              rowIdx += 1
-            }
-          }
-          out.iterator
-        } catch { case _: Exception => Iterator.empty } // bad XML: skip file
+  private def xbrlRows(factory: XMLInputFactory, path: String, bytes: Array[Byte]): Iterator[Row] =
+    try {
+      // Tracked element: text frozen at first child (ElementTree
+      // `.text` semantics); kind 0 = fiscal-date, 1 = revenue window.
+      final class Tracked(val kind: Int, val local: String,
+          val ctx: String, val unit: String) {
+        val text = new StringBuilder
+        var childSeen = false
       }
-    }(stmtEncoder)
-    parsed
-  }
+      val reader = factory.createXMLStreamReader(new ByteArrayInputStream(bytes))
+      val facts = ArrayBuffer.empty[Tracked]   // in pre-order start order
+      var stack = List.empty[Tracked]          // null entry = untracked
+      var afterMarker = false
+      var windowLeft = 0
+      while (reader.hasNext) {
+        reader.next() match {
+          case XMLStreamConstants.START_ELEMENT =>
+            stack.headOption.foreach(t => if (t != null) t.childSeen = true)
+            val local = reader.getLocalName
+            val ctx = Option(reader.getAttributeValue(null, "contextRef")).orNull
+            val unit = Option(reader.getAttributeValue(null, "unitRef")).orNull
+            val tracked: Tracked =
+              if (local.endsWith("CurrentPeriodEndDateDEI"))
+                new Tracked(0, local, ctx, unit)
+              else if (afterMarker && windowLeft > 0) {
+                windowLeft -= 1 // every element consumes a slot
+                new Tracked(1, local, ctx, unit)
+              } else if (!afterMarker && local.contains("NumberOfSubmissionDEI")) {
+                afterMarker = true; windowLeft = 5; null
+              } else null
+            if (tracked != null) facts += tracked
+            stack = tracked :: stack
+          case XMLStreamConstants.CHARACTERS =>
+            stack.headOption.foreach { t =>
+              if (t != null && !t.childSeen) t.text.append(reader.getText)
+            }
+          case XMLStreamConstants.END_ELEMENT =>
+            if (stack.nonEmpty) stack = stack.tail
+          case _ => ()
+        }
+      }
+      reader.close()
+      val out = ArrayBuffer.empty[Row]
+      var rowIdx = 0L
+      var revenueElementId: String = null
+      facts.foreach { t =>
+        val raw = t.text.toString
+        if (t.kind == 0) {
+          if (raw.trim.nonEmpty) {
+            out += Row(path, rowIdx, fiscalYearEndElement, t.ctx, t.unit, raw.trim)
+            rowIdx += 1
+          }
+        } else if (t.ctx != null && raw.nonEmpty) { // reference truthiness
+          if (revenueElementId == null) revenueElementId = t.local
+          out += Row(path, rowIdx, revenueElementId, t.ctx,
+            if (t.unit == null) "JPY" else t.unit, raw)
+          rowIdx += 1
+        }
+      }
+      out.iterator
+    } catch { case _: Exception => Iterator.empty } // bad XML: skip file
 }

@@ -1,5 +1,10 @@
 package graft
 
+import java.util.concurrent.ConcurrentLinkedQueue
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -23,4 +28,35 @@ object TestSession {
 
 abstract class SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = TestSession.spark
+
+  /** Jobs the body launches, seen by a SparkListener between two
+    * marker jobs. Delivery is async, so the count is read only once
+    * the closing marker's start event arrived (one listener queue
+    * delivers in order). */
+  protected def jobsOf(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val seen = new ConcurrentLinkedQueue[Integer]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        seen.add(e.jobId); ()
+      }
+    }
+    def marker(): Int = {
+      val f = sc.submitJob(sc.parallelize(Seq(0), 1),
+        (_: Iterator[Int]) => (), Seq(0), (_: Int, _: Unit) => (), ())
+      f.get()
+      f.jobIds.head
+    }
+    sc.addSparkListener(listener)
+    try {
+      val start = marker()
+      body
+      val end = marker()
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (!seen.contains(end) && System.nanoTime() < deadline)
+        Thread.sleep(5)
+      assert(seen.contains(end), "listener never saw the closing marker")
+      seen.asScala.count(id => id > start && id < end)
+    } finally sc.removeSparkListener(listener)
+  }
 }

@@ -273,4 +273,47 @@ class PipelineSpec extends SparkSpec {
     assert(!wrote)
     assert(!java.nio.file.Files.exists(dir.resolve("out/japan_company_data")))
   }
+
+  /** Names under `dir`, sorted; empty when it does not exist. */
+  private def names(dir: java.nio.file.Path): Seq[String] =
+    Option(dir.toFile.list()).toSeq.flatten.sorted
+
+  /** Runs `body` and checks it left nothing registered as persistent,
+    * in the RDD registry or the Dataset cache. */
+  private def persistsNothing[T](body: => T): T = {
+    spark.catalog.clearCache()
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val result = body
+    assert((spark.sparkContext.getPersistentRDDs.keySet -- before).isEmpty)
+    assert(spark.sharedState.cacheManager.isEmpty)
+    result
+  }
+
+  test("sink: one part file with a header and every row; no staging, nothing persisted") {
+    val out = tempDir().resolve("out")
+    val df = spark.range(0, 50, 1, 4)
+      .selectExpr("cast(id AS INT) AS year", "concat('c', id) AS companyname")
+    assert(persistsNothing(Sink.writeCsv(df, out.toString, "japan_company_data")))
+    assert(names(out) == Seq("japan_company_data"))
+    val parts = names(out.resolve("japan_company_data"))
+      .filter(n => n.startsWith("part-") && n.endsWith(".csv"))
+    assert(parts.size == 1, s"part files: $parts")
+    val lines = java.nio.file.Files.readAllLines(out.resolve("japan_company_data").resolve(parts.head))
+    assert(lines.get(0) == "year,companyname")
+    assert(lines.size == 1 + 50)
+  }
+
+  test("sink: empty input after a written run returns false and keeps the earlier CSV") {
+    val out = tempDir().resolve("out")
+    val df = spark.range(0, 5, 1, 2).selectExpr("cast(id AS INT) AS year")
+    assert(Sink.writeCsv(df, out.toString, "japan_company_data"))
+    def snapshot(): Map[String, Seq[Byte]] = {
+      val dest = out.resolve("japan_company_data")
+      names(dest).map(n => n -> java.nio.file.Files.readAllBytes(dest.resolve(n)).toSeq).toMap
+    }
+    val before = snapshot()
+    assert(!persistsNothing(Sink.writeCsv(df.filter("year < 0"), out.toString, "japan_company_data")))
+    assert(names(out) == Seq("japan_company_data"))
+    assert(snapshot() == before)
+  }
 }

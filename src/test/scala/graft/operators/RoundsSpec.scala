@@ -1,11 +1,5 @@
 package graft.operators
 
-import java.util.concurrent.ConcurrentLinkedQueue
-
-import scala.jdk.CollectionConverters._
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-
 import graft.SparkSpec
 
 /** The [[Rounds]] contract, pinned on every migrated round loop:
@@ -41,37 +35,6 @@ import graft.SparkSpec
   * minimum of two repetitions against the top of the range before. */
 class RoundsSpec extends SparkSpec {
   import spark.implicits._
-
-  /** Jobs the body launches, seen by a SparkListener between two
-    * marker jobs. Delivery is async, so the count is read only once
-    * the closing marker's start event arrived (one listener queue
-    * delivers in order). */
-  private def jobsOf(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val seen = new ConcurrentLinkedQueue[Integer]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = {
-        seen.add(e.jobId); ()
-      }
-    }
-    def marker(): Int = {
-      val f = sc.submitJob(sc.parallelize(Seq(0), 1),
-        (_: Iterator[Int]) => (), Seq(0), (_: Int, _: Unit) => (), ())
-      f.get()
-      f.jobIds.head
-    }
-    sc.addSparkListener(listener)
-    try {
-      val start = marker()
-      body
-      val end = marker()
-      val deadline = System.nanoTime() + 30L * 1000000000L
-      while (!seen.contains(end) && System.nanoTime() < deadline)
-        Thread.sleep(5)
-      assert(seen.contains(end), "listener never saw the closing marker")
-      seen.asScala.count(id => id > start && id < end)
-    } finally sc.removeSparkListener(listener)
-  }
 
   private def perRound(run: Int => Unit, r: Int): Int = {
     spark.catalog.clearCache()
