@@ -22,11 +22,11 @@ object BestFile {
 
   private val FilenamePattern = "E(\\d+)_(\\d+)_(\\d+)\\.(csv|xbrl)"
 
-  /** Parse a manifest of file paths into (file, edinet_code, submit_ymd,
-    * doc_type, fmt, seq). `seq` is the ingest order (reference list
-    * order); rows whose filename doesn't match the convention are
-    * dropped with the same silent-skip semantics as the reference's
-    * regex guard (src/transform.py:127-131). */
+  /** Add the filename's fields to a manifest of file paths: its input
+    * columns plus `edinet_code`, `submit_ymd`, `doc_type` and `fmt`. Rows
+    * whose filename doesn't match the convention are dropped with the
+    * same silent-skip semantics as the reference's regex guard
+    * (src/transform.py:127-131). */
   def parseManifest(files: DataFrame, pathCol: String = "path"): DataFrame = {
     val path = col(pathCol)
     files
@@ -45,16 +45,17 @@ object BestFile {
 
   /** Top-1-per-company: corrected (130) wins; among 130s the last
     * ingest seq wins (every 130 overwrites), among plain filings the
-    * FIRST seq wins (non-130s never overwrite an existing entry).
+    * FIRST seq wins (non-130s never overwrite an existing entry); `seq`
+    * is the manifest's ingest order (reference list order).
     * One shuffle on edinet_code over the (tiny) manifest — the selection
     * happens BEFORE any expensive statement parsing, preserving the
     * reference's dedup-before-parse ordering (SURVEY §4). */
-  def bestPerCompany(manifest: DataFrame, seqCol: String = "seq"): DataFrame = {
+  def bestPerCompany(manifest: DataFrame): DataFrame = {
     val isCorrection = col("doc_type") === correctionDocType
     val w = Window.partitionBy(col("edinet_code"))
       .orderBy(
         isCorrection.desc,
-        when(isCorrection, -col(seqCol)).otherwise(col(seqCol)).asc)
+        when(isCorrection, -col("seq")).otherwise(col("seq")).asc)
     manifest
       .withColumn("__rn", row_number().over(w))
       .filter(col("__rn") === 1)

@@ -58,6 +58,12 @@ object Model {
     StructField(StmtCols.UnitId, StringType),
     StructField(StmtCols.Value, StringType)))
 
+  /** A file's revenue-series row ([[RevenueTransform.series]]): the
+    * statement row plus the raw value of the file's first fiscal-year-end
+    * row (F4/F5). */
+  val seriesSchema: StructType =
+    statementSchema.add(StructField("fiscal_year_end", StringType))
+
   /** Document-list API metadata (reference src/extract.py:158,173-186;
     * FIXTURES.md §A2). */
   val docMetaSchema: StructType = StructType(Seq(

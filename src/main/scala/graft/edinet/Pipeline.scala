@@ -3,7 +3,7 @@ package graft.edinet
 import java.io.{BufferedReader, InputStreamReader}
 import java.nio.charset.StandardCharsets
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -22,7 +22,8 @@ object Sink {
     * the destination; emptiness is read from the staged file's first
     * two lines on the driver, so there is no probe job and no cache.
     * `coalesce(1)` would instead pull the whole upstream stage into the
-    * one writing task. */
+    * one writing task. A non-empty staged output then takes the
+    * destination's place through [[replace]]. */
   def writeCsv(df: DataFrame, outDir: String, fileName: String): Boolean = {
     val out = new Path(outDir)
     val dest = new Path(out, fileName)
@@ -38,12 +39,27 @@ object Sink {
         try { in.readLine(); in.readLine() != null } finally in.close()
       }
     }
-    if (hasRow) {
-      fs.delete(dest, true)
-      if (!fs.rename(staging, dest))
-        throw new java.io.IOException(s"could not move $staging to $dest")
-    } else fs.delete(if (outExisted) staging else out, true)
+    if (hasRow) replace(fs, staging, dest)
+    else fs.delete(if (outExisted) staging else out, true)
     hasRow
+  }
+
+  /** Moves `staging` to `dest`. An earlier `dest` is first moved aside
+    * to `.<name>.old` and deleted only once `staging` is in place; if
+    * that rename fails, it is moved back and the call throws. So a crash
+    * at any point leaves the earlier output at `dest` or at `.old`. A
+    * stale `.old` from such a crash is deleted before the swap. */
+  private[edinet] def replace(fs: FileSystem, staging: Path, dest: Path): Unit = {
+    val old = new Path(dest.getParent, s".${dest.getName}.old")
+    fs.delete(old, true)
+    val hadDest = fs.exists(dest)
+    if (hadDest && !fs.rename(dest, old))
+      throw new java.io.IOException(s"could not move $dest to $old")
+    if (!fs.rename(staging, dest)) {
+      if (hadDest) fs.rename(old, dest)
+      throw new java.io.IOException(s"could not move $staging to $dest")
+    }
+    fs.delete(old, true)
   }
 }
 
@@ -52,8 +68,11 @@ object Sink {
   * against recorded fixtures; there is no egress in this environment).
   *
   * main.py:13-40 becomes one declarative plan:
-  *   company master -> best-file manifest -> format-dispatching statement
-  *   parse -> revenue transform -> guarded sink.
+  *   company master -> best-file manifest -> format-dispatching parse of
+  *   each winner to its revenue series -> row-local normalize ->
+  *   broadcast enrich -> guarded sink.
+  * No shuffle is keyed on the file: the per-file rules run inside the
+  * parse, in the task that already holds the file.
   */
 object Pipeline {
 
@@ -96,9 +115,9 @@ object Pipeline {
       .join(broadcast(best.select(col("path"), col("fmt"))), Seq("path"))
     // edinet_code from the filename, as the manifest derived it
     // (filename-as-metadata, SURVEY §1.1)
-    val stmts = StatementSources.parse(winners)
+    val series = StatementSources.parse(winners)
       .withColumn("edinet_code", BestFile.edinetCode(col("file")))
 
-    RevenueTransform(stmts, companies)
+    RevenueTransform(series, companies)
   }
 }

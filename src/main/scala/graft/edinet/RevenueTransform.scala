@@ -1,59 +1,64 @@
 package graft.edinet
 
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
+import scala.collection.mutable.ArrayBuffer
+
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import Model._
 
 /** P8-P11, F4-F7, F12/F13, J1: statement rows -> enriched 5-year revenue
-  * records (reference src/transform.py:148-214).
+  * records (reference src/transform.py:93-102,148-214).
   *
-  * One declarative plan over ALL files replaces the reference's per-file
-  * Python loop; the per-file scoping lives in window partitions keyed by
-  * the file column. Skip semantics are filters (row dropped), never
-  * null propagation — matching Python's try/except-continue.
+  * The per-file rules (which element, which rows, which fiscal year) are
+  * one fold over a single file's rows, [[series]], which the per-file
+  * parse applies in the task that already holds the file; everything
+  * after it is row-local or a broadcast join, so no step re-groups rows
+  * by file. Skip semantics are filters (row dropped), never null
+  * propagation — matching Python's try/except-continue.
   */
 object RevenueTransform {
 
-  private val E = col(StmtCols.ElementId)
   private val C = col(StmtCols.ContextId)
   private val U = col(StmtCols.UnitId)
-  private val V = col(StmtCols.Value)
 
-  /** P8: per file, the revenue element id is WHATEVER element sits at row
-    * index 1 (reference src/transform.py:93-95 — the name varies per
-    * filing, so it is read from the data, not configured). */
-  def withRevenueElement(stmts: DataFrame): DataFrame = {
-    val byFile = Window.partitionBy(col("file"))
-    // exactly one row per file has row_idx==1, so max == that value
-    // (max, not first-over-unordered-frame, for determinism)
-    stmts.withColumn("revenue_element",
-      max(when(col("row_idx") === 1L, E)).over(byFile))
+  /** P8 + L2 + F5/A4: one file's statement rows, in `row_idx` order ->
+    * that file's series rows ([[seriesSchema]]), the reference's
+    * `parse_csv_file` rules (src/transform.py:93-102):
+    *  - the revenue element is WHATEVER element id sits at row index 1
+    *    (the name varies per filing, so it is read from the data); a file
+    *    without a row 1, or with a null id there, yields nothing;
+    *  - the series is the first 5 rows, in row order, whose id equals that
+    *    element, row 0 included;
+    *  - `fiscal_year_end` is the value of the first
+    *    CurrentFiscalYearEndDateDEI row that has one, carried raw on every
+    *    series row (wherever that row sits in the file).
+    * Buffers at most 5 rows (row 0 waits for row 1 to name the element). */
+  def series(rows: Iterator[Row]): Iterator[Row] = {
+    // statementSchema positions: 1 row_idx, 2 element id, 5 value
+    var row0: Row = null
+    var element: String = null
+    var fiscalEnd: String = null
+    val kept = ArrayBuffer.empty[Row]
+    rows.foreach { r =>
+      val id = r.getString(2)
+      if (fiscalEnd == null && id == fiscalYearEndElement) fiscalEnd = r.getString(5)
+      r.getLong(1) match {
+        case 0L => row0 = r
+        case 1L if id != null =>
+          element = id
+          if (row0 != null && row0.getString(2) == id) kept += row0
+          kept += r
+        case _ => if (element != null && id == element && kept.size < 5) kept += r
+      }
+    }
+    kept.iterator.map(r => Row.fromSeq(r.toSeq :+ fiscalEnd))
   }
 
-  /** F4/F5 + A4: per file, fiscal year = year of the first
-    * CurrentFiscalYearEndDateDEI row's value (document order). */
-  def withFiscalYear(stmts: DataFrame): DataFrame = {
-    val byFileOrdered = Window.partitionBy(col("file"))
-      .orderBy(col("row_idx"))
-      .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    stmts.withColumn("fiscal_year",
-      year(to_date(first(
-        when(E === fiscalYearEndElement, V), ignoreNulls = true
-      ).over(byFileOrdered))))
-  }
-
-  /** The 5-year series: revenue-element rows in file order, first 5
-    * (reference src/transform.py:96-98 `[:5]`). */
-  def revenueSeries(stmts: DataFrame): DataFrame = {
-    val series = Window.partitionBy(col("file")).orderBy(col("row_idx"))
-    stmts
-      .filter(E === col("revenue_element") && E.isNotNull)
-      .withColumn("series_idx", row_number().over(series))
-      .filter(col("series_idx") <= 5)
-  }
+  /** F4: the fiscal year of a series row, from its file's raw fiscal-year
+    * end — row-local, so Spark's date parsing (ANSI included) applies. */
+  val fiscalYear: Column = year(to_date(col("fiscal_year_end")))
 
   /** F6 + P10: decode relative-year contexts; unknown context ids are
     * SKIPPED (reference src/transform.py:189-193). F7 + P11: non-integer
@@ -111,8 +116,8 @@ object RevenueTransform {
         col("revenue_unit"))
   }
 
-  /** Full transform: statement rows (+ an `edinet_code` column from the
-    * manifest) -> output records. */
-  def apply(stmts: DataFrame, companies: DataFrame): DataFrame =
-    enrich(normalize(revenueSeries(withFiscalYear(withRevenueElement(stmts)))), companies)
+  /** Full transform: series rows ([[StatementSources.parse]], plus an
+    * `edinet_code` column from the manifest) -> output records. */
+  def apply(series: DataFrame, companies: DataFrame): DataFrame =
+    enrich(normalize(series.withColumn("fiscal_year", fiscalYear)), companies)
 }

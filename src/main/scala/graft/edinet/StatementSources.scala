@@ -9,6 +9,7 @@ import scala.collection.mutable.ArrayBuffer
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.encoders.RowEncoder
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import Model._
 
@@ -26,13 +27,30 @@ import Model._
   */
 object StatementSources {
 
-  private val stmtEncoder = RowEncoder.encoderFor(statementSchema)
-
-  /** Parse (path, content, fmt) rows into statement rows, one file at a
-    * time: `fmt` "csv" goes to [[csvRows]], "xbrl" to [[xbrlRows]], any
-    * other value emits nothing. One pass serves both formats, so a mixed
-    * landing directory is scanned once. */
+  /** Parse (path, content, fmt) rows into revenue-series rows
+    * ([[seriesSchema]]), one file at a time, as the reference's per-file
+    * parse does (src/transform.py:77-106): `fmt` "csv" goes to
+    * [[csvRows]], "xbrl" to [[xbrlRows]], any other value emits nothing,
+    * and each file's statement rows are folded by
+    * [[RevenueTransform.series]] in the same task. One pass serves both
+    * formats, so a mixed landing directory is scanned once. */
   def parse(files: DataFrame): DataFrame =
+    perFile(files, seriesSchema)(RevenueTransform.series)
+
+  /** S2 over every file matching `pathGlob`: raw statement rows. */
+  def readCsv(spark: SparkSession, pathGlob: String): DataFrame =
+    perFile(spark.read.format("binaryFile").load(pathGlob).withColumn("fmt", lit("csv")),
+      statementSchema)(identity)
+
+  /** S3 over every file matching `pathGlob`: raw statement rows. */
+  def readXbrl(spark: SparkSession, pathGlob: String): DataFrame =
+    perFile(spark.read.format("binaryFile").load(pathGlob).withColumn("fmt", lit("xbrl")),
+      statementSchema)(identity)
+
+  /** Each (path, content, fmt) file's statement rows, passed through
+    * `fold` in the task that parsed the file. */
+  private def perFile(files: DataFrame, schema: StructType)(
+      fold: Iterator[Row] => Iterator[Row]): DataFrame =
     files.select(col("path"), col("content"), col("fmt")).mapPartitions { it =>
       // DTDs and external entities off: landed filings are untrusted input
       lazy val factory = {
@@ -45,20 +63,12 @@ object StatementSources {
         val path = r.getString(0)
         val bytes = r.getAs[Array[Byte]](1)
         r.getString(2) match {
-          case "csv" => csvRows(path, bytes)
-          case "xbrl" => xbrlRows(factory, path, bytes)
+          case "csv" => fold(csvRows(path, bytes))
+          case "xbrl" => fold(xbrlRows(factory, path, bytes))
           case _ => Iterator.empty
         }
       }
-    }(stmtEncoder)
-
-  /** S2 over every file matching `pathGlob`, read as statement CSV. */
-  def readCsv(spark: SparkSession, pathGlob: String): DataFrame =
-    parse(spark.read.format("binaryFile").load(pathGlob).withColumn("fmt", lit("csv")))
-
-  /** S3 over every file matching `pathGlob`, read as XBRL. */
-  def readXbrl(spark: SparkSession, pathGlob: String): DataFrame =
-    parse(spark.read.format("binaryFile").load(pathGlob).withColumn("fmt", lit("xbrl")))
+    }(RowEncoder.encoderFor(schema))
 
   /** S2: UTF-16 tab-separated statement CSV (reference
     * src/transform.py:77-106). Emits one row per line with row_idx

@@ -278,6 +278,10 @@ class PipelineSpec extends SparkSpec {
   private def names(dir: java.nio.file.Path): Seq[String] =
     Option(dir.toFile.list()).toSeq.flatten.sorted
 
+  /** Each file under `dir` by name, with its bytes. */
+  private def files(dir: java.nio.file.Path): Map[String, Seq[Byte]] =
+    names(dir).map(n => n -> java.nio.file.Files.readAllBytes(dir.resolve(n)).toSeq).toMap
+
   /** Runs `body` and checks it left nothing registered as persistent,
     * in the RDD registry or the Dataset cache. */
   private def persistsNothing[T](body: => T): T = {
@@ -315,5 +319,41 @@ class PipelineSpec extends SparkSpec {
     assert(!persistsNothing(Sink.writeCsv(df.filter("year < 0"), out.toString, "japan_company_data")))
     assert(names(out) == Seq("japan_company_data"))
     assert(snapshot() == before)
+  }
+
+  test("sink: a replace swaps the new CSV in and leaves no .old, even a stale one") {
+    val out = tempDir().resolve("out")
+    val first = spark.range(0, 5, 1, 2).selectExpr("cast(id AS INT) AS year")
+    assert(Sink.writeCsv(first, out.toString, "japan_company_data"))
+    // as left by a crash between moving the old output aside and deleting it
+    java.nio.file.Files.createDirectories(out.resolve(".japan_company_data.old"))
+    assert(Sink.writeCsv(first.selectExpr("year + 100 AS year"), out.toString, "japan_company_data"))
+    assert(names(out) == Seq("japan_company_data"))
+    val csv = files(out.resolve("japan_company_data")).collect {
+      case (n, bytes) if n.startsWith("part-") => new String(bytes.toArray, "UTF-8")
+    }
+    assert(csv.size == 1 && csv.head.linesIterator.toSeq.tail.sorted == (100 to 104).map(_.toString))
+  }
+
+  test("sink: a failed rename of the staged CSV keeps the earlier CSV byte-identical") {
+    import org.apache.hadoop.fs.{FileSystem, FilterFileSystem, Path}
+    val out = tempDir().resolve("out")
+    val df = spark.range(0, 5, 1, 2).selectExpr("cast(id AS INT) AS year")
+    assert(Sink.writeCsv(df, out.toString, "japan_company_data"))
+    val dest = out.resolve("japan_company_data")
+    val before = files(dest)
+    val staging = out.resolve(".japan_company_data.staging")
+    java.nio.file.Files.createDirectories(staging)
+    java.nio.file.Files.write(staging.resolve("part-00000.csv"), "year\n9\n".getBytes("UTF-8"))
+    val renameFails = new FilterFileSystem(
+        FileSystem.getLocal(spark.sparkContext.hadoopConfiguration)) {
+      override def rename(src: Path, dst: Path): Boolean =
+        src.getName != staging.getFileName.toString && super.rename(src, dst)
+    }
+    intercept[java.io.IOException] {
+      Sink.replace(renameFails, new Path(staging.toUri), new Path(dest.toUri))
+    }
+    assert(files(dest) == before)
+    assert(!names(out).contains(".japan_company_data.old"))
   }
 }

@@ -1,5 +1,7 @@
 package graft.edinet
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.Observation
 import org.apache.spark.sql.functions._
 
@@ -21,8 +23,9 @@ class ObservabilitySpec extends SparkSpec {
       StmtCols.UnitId, StmtCols.Value)
 
     val obs = Observation("skips")
-    val prepared = RevenueTransform.revenueSeries(
-      RevenueTransform.withFiscalYear(RevenueTransform.withRevenueElement(rows)))
+    val series = RevenueTransform.series(rows.collect().iterator).toSeq
+    val prepared = spark.createDataFrame(series.asJava, seriesSchema)
+      .withColumn("fiscal_year", RevenueTransform.fiscalYear)
     val out = RevenueTransform.normalize(prepared, Some(obs))
     assert(out.count() == 2) // 100 and 300 survive
     val m = obs.get

@@ -1,14 +1,16 @@
 package graft.edinet
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.catalyst.expressions.Attribute
+import org.apache.spark.sql.catalyst.expressions.{Attribute, Expression}
 import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
 import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.datasources.binaryfile.BinaryFileFormat
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.execution.window.WindowExec
 
 import graft.SparkSpec
+import Model.MasterCols
 
 /** The parity pipeline at file fan-out: 200 companies' filings in one
   * run — proves the one-plan design scales with file count (each file is
@@ -76,5 +78,17 @@ class PipelineFanoutSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       } => h
     }
     assert(manifestExchanges.size == 1, s"exchanges on edinet_code: $manifestExchanges")
+
+    // the per-file rules run inside the parse: nothing re-groups by file
+    def keyNames(keys: Seq[Expression]): Seq[String] = keys.collect { case a: Attribute => a.name }
+    val fileExchanges = collect(plan) {
+      case e: ShuffleExchangeExec => e.outputPartitioning
+    }.collect { case h: HashPartitioning if keyNames(h.expressions).contains("file") => h }
+    assert(fileExchanges.isEmpty, s"exchanges on file: $fileExchanges")
+    // the only windows are BestFile's pick and the company master's
+    // dedupe (none at all once a session's top-k rewrite plans them)
+    val windows = collect(plan) { case w: WindowExec => keyNames(w.partitionSpec) }
+    assert(windows.toSet.subsetOf(Set(Seq("edinet_code"), Seq(MasterCols.EdinetCode))),
+      s"window partition keys: $windows")
   }
 }
