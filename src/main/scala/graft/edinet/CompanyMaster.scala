@@ -1,6 +1,9 @@
 package graft.edinet
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.encoders.RowEncoder
 import org.apache.spark.sql.functions._
 
 import Model._
@@ -47,20 +50,23 @@ object CompanyMaster {
   /** J1 pre-step (SURVEY §7.4.6): dedupe to one row per EDINET code so
     * the enrichment inner join reproduces pandas' `.iloc[0]` first-match.
     *
-    * "First row" order comes from `monotonically_increasing_id`, which
-    * equals file order only for a single-split read — true for the real
-    * master (one CSV well under a split boundary). For multi-file /
-    * multi-split inputs Spark's file packing reorders partitions, so a
-    * stable lexicographic tiebreak backs it up: the pick stays
-    * deterministic even where "first" is not physically defined. */
+    * "First row" is scan-partition order, then row order (as
+    * `monotonically_increasing_id` numbers rows): file order for the real
+    * single-split master, Spark's file packing order for a multi-split
+    * read. Null codes count as one code. The master is bounded by the
+    * number of filers, so one task folds it: no exchange, no sort. Rows
+    * carry their scan partition id, as `coalesce` may reorder partitions. */
   def dedupeByCode(df: DataFrame): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy(col(MasterCols.EdinetCode))
-      .orderBy(monotonically_increasing_id(),
-        col(MasterCols.NameEn).asc, col(MasterCols.Industry).asc)
-    df.withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1)
-      .drop("__rn")
+    val code = df.schema.fieldIndex(MasterCols.EdinetCode)
+    val pid = df.schema.length
+    df.withColumn("__pid", spark_partition_id()).coalesce(1).mapPartitions { rows =>
+      val first = new java.util.LinkedHashMap[String, Row]()
+      rows.foreach { r =>
+        val kept = first.get(r.getString(code))
+        if (kept == null || r.getInt(pid) < kept.getInt(pid)) first.put(r.getString(code), r)
+      }
+      first.values.iterator.asScala.map(r => Row.fromSeq(r.toSeq.init))
+    }(RowEncoder.encoderFor(df.schema))
   }
 
   def load(spark: SparkSession, path: String,

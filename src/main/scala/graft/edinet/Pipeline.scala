@@ -1,6 +1,7 @@
 package graft.edinet
 
 import java.io.{BufferedReader, InputStreamReader}
+import java.net.URI
 import java.nio.charset.StandardCharsets
 
 import org.apache.hadoop.fs.{FileSystem, Path}
@@ -89,32 +90,23 @@ object Pipeline {
     * its files would expand to one root per file and, past Spark's
     * parallel-discovery threshold, list them in a job of its own. */
   def transform(spark: SparkSession, masterCsv: String, filesDir: String): DataFrame = {
+    import spark.implicits._
     val companies = CompanyMaster.load(spark, masterCsv)
 
-    // Manifest from the landed files; ingest sequence from the filename's
-    // lexicographic order (stable stand-in for API return order). The
-    // sequence is derived PER ROW from fields already in the name —
-    // within a company (the only scope bestPerCompany compares seqs in),
-    // (submit_ymd, fmt) ordering IS filename ordering — so a
-    // hundred-million-file manifest needs no global single-partition
-    // window sort.
+    // The driver already holds the listing (loading the dir listed it to
+    // plan the scan), so the winners are picked from it before any job,
+    // in filename order (the stand-in for the reference's list order).
+    // `inputFiles` gives URIs; the join needs the scan's `path` form.
     val bin = spark.read.format("binaryFile").load(filesDir)
-    val manifest = BestFile.parseManifest(bin.select(col("path")))
-      .withColumn("seq",
-        col("submit_ymd").cast("long") * 2 + (col("fmt") === "xbrl").cast("long"))
-      // only target document types compete for best-file (reference
-      // filters the doc list before download, src/extract.py:158; a
-      // stray quarterly report must not displace the annual filing)
-      .filter(col("doc_type").isin(targetDocTypes: _*))
-    val best = BestFile.bestPerCompany(manifest)
+    val landed = bin.inputFiles.map(u => new Path(new URI(u)).toString).sorted.toSeq
+    val best = BestFile.pick(landed.flatMap(p => BestFile.parse(p).map(p -> _)))(_._2)
+      .map { case (path, key) => (path, key.fmt) }.toDF("path", "fmt")
 
     // Parse only the winners (dedup-before-parse, SURVEY §4): one scan of
-    // the landed bytes, semi-joined against the one broadcast manifest
-    // (tiny), then one parse that dispatches on each winner's format.
-    val winners = bin.select(col("path"), col("content"))
-      .join(broadcast(best.select(col("path"), col("fmt"))), Seq("path"))
-    // edinet_code from the filename, as the manifest derived it
-    // (filename-as-metadata, SURVEY §1.1)
+    // the landed bytes, joined against the broadcast winners, then one
+    // parse that dispatches on each winner's format.
+    val winners = bin.select(col("path"), col("content")).join(broadcast(best), Seq("path"))
+    // edinet_code from the filename (filename-as-metadata, SURVEY §1.1)
     val series = StatementSources.parse(winners)
       .withColumn("edinet_code", BestFile.edinetCode(col("file")))
 

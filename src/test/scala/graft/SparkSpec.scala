@@ -29,6 +29,14 @@ object TestSession {
 abstract class SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = TestSession.spark
 
+  /** Runs `body` with the given session confs set, then restores them. */
+  protected def withConf[T](kvs: (String, String)*)(body: => T): T = {
+    val before = kvs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    kvs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally before.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
+  }
+
   /** Jobs the body launches, seen by a SparkListener between two
     * marker jobs. Delivery is async, so the count is read only once
     * the closing marker's start event arrived (one listener queue

@@ -46,49 +46,113 @@ class CompanyMasterSpec extends SparkSpec {
 class BestFileSpec extends SparkSpec {
   import spark.implicits._
 
-  private def manifest(paths: String*) =
-    BestFile.parseManifest(
-      paths.zipWithIndex.toSeq.toDF("path", "seq"))
+  /** The winners among `paths`, in `paths` order, with their keys. */
+  private def pick(paths: String*): Seq[BestFile.Key] =
+    BestFile.pick(paths.flatMap(p => BestFile.parse(p).map(p -> _)))(_._2).map(_._2)
 
   test("filename parsing (F8/F9) extracts code/date/type/fmt; junk skipped") {
-    val m = manifest(
-      "/x/E00001_20240401_120.csv", "/x/E00002_20240401_130.xbrl", "/x/readme.txt")
-    val rows = m.orderBy("seq").collect()
-    assert(rows.length == 2)
-    assert(rows(0).getAs[String]("edinet_code") == "E00001")
-    assert(rows(0).getAs[String]("doc_type") == "120")
-    assert(rows(1).getAs[String]("fmt") == "xbrl")
+    val keys = Seq("/x/E00001_20240401_120.csv", "/x/E00002_20240401_130.xbrl", "/x/readme.txt")
+      .flatMap(BestFile.parse)
+    assert(keys.length == 2)
+    assert(keys(0).edinetCode == "E00001")
+    assert(keys(0).docType == "120")
+    assert(keys(1).fmt == "xbrl")
   }
 
   test("130 (correction) beats 120 regardless of order (A1)") {
-    val m = manifest("/x/E00001_20240402_130.csv", "/x/E00001_20240405_120.csv")
-    val best = BestFile.bestPerCompany(m).collect()
+    val best = pick("/x/E00001_20240402_130.csv", "/x/E00001_20240405_120.csv")
     assert(best.length == 1)
-    assert(best.head.getAs[String]("doc_type") == "130")
+    assert(best.head.docType == "130")
   }
 
   test("among plain 120 filings the FIRST seen wins (dict never overwrites non-130)") {
-    val m = manifest("/x/E00001_20240401_120.csv", "/x/E00001_20240409_120.csv")
-    val best = BestFile.bestPerCompany(m).collect()
-    assert(best.head.getAs[String]("submit_ymd") == "20240401")
+    val best = pick("/x/E00001_20240401_120.csv", "/x/E00001_20240409_120.csv")
+    assert(best.head.submitYmd == "20240401")
   }
 
   test("among corrections the LAST 130 wins (every 130 overwrites)") {
-    val m = manifest(
+    val best = pick(
       "/x/E00001_20240401_130.csv", "/x/E00001_20240405_130.csv",
       "/x/E00001_20240409_120.csv")
-    val best = BestFile.bestPerCompany(m).collect()
     assert(best.length == 1)
-    assert(best.head.getAs[String]("submit_ymd") == "20240405")
+    assert(best.head.submitYmd == "20240405")
   }
 
   test("one winner per company") {
-    val m = manifest(
+    val best = pick(
       "/x/E00001_20240401_120.csv", "/x/E00001_20240402_130.csv",
       "/x/E00002_20240401_120.xbrl")
-    val best = BestFile.bestPerCompany(m)
-    assert(best.count() == 2)
-    assert(best.groupBy("edinet_code").count().filter(col("count") > 1).isEmpty)
+    assert(best.length == 2)
+    assert(best.map(_.edinetCode).distinct.length == 2)
+  }
+
+  /** Line by line, the reference's loop (src/transform.py:109-145) over
+    * `files` in ingest order, behind the target-type filter its doc list
+    * passed before download: code -> winning path. */
+  private def referenceLoop(files: Seq[String]): Map[String, String] = {
+    val pattern = java.util.regex.Pattern.compile("E(\\d+)_(\\d+)_(\\d+)\\.(csv|xbrl)")
+    val companyFiles = scala.collection.mutable.Map.empty[String, String]
+    for (filePath <- files) {
+      val filename = filePath.split("/", -1).last
+      val m = pattern.matcher(filename)
+      if (m.find()) {
+        val companyCode = "E" + m.group(1)
+        val docType = m.group(3)
+        if (Model.targetDocTypes.contains(docType))
+          if (!companyFiles.contains(companyCode) || docType == "130")
+            companyFiles(companyCode) = filePath
+      }
+    }
+    companyFiles.toMap
+  }
+
+  test("seeded: the pick equals the reference loop and the window spelling on 300 manifests") {
+    val rnd = new scala.util.Random(20240401L)
+    def name(): String = {
+      val code = s"E${rnd.nextInt(4) + 1}"
+      val ymd = f"202404${rnd.nextInt(4) + 1}%02d"
+      val tpe = Seq("120", "130", "140")(rnd.nextInt(3))
+      val fmt = if (rnd.nextBoolean()) "csv" else "xbrl"
+      rnd.nextInt(10) match {
+        case 0 => Seq("readme.txt", s"${code}_$ymd.csv", s"${code}_${ymd}_$tpe.pdf",
+          s"E_${ymd}_$tpe.csv")(rnd.nextInt(4))
+        case 1 => s"x${code}_${ymd}_$tpe.${fmt}z"
+        case 2 => s"${code}_${ymd}_$tpe.$fmt.bak"
+        case _ => s"${code}_${ymd}_$tpe.$fmt"
+      }
+    }
+    val manifests = (0 until 300).map(_ => Seq.fill(rnd.nextInt(12) + 1)(s"/landing/${name()}").distinct)
+
+    // the driver's pick over each manifest in path order, as Pipeline runs it
+    val picked = manifests.map { paths =>
+      BestFile.pick(paths.sorted.flatMap(p => BestFile.parse(p).map(p -> _)))(_._2)
+        .map { case (p, k) => k.edinetCode -> p }.toMap
+    }
+    // the reference loop over path order within the ingest-order stand-in
+    val looped = manifests.map { paths =>
+      referenceLoop(paths.flatMap(p => BestFile.parse(p).map(k => (k.seq, p))).sorted.map(_._2))
+    }
+    assert(picked == looped)
+    assert(picked.exists(_.size > 1) && picked.exists(_.values.exists(_.contains("xE"))))
+
+    // the window spelling the pick replaced, with the path as the last
+    // sort key (it broke ties between equal keys arbitrarily)
+    val pattern = "E(\\d+)_(\\d+)_(\\d+)\\.(csv|xbrl)"
+    def field(i: Int) = regexp_extract(element_at(split(col("path"), "/"), -1), pattern, i)
+    val isCorrection = col("doc_type") === Model.correctionDocType
+    val w = org.apache.spark.sql.expressions.Window.partitionBy(col("m"), col("edinet_code"))
+      .orderBy(isCorrection.desc, when(isCorrection, -col("seq")).otherwise(col("seq")).asc,
+        when(isCorrection, col("path")).desc, col("path").asc)
+    val windowed = manifests.zipWithIndex.flatMap { case (ps, m) => ps.map(m -> _) }.toDF("m", "path")
+      .withColumn("edinet_code", concat(lit("E"), field(1)))
+      .withColumn("doc_type", field(3))
+      .filter(col("doc_type") =!= "")
+      .withColumn("seq", field(2).cast("long") * 2 + (field(4) === "xbrl").cast("long"))
+      .filter(col("doc_type").isin(Model.targetDocTypes: _*))
+      .withColumn("__rn", row_number().over(w)).filter(col("__rn") === 1)
+      .select("m", "edinet_code", "path").as[(Int, String, String)].collect()
+      .groupBy(_._1).map { case (m, rows) => m -> rows.map(r => r._2 -> r._3).toMap }
+    assert(picked.indices.map(m => windowed.getOrElse(m, Map.empty[String, String])) == picked)
   }
 }
 

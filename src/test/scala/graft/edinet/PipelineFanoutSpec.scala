@@ -1,5 +1,7 @@
 package graft.edinet
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.expressions.{Attribute, Expression}
 import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
@@ -67,28 +69,69 @@ class PipelineFanoutSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       case s: FileSourceScanExec if s.relation.fileFormat.isInstanceOf[BinaryFileFormat] =>
         s.requiredSchema.fieldNames.toSeq.sorted
     }
-    assert(binaryScans.sortBy(_.size) == Seq(Seq("path"), Seq("content", "path")),
-      s"binaryFile scans: $binaryScans")
-    val manifestExchanges = collect(plan) {
-      case e: ShuffleExchangeExec => e.outputPartitioning
-    }.collect {
-      case h: HashPartitioning if h.expressions.exists {
-        case a: Attribute => a.name == "edinet_code"
-        case _ => false
-      } => h
-    }
-    assert(manifestExchanges.size == 1, s"exchanges on edinet_code: $manifestExchanges")
+    assert(binaryScans == Seq(Seq("content", "path")), s"binaryFile scans: $binaryScans")
 
-    // the per-file rules run inside the parse: nothing re-groups by file
+    // the winners are picked on the driver and the master is deduped in
+    // one task, so nothing is shuffled by company
     def keyNames(keys: Seq[Expression]): Seq[String] = keys.collect { case a: Attribute => a.name }
-    val fileExchanges = collect(plan) {
+    val hashKeys = collect(plan) {
       case e: ShuffleExchangeExec => e.outputPartitioning
-    }.collect { case h: HashPartitioning if keyNames(h.expressions).contains("file") => h }
-    assert(fileExchanges.isEmpty, s"exchanges on file: $fileExchanges")
-    // the only windows are BestFile's pick and the company master's
-    // dedupe (none at all once a session's top-k rewrite plans them)
+    }.collect { case h: HashPartitioning => keyNames(h.expressions) }
+    assert(!hashKeys.flatten.exists(Set("edinet_code", MasterCols.EdinetCode, "file")),
+      s"exchanges keyed on: $hashKeys")
+    // the per-file rules run inside the parse and the picks are folds:
+    // no window, whatever strategies the session has installed
     val windows = collect(plan) { case w: WindowExec => keyNames(w.partitionSpec) }
-    assert(windows.toSet.subsetOf(Set(Seq("edinet_code"), Seq(MasterCols.EdinetCode))),
-      s"window partition keys: $windows")
+    assert(windows.isEmpty, s"window partition keys: $windows")
+  }
+
+  /** The CSV's data lines, sorted, from one [[Pipeline.run]]. */
+  private def csvRows(fixture: (String, String)): Seq[String] = {
+    val out = tempDir().resolve("out")
+    assert(Pipeline.run(spark, fixture._1, fixture._2, out.toString))
+    val csv = out.resolve("japan_company_data")
+    csv.toFile.list().toSeq.filter(_.startsWith("part-")).flatMap { n =>
+      java.nio.file.Files.readAllLines(csv.resolve(n)).asScala.drop(1)
+    }.sorted
+  }
+
+  /** (master csv, landing dir `name`): the fixture master (E00001 twice,
+    * the first row wins) and filings with corrections, a same-date CSV
+    * and XBRL pair, a later quarterly report, junk and an unknown code. */
+  private def corrections(name: String): (String, String) = {
+    val dir = tempDir()
+    val files = java.nio.file.Files.createDirectories(dir.resolve(name))
+    writeStatementCsv(files, "E00001_20240401_120.csv", statementCsvContent())
+    writeXbrl(files, "E00001_20240402_130.xbrl", xbrlContent())
+    writeStatementCsv(files, "E00002_20240401_120.csv",
+      statementCsvContent(series = Seq(("CurrentYearDuration", "JPY", "999"))))
+    writeStatementCsv(files, "E00002_20240405_130.csv", statementCsvContent(fyEnd = "2023-12-31"))
+    writeStatementCsv(files, "E00002_20240409_130.csv", statementCsvContent(fyEnd = "2022-12-31"))
+    writeStatementCsv(files, "E00006_20240401_120.csv", statementCsvContent(fyEnd = "2021-03-31"))
+    writeXbrl(files, "E00006_20240401_120.xbrl", xbrlContent())
+    writeStatementCsv(files, "E00006_20240901_140.csv", statementCsvContent())
+    writeStatementCsv(files, "E99999_20240401_120.csv", statementCsvContent())
+    writeStatementCsv(files, "readme_E1_2024.csv", statementCsvContent())
+    (writeMasterCsv(dir).toString, files.toString)
+  }
+
+  test("settings sweep: the same CSV rows under shuffle partitions {1, 3, 32}, AQE on and off") {
+    for (fx <- Seq(fixture, corrections("files"))) {
+      val runs = for (aqe <- Seq("true", "false"); n <- Seq("1", "3", "32")) yield
+        withConf("spark.sql.adaptive.enabled" -> aqe, "spark.sql.shuffle.partitions" -> n)(csvRows(fx))
+      assert(runs.distinct.size == 1, s"rows differ across settings: ${runs.map(_.size)}")
+    }
+    val rows = csvRows(corrections("files"))
+    assert(rows.size == 15)
+    // Alpha's first master row and its XBRL correction, the last Beta
+    // correction (fiscal 2022), Zeta's CSV (fiscal 2021) over its XBRL
+    assert(rows.contains("2024,Alpha Corp,Transportation equipment,Japan,50000,JPY"))
+    assert(!rows.exists(_.contains("Alpha Dup")))
+    assert(rows.filter(_.contains(",Beta KK,")).map(_.take(4)) == Seq("2018", "2019", "2020", "2021", "2022"))
+    assert(rows.filter(_.contains(",Zeta Holdings,")).map(_.take(4)) == Seq("2017", "2018", "2019", "2020", "2021"))
+  }
+
+  test("a landing dir whose path holds a space and non-ASCII text gives the same rows") {
+    assert(csvRows(corrections("受信 files")) == csvRows(corrections("files")))
   }
 }
