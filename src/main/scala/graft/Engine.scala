@@ -20,9 +20,6 @@ object Engine {
     TableNames.foreach { name =>
       queries.Tables.t(spark, sfDir, name).createOrReplaceTempView(name)
     }
-    expressions.SimHash60.register(spark)
-    expressions.SortedIntersectSize.register(spark)
-    expressions.Pmd5Hash60.register(spark)
-    expressions.CommonPrefixLen.register(spark)
+    GraftExtensions.register(spark)
   }
 }

@@ -1,10 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSessionExtensions
+import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.analysis.FunctionRegistry.FunctionBuilder
+import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 
-import graft.expressions.{HilbertIndex32, Pmd5Hash60, RewriteSortedIntersect, SimHash60, SortedIntersectSize}
+import graft.expressions._
 
 /** Session-extension entry point: makes the engine's native expressions
   * available as SQL functions in ANY session configured with
@@ -12,31 +13,40 @@ import graft.expressions.{HilbertIndex32, Pmd5Hash60, RewriteSortedIntersect, Si
   *   spark.sql.extensions=graft.GraftExtensions
   *
   * (cluster deployment path — no code changes in the consuming app).
-  * Locally, `SimHash60.register(spark)` / `SortedIntersectSize.register`
-  * do the same for an already-built session.
+  * For an already-built session, `GraftExtensions.register(spark)`
+  * (called by `Engine.attach`) installs the same functions.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
   override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      FunctionIdentifier("simhash60"),
-      new ExpressionInfo(classOf[SimHash60].getName, "simhash60"),
-      (children: Seq[Expression]) => SimHash60(children.head)))
-    ext.injectFunction((
-      FunctionIdentifier("sorted_intersect_size"),
-      new ExpressionInfo(classOf[SortedIntersectSize].getName, "sorted_intersect_size"),
-      (children: Seq[Expression]) => SortedIntersectSize(children(0), children(1))))
-    ext.injectFunction((
-      FunctionIdentifier("hilbert32"),
-      new ExpressionInfo(classOf[HilbertIndex32].getName, "hilbert32"),
-      (children: Seq[Expression]) => HilbertIndex32(children(0), children(1))))
-    ext.injectFunction((
-      FunctionIdentifier("pmd5_60"),
-      new ExpressionInfo(classOf[Pmd5Hash60].getName, "pmd5_60"),
-      (children: Seq[Expression]) => Pmd5Hash60.build(children)))
+    GraftExtensions.functions.foreach(ext.injectFunction)
     // size(array_intersect(array_sort(a), array_sort(b))) -> merge walk
     ext.injectOptimizerRule(_ => RewriteSortedIntersect)
     // grouped top-k operator: partial/final bounded heaps, no sort
     ext.injectPlannerStrategy(_ => graft.plans.TopKPerKeyStrategy)
   }
+}
+
+object GraftExtensions {
+
+  /** The native SQL functions, one row each: both routes install this
+    * list, so a session gets the same functions either way. */
+  val functions: Seq[(FunctionIdentifier, ExpressionInfo, FunctionBuilder)] = Seq(
+    fn[SimHash60]("simhash60")(c => SimHash60(c.head)),
+    fn[SortedIntersectSize]("sorted_intersect_size")(c => SortedIntersectSize(c(0), c(1))),
+    fn[HilbertIndex32]("hilbert32")(c => HilbertIndex32(c(0), c(1))),
+    fn[Pmd5Hash60]("pmd5_60")(Pmd5Hash60.build),
+    fn[CommonPrefixLen]("common_prefix_len")(c => CommonPrefixLen(c(0), c(1))))
+
+  /** Installs every native function missing from `spark`'s registry. */
+  def register(spark: SparkSession): Unit = {
+    val registry = spark.sessionState.functionRegistry
+    functions.foreach { case (id, info, build) =>
+      if (!registry.functionExists(id)) registry.registerFunction(id, info, build)
+    }
+  }
+
+  private def fn[E](name: String)(build: FunctionBuilder)(
+      implicit tag: scala.reflect.ClassTag[E]) =
+    (FunctionIdentifier(name), new ExpressionInfo(tag.runtimeClass.getName, name), build)
 }

@@ -42,6 +42,10 @@ object BestFile {
   val edinetCode: UserDefinedFunction =
     udf((path: String) => parse(path).map(_.edinetCode).orNull)
 
+  /** The format (`csv` or `xbrl`) of the file name at the end of a path
+    * column, through [[parse]]; null for a name it skips. */
+  val fmt: UserDefinedFunction = udf((path: String) => parse(path).map(_.fmt).orNull)
+
   /** Top-1-per-company over `files` in ingest order: only target doc
     * types compete (the reference filters the doc list before download,
     * src/extract.py:158, so a stray quarterly report must not displace

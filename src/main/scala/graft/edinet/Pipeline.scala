@@ -90,24 +90,26 @@ object Pipeline {
     * its files would expand to one root per file and, past Spark's
     * parallel-discovery threshold, list them in a job of its own. */
   def transform(spark: SparkSession, masterCsv: String, filesDir: String): DataFrame = {
-    import spark.implicits._
     val companies = CompanyMaster.load(spark, masterCsv)
 
     // The driver already holds the listing (loading the dir listed it to
     // plan the scan), so the winners are picked from it before any job,
     // in filename order (the stand-in for the reference's list order).
-    // `inputFiles` gives URIs; the join needs the scan's `path` form.
+    // `inputFiles` gives URIs; the scan's `path` column holds the decoded
+    // Path string, and its `_metadata.file_path` that Path's URI.
     val bin = spark.read.format("binaryFile").load(filesDir)
     val landed = bin.inputFiles.map(u => new Path(new URI(u)).toString).sorted.toSeq
-    val best = BestFile.pick(landed.flatMap(p => BestFile.parse(p).map(p -> _)))(_._2)
-      .map { case (path, key) => (path, key.fmt) }.toDF("path", "fmt")
+    val winners = BestFile.pick(landed.flatMap(p => BestFile.parse(p).map(p -> _)))(_._2)
+      .map { case (p, _) => new Path(p).toUri.toString }
 
-    // Parse only the winners (dedup-before-parse, SURVEY §4): one scan of
-    // the landed bytes, joined against the broadcast winners, then one
-    // parse that dispatches on each winner's format.
-    val winners = bin.select(col("path"), col("content")).join(broadcast(best), Seq("path"))
+    // Parse only the winners (dedup-before-parse, SURVEY §4): the scan
+    // keeps a file by its `_metadata.file_path`, which Spark prunes at
+    // listing, so a losing file's bytes are never read; one parse then
+    // dispatches on each winner's format.
+    val files = bin.filter(col("_metadata.file_path").isin(winners: _*))
+      .select(col("path"), col("content"), BestFile.fmt(col("path")).as("fmt"))
     // edinet_code from the filename (filename-as-metadata, SURVEY §1.1)
-    val series = StatementSources.parse(winners)
+    val series = StatementSources.parse(files)
       .withColumn("edinet_code", BestFile.edinetCode(col("file")))
 
     RevenueTransform(series, companies)

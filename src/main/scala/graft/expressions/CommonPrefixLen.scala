@@ -75,15 +75,8 @@ case class CommonPrefixLen(left: Expression, right: Expression)
 }
 
 object CommonPrefixLen {
-  def register(spark: SparkSession): Unit =
-    if (!spark.sessionState.functionRegistry.functionExists(
-        org.apache.spark.sql.catalyst.FunctionIdentifier("common_prefix_len")))
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "common_prefix_len",
-        exprs => CommonPrefixLen(exprs(0), exprs(1)), "scala_udf")
-
-  /** Session-free Column form — see [[Pmd5Hash60.apply]]; `register`
-    * stays for plain-SQL use. */
+  /** Session-free Column form — see [[Pmd5Hash60.apply]]; plain SQL
+    * reaches it as `common_prefix_len` ([[graft.GraftExtensions.functions]]). */
   def apply(spark: SparkSession, a: Column, b: Column): Column =
     org.apache.spark.sql.GraftSqlBridge.column(CommonPrefixLen(
       org.apache.spark.sql.GraftSqlBridge.expression(a),

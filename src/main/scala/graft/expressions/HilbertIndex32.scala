@@ -91,17 +91,8 @@ case class HilbertIndex32(left: Expression, right: Expression)
 }
 
 object HilbertIndex32 {
-  /** Register in the active session's function registry (idempotent) —
-    * the same public seam [[SimHash60]] uses, since Spark 4 keeps
-    * Column<->Expression conversion private. */
-  def register(spark: SparkSession): Unit =
-    if (!spark.sessionState.functionRegistry
-        .functionExists(org.apache.spark.sql.catalyst.FunctionIdentifier("hilbert32")))
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "hilbert32", exprs => HilbertIndex32(exprs(0), exprs(1)), "scala_udf")
-
-  /** Session-free Column form — see [[Pmd5Hash60.apply]]; `register`
-    * stays for plain-SQL use. */
+  /** Session-free Column form — see [[Pmd5Hash60.apply]]; plain SQL
+    * reaches it as `hilbert32` ([[graft.GraftExtensions.functions]]). */
   def apply(spark: SparkSession, x: Column, y: Column): Column =
     org.apache.spark.sql.GraftSqlBridge.column(HilbertIndex32(
       org.apache.spark.sql.GraftSqlBridge.expression(x),

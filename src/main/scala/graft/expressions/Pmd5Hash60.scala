@@ -78,26 +78,20 @@ object Pmd5Hash60 {
       ((d(6) & 0xffL) << 4) | ((d(7) & 0xffL) >>> 4)
   }
 
-  /** Idempotent session registration (the public Column<->Expression
-    * seam in Spark 4 is the function registry; see [[SimHash60]]). */
+  /** The SQL function builder behind `pmd5_60`
+    * ([[graft.GraftExtensions.functions]]). */
   private[graft] def build(exprs: Seq[Expression]): Pmd5Hash60 = {
     require(exprs.length == 1,
       s"pmd5_60 takes exactly 1 argument, got ${exprs.length}")
     Pmd5Hash60(exprs.head)
   }
 
-  def register(spark: SparkSession): Unit =
-    if (!spark.sessionState.functionRegistry
-        .functionExists(org.apache.spark.sql.catalyst.FunctionIdentifier("pmd5_60")))
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "pmd5_60", build, "scala_udf")
-
   /** Session-free Column form (the CharNgramHashes60/MinhashAll rule):
     * the expression rides inside the Column itself, so the frame can be
     * analyzed by ANY session — including a streaming foreachBatch
     * clone joining a static frame built on the outer session, where
-    * the old temp-function spelling failed to resolve. `register`
-    * stays for plain-SQL use (Engine.attach / GraftExtensions). */
+    * the old temp-function spelling failed to resolve. Plain SQL reaches
+    * it as `pmd5_60` (Engine.attach / GraftExtensions). */
   def apply(spark: SparkSession, s: Column): Column =
     org.apache.spark.sql.GraftSqlBridge.column(
       Pmd5Hash60(org.apache.spark.sql.GraftSqlBridge.expression(s)))

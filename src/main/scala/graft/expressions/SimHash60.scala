@@ -80,17 +80,8 @@ case class SimHash60(child: Expression)
 }
 
 object SimHash60 {
-  /** Spark 4 keeps Column<->Expression conversion private, so the
-    * public seam is the session function registry: register once
-    * (idempotent), then build the call with `call_function`. */
-  def register(spark: SparkSession): Unit =
-    if (!spark.sessionState.functionRegistry
-        .functionExists(org.apache.spark.sql.catalyst.FunctionIdentifier("simhash60")))
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "simhash60", exprs => SimHash60(exprs.head), "scala_udf")
-
-  /** Session-free Column form — see [[Pmd5Hash60.apply]]; `register`
-    * stays for plain-SQL use. */
+  /** Session-free Column form — see [[Pmd5Hash60.apply]]; plain SQL
+    * reaches it as `simhash60` ([[graft.GraftExtensions.functions]]). */
   def apply(spark: SparkSession, tokenHashes: Column): Column =
     org.apache.spark.sql.GraftSqlBridge.column(
       SimHash60(org.apache.spark.sql.GraftSqlBridge.expression(tokenHashes)))

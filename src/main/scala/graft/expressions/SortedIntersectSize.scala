@@ -85,15 +85,9 @@ case class SortedIntersectSize(left: Expression, right: Expression)
 }
 
 object SortedIntersectSize {
-  def register(spark: SparkSession): Unit =
-    if (!spark.sessionState.functionRegistry.functionExists(
-        org.apache.spark.sql.catalyst.FunctionIdentifier("sorted_intersect_size")))
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "sorted_intersect_size",
-        exprs => SortedIntersectSize(exprs(0), exprs(1)), "scala_udf")
-
-  /** Session-free Column form — see [[Pmd5Hash60.apply]]; `register`
-    * stays for plain-SQL use (and the RewriteSortedIntersect rule). */
+  /** Session-free Column form — see [[Pmd5Hash60.apply]]; plain SQL
+    * reaches it as `sorted_intersect_size`
+    * ([[graft.GraftExtensions.functions]]). */
   def apply(spark: SparkSession, a: Column, b: Column): Column =
     org.apache.spark.sql.GraftSqlBridge.column(SortedIntersectSize(
       org.apache.spark.sql.GraftSqlBridge.expression(a),

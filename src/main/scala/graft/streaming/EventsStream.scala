@@ -2,10 +2,11 @@ package graft.streaming
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types._
+
+import EventState.{hourOf, hours, micros, ordered, step, timestamp, HourUs}
 
 /** Structured Streaming over the `events` table shape: windowed
   * aggregation with watermarking, and stateful sessionization via
@@ -228,12 +229,8 @@ object EventsStream {
   case class Event(event_id: Long, ts: Timestamp, user_id: Long,
       event_type: String, value: Double)
 
-  case class HourBucket(hr: Timestamp, n: Long)
-  case class AnomalyState(open: List[HourBucket], m: Long, tot: Long, ss: Long)
   case class AnomalyOut(event_type: String, hr: Timestamp, cnt: Long,
       m_prior: Long, is_anomaly: Boolean)
-
-  private val HourUs = 3600000000L
 
   /** Online ingest anomaly detection — the stateful twin of the batch
     * q80 query: per event type, each CLOSED hourly bucket is flagged
@@ -242,66 +239,24 @@ object EventsStream {
     * batch agree bit-for-bit), then folded into those stats.
     *
     * State per type is O(1) running stats plus the open buckets still
-    * inside the watermark horizon — bounded at any event rate. A bucket
-    * closes when the watermark passes its end (no admissible row can
-    * land in it anymore: rows older than the watermark are dropped
-    * upstream), and closes are processed in hour order, so a backfill
-    * replay of the same files in any order emits identical flags.
-    * Batch mode (no watermark) closes everything in hour order: the
-    * output IS the q80 result.
+    * inside the watermark horizon — bounded at any event rate. Buckets
+    * close and fold as [[EventState.hours]] does, so a backfill replay
+    * of the same files in any order emits identical flags. Batch mode
+    * (no watermark) closes everything in hour order: the output IS the
+    * q80 result.
     */
   def anomalyStream(events: Dataset[Event], watermarkDelay: String = "2 hours")(
-      implicit outEnc: org.apache.spark.sql.Encoder[AnomalyOut],
-      stEnc: org.apache.spark.sql.Encoder[AnomalyState]): Dataset[AnomalyOut] = {
-    val streaming = events.isStreaming
-    events
-      .withWatermark("ts", watermarkDelay)
-      .groupByKey(_.event_type)(org.apache.spark.sql.Encoders.STRING)
-      .flatMapGroupsWithState[AnomalyState, AnomalyOut](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (etype: String, batch: Iterator[Event], state: GroupState[AnomalyState]) =>
-          val st = state.getOption.getOrElse(AnomalyState(Nil, 0L, 0L, 0L))
-          // merge incoming events into hour buckets (hour starts are
-          // whole epoch hours, so micros are exact in Timestamp millis)
-          val incoming = batch.toSeq
-            .groupBy(e => Math.floorDiv(micros(e.ts), HourUs) * HourUs)
-            .view.mapValues(_.size.toLong).toMap
-          val merged = (st.open.map(b => micros(b.hr) -> b.n).toMap.toSeq ++ incoming.toSeq)
-            .groupBy(_._1).view.mapValues(_.map(_._2).sum).toMap
-          // closed = no admissible future row can land in the bucket:
-          // rows with ts < watermark are dropped upstream, so hour h is
-          // final once watermark >= hour end
-          val wmUs =
-            if (streaming) state.getCurrentWatermarkMs() * 1000L else Long.MaxValue
-          val (closed, open) = merged.partition { case (hrUs, _) => hrUs + HourUs <= wmUs }
-          var (m, tot, ss) = (st.m, st.tot, st.ss)
-          val outs = closed.toSeq.sortBy(_._1).map { case (hrUs, c) =>
-            val dev = m * c - tot
-            val flag = m >= 2 && dev * dev * (m - 1) > 9 * m * (m * ss - tot * tot)
-            val o = AnomalyOut(etype, new Timestamp(hrUs / 1000L), c, m, flag)
-            m += 1; tot += c; ss += c * c
-            o
-          }
-          // running stats persist even with no open bucket — they are
-          // the prior for every future hour of this type
-          if (open.isEmpty && m == 0) { if (state.exists) state.remove() }
-          else {
-            state.update(AnomalyState(
-              open.toSeq.sortBy(_._1)
-                .map { case (u, n) => HourBucket(new Timestamp(u / 1000L), n) }.toList,
-              m, tot, ss))
-            if (open.nonEmpty) {
-              // fire when the earliest open bucket becomes closable
-              val nextCloseMs = (open.keys.min + HourUs) / 1000L
-              state.setTimeoutTimestamp(
-                math.max(nextCloseMs, state.getCurrentWatermarkMs() + 1))
-            }
-          }
-          outs.iterator
-      }
-  }
-  case class QBucket(hr: Timestamp, n: Long, buf: graft.functions.Kll.KllBuf)
-  case class QuantState(open: List[QBucket])
+      implicit outEnc: Encoder[AnomalyOut]): Dataset[AnomalyOut] =
+    step(events, watermarkDelay, _.event_type, (List.empty[(Long, Long)], (0L, 0L, 0L))) {
+      (etype, batch, st, wmUs) =>
+        hours(st, batch, wmUs)(_.size.toLong, _ + _) { case ((m, tot, ss), hr, c) =>
+          val dev = m * c - tot
+          val flag = m >= 2 && dev * dev * (m - 1) > 9 * m * (m * ss - tot * tot)
+          ((m + 1, tot + c, ss + c * c),
+            Some(AnomalyOut(etype, new Timestamp(hr / 1000L), c, m, flag)))
+        }
+    }
+
   case class QuantOut(event_type: String, hr: Timestamp, n: Long,
       p50_micro: Long, p99_micro: Long)
 
@@ -324,114 +279,47 @@ object EventsStream {
     */
   def quantileStream(events: Dataset[Event], capacity: Int = 1 << 15,
       watermarkDelay: String = "2 hours")(
-      implicit outEnc: org.apache.spark.sql.Encoder[QuantOut],
-      stEnc: org.apache.spark.sql.Encoder[QuantState]): Dataset[QuantOut] = {
+      implicit outEnc: Encoder[QuantOut]): Dataset[QuantOut] = {
     import graft.functions.Kll
-    val streaming = events.isStreaming
-    events
-      .withWatermark("ts", watermarkDelay)
-      .groupByKey(_.event_type)(org.apache.spark.sql.Encoders.STRING)
-      .flatMapGroupsWithState[QuantState, QuantOut](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (etype: String, batch: Iterator[Event], state: GroupState[QuantState]) =>
-          val st = state.getOption.getOrElse(QuantState(Nil))
-          // per-hour batch sketches; event_id insertion order makes the
-          // buffer bytes (not just the result) replay-reproducible. The
-          // row count rides along beside the buffer — weight(buf) now
-          // equals it exactly in every regime (weight-conserving
-          // compaction), but the explicit count keeps the output
-          // independent of sketch internals
-          val incoming = batch.toSeq
-            .groupBy(e => Math.floorDiv(micros(e.ts), HourUs) * HourUs)
-            .view.mapValues { es =>
-              (es.size.toLong, es.sortBy(_.event_id).foldLeft(Kll.empty)((b, e) =>
-                Kll.insert(b, math.floor(e.value * 1000000.0).toLong, capacity)))
-            }
-            .toMap
-          val merged = (st.open.map(b => micros(b.hr) -> (b.n, b.buf)) ++ incoming.toSeq)
-            .groupBy(_._1).view
-            .mapValues(_.map(_._2).reduce((a, b) =>
-              (a._1 + b._1, Kll.merge(a._2, b._2, capacity))))
-            .toMap
-          val wmUs =
-            if (streaming) state.getCurrentWatermarkMs() * 1000L else Long.MaxValue
-          val (closed, open) = merged.partition { case (hrUs, _) => hrUs + HourUs <= wmUs }
-          val outs = closed.toSeq.sortBy(_._1).map { case (hrUs, (n, buf)) =>
-            val qs = Kll.quantiles(buf, Seq(50, 99))
-            QuantOut(etype, new Timestamp(hrUs / 1000L), n, qs(0), qs(1))
-          }
-          if (open.isEmpty) { if (state.exists) state.remove() }
-          else {
-            state.update(QuantState(
-              open.toSeq.sortBy(_._1)
-                .map { case (u, (n, b)) => QBucket(new Timestamp(u / 1000L), n, b) }.toList))
-            val nextCloseMs = (open.keys.min + HourUs) / 1000L
-            state.setTimeoutTimestamp(
-              math.max(nextCloseMs, state.getCurrentWatermarkMs() + 1))
-          }
-          outs.iterator
+    // no carry across hours: the constant `false` stands in for one
+    step(events, watermarkDelay, _.event_type,
+        (List.empty[(Long, (Long, Kll.KllBuf))], false)) { (etype, batch, st, wmUs) =>
+      // per-hour sketches; event_id insertion order makes the buffer
+      // bytes (not just the result) replay-reproducible. The row count
+      // rides along beside the buffer, so the output does not depend on
+      // sketch internals
+      hours(st, batch, wmUs)(
+        es => (es.size.toLong, es.sortBy(_.event_id).foldLeft(Kll.empty)((b, e) =>
+          Kll.insert(b, math.floor(e.value * 1000000.0).toLong, capacity))),
+        (a, b) => (a._1 + b._1, Kll.merge(a._2, b._2, capacity))) {
+        case (c, hr, (n, buf)) =>
+          val qs = Kll.quantiles(buf, Seq(50, 99))
+          (c, Some(QuantOut(etype, new Timestamp(hr / 1000L), n, qs(0), qs(1))))
       }
+    }
   }
 
-  case class DriftBucket(hr: Timestamp, hist: Seq[Long])
-  case class DriftState(open: List[DriftBucket], lastHr: Option[Timestamp],
-      lastHist: Seq[Long])
-  case class DriftOut(event_type: String, hr: Timestamp, n: Long,
-      prev_n: Long, drift_bp: Long)
-
-  case class EwmaBucket(hr: Timestamp, n: Long)
-  case class EwmaState(open: List[EwmaBucket], last: Option[Long])
-  case class EwmaOut(event_type: String, hr: Timestamp, n: Long, ewma: Long)
-
-  case class PendEv(ts: Timestamp, event_id: Long, event_type: String)
-  case class TransState(pending: List[PendEv], lastType: Option[String])
   case class TransOut(user_id: Long, from_type: String, to_type: String,
       ts: Timestamp, event_id: Long)
 
   /** Streaming event-type transitions — the incremental twin of q158's
     * lag window: per user, each event emits one (previous type ->
     * this type) pair in exact (ts, event_id) order. Order under
-    * out-of-order ARRIVAL is what the state buys: an event is only
-    * processed once the watermark proves nothing earlier can still
-    * arrive (ts strictly below the watermark — Spark admits ts == wm,
-    * so that boundary stays buffered), and the buffer holds at most
-    * the watermark horizon's events per user plus ONE string — the
-    * last emitted type — forever. Batch mode closes everything: the
-    * emitted pairs ARE the batch lag query's rows, and their (from,
-    * to) counts aggregate to q158's matrix exactly. */
+    * out-of-order ARRIVAL is what the state buys: events are held and
+    * processed as [[EventState.ordered]] does, and the state holds at
+    * most the watermark horizon's events per user plus ONE string —
+    * the last emitted type — forever. Batch mode closes everything: the
+    * emitted pairs ARE the batch lag query's rows, and their (from, to)
+    * counts aggregate to q158's matrix exactly. */
   def transitionStream(events: Dataset[Event], watermarkDelay: String = "2 hours")(
-      implicit outEnc: org.apache.spark.sql.Encoder[TransOut],
-      stEnc: org.apache.spark.sql.Encoder[TransState]): Dataset[TransOut] = {
-    val streaming = events.isStreaming
-    events
-      .withWatermark("ts", watermarkDelay)
-      .groupByKey(_.user_id)(org.apache.spark.sql.Encoders.scalaLong)
-      .flatMapGroupsWithState[TransState, TransOut](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (uid: Long, batch: Iterator[Event], state: GroupState[TransState]) =>
-          val st = state.getOption.getOrElse(TransState(Nil, None))
-          val all = (st.pending ++
-            batch.map(e => PendEv(e.ts, e.event_id, e.event_type)))
-            .sortBy(e => (micros(e.ts), e.event_id))
-          val wmUs =
-            if (streaming) state.getCurrentWatermarkMs() * 1000L else Long.MaxValue
-          val (closed, open) = all.partition(e => micros(e.ts) < wmUs)
-          var last = st.lastType
-          val outs = closed.flatMap { e =>
-            val o = last.map(f => TransOut(uid, f, e.event_type, e.ts, e.event_id))
-            last = Some(e.event_type)
-            o
-          }
-          state.update(TransState(open, last))
-          if (open.nonEmpty)
-            state.setTimeoutTimestamp(
-              math.max(micros(open.head.ts) / 1000L + 1,
-                state.getCurrentWatermarkMs() + 1))
-          outs.iterator
-      }
-  }
+      implicit outEnc: Encoder[TransOut]): Dataset[TransOut] =
+    step(events, watermarkDelay, _.user_id, (List.empty[Event], Option.empty[String])) {
+      (uid, batch, st, wmUs) =>
+        ordered(st, batch, wmUs) { (last, e) =>
+          (Some(e.event_type), last.map(f => TransOut(uid, f, e.event_type, e.ts, e.event_id)))
+        }
+    }
 
-  case class PatState(pending: List[PendEv], views: List[PendEv])
   case class PatOut(user_id: Long, view_ts: Timestamp, view_event_id: Long,
       hit: Boolean, latency_us: Option[Long])
 
@@ -446,65 +334,36 @@ object EventsStream {
     * horizon rule is what bounds state: pending views live at most
     * 1 h + watermark delay, unlike a naive formulation that would
     * hold every unanswered view forever. Events process in exact
-    * (ts, event_id) order under the transitionStream watermark-buffer
-    * discipline, so replay and arrival order cannot change a verdict.
-    * Batch mode closes everything and the output rows ARE q173's
-    * per-view classification (MiningQueries.patternViews). */
+    * (ts, event_id) order ([[EventState.ordered]]), so replay and
+    * arrival order cannot change a verdict. Batch mode closes
+    * everything and the output rows ARE q173's per-view
+    * classification (MiningQueries.patternViews). */
   def patternStream(events: Dataset[Event], watermarkDelay: String = "2 hours")(
-      implicit outEnc: org.apache.spark.sql.Encoder[PatOut],
-      stEnc: org.apache.spark.sql.Encoder[PatState]): Dataset[PatOut] = {
-    val streaming = events.isStreaming
-    events
-      .withWatermark("ts", watermarkDelay)
-      .groupByKey(_.user_id)(org.apache.spark.sql.Encoders.scalaLong)
-      .flatMapGroupsWithState[PatState, PatOut](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (uid: Long, batch: Iterator[Event], state: GroupState[PatState]) =>
-          val st = state.getOption.getOrElse(PatState(Nil, Nil))
-          val all = (st.pending ++
-            batch.map(e => PendEv(e.ts, e.event_id, e.event_type)))
-            .sortBy(e => (micros(e.ts), e.event_id))
-          val wmUs =
-            if (streaming) state.getCurrentWatermarkMs() * 1000L else Long.MaxValue
-          val (closed, open) = all.partition(e => micros(e.ts) < wmUs)
-          var views = st.views
-          val outs = scala.collection.mutable.ListBuffer[PatOut]()
-          closed.foreach { e =>
-            e.event_type match {
-              case "view" => views = views :+ e
-              case "purchase" =>
-                views.foreach { v =>
-                  val lat = micros(e.ts) - micros(v.ts)
-                  val hit = lat <= HourUs
-                  outs += PatOut(uid, v.ts, v.event_id, hit,
-                    if (hit) Some(lat) else None)
-                }
-                views = Nil
-              case "error" =>
-                views.foreach(v =>
-                  outs += PatOut(uid, v.ts, v.event_id, hit = false, None))
-                views = Nil
-              case _ => ()
-            }
+      implicit outEnc: Encoder[PatOut]): Dataset[PatOut] =
+    step(events, watermarkDelay, _.user_id, (List.empty[Event], List.empty[Event])) {
+      (uid, batch, st, wmUs) =>
+        def miss(v: Event) = PatOut(uid, v.ts, v.event_id, hit = false, None)
+        val (outs, (held, views), fire) = ordered(st, batch, wmUs) { (views, e) =>
+          e.event_type match {
+            case "view" => (views :+ e, Nil)
+            case "purchase" => (Nil, views.map { v =>
+              val lat = micros(e.ts) - micros(v.ts)
+              val hit = lat <= HourUs
+              PatOut(uid, v.ts, v.event_id, hit, if (hit) Some(lat) else None)
+            })
+            case "error" => (Nil, views.map(miss))
+            case _ => (views, Nil)
           }
-          // horizon expiry — in batch mode (wm = +inf) this closes the
-          // tail views that never saw a purchase or error, exactly the
-          // batch query's NULL-next-purchase misses
-          val (expired, alive) =
-            if (wmUs == Long.MaxValue) (views, Nil)
-            else views.partition(v => micros(v.ts) + HourUs < wmUs)
-          expired.foreach(v =>
-            outs += PatOut(uid, v.ts, v.event_id, hit = false, None))
-          state.update(PatState(open, alive))
-          val nexts =
-            open.headOption.map(e => micros(e.ts) / 1000L + 1).toList ++
-              alive.headOption.map(v => (micros(v.ts) + HourUs) / 1000L + 1)
-          if (nexts.nonEmpty)
-            state.setTimeoutTimestamp(
-              math.max(nexts.min, state.getCurrentWatermarkMs() + 1))
-          outs.iterator
-      }
-  }
+        }
+        // horizon expiry — in batch mode (wm = +inf) this closes the
+        // tail views that never saw a purchase or error, exactly the
+        // batch query's NULL-next-purchase misses
+        val (expired, alive) = views.partition(v => micros(v.ts) + HourUs < wmUs)
+        (outs ++ expired.map(miss), (held, alive),
+          (fire ++ alive.headOption.map(v => micros(v.ts) + HourUs + 1)).minOption)
+    }
+
+  case class EwmaOut(event_type: String, hr: Timestamp, n: Long, ewma: Long)
 
   /** Streaming integer EWMA — the incremental twin of batch q149: per
     * event type, each CLOSED hour's count folds into the running
@@ -516,48 +375,16 @@ object EventsStream {
     * order, so any replay order emits identical rows. Batch mode
     * closes everything: the output IS the q149 result. */
   def ewmaStream(events: Dataset[Event], watermarkDelay: String = "2 hours")(
-      implicit outEnc: org.apache.spark.sql.Encoder[EwmaOut],
-      stEnc: org.apache.spark.sql.Encoder[EwmaState]): Dataset[EwmaOut] = {
-    val streaming = events.isStreaming
-    events
-      .withWatermark("ts", watermarkDelay)
-      .groupByKey(_.event_type)(org.apache.spark.sql.Encoders.STRING)
-      .flatMapGroupsWithState[EwmaState, EwmaOut](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (etype: String, batch: Iterator[Event], state: GroupState[EwmaState]) =>
-          val st = state.getOption.getOrElse(EwmaState(Nil, None))
-          val incoming = batch.toSeq
-            .groupBy(e => Math.floorDiv(micros(e.ts), HourUs) * HourUs)
-            .view.mapValues(_.size.toLong).toMap
-          val merged = (st.open.map(b => micros(b.hr) -> b.n) ++ incoming.toSeq)
-            .groupBy(_._1).view.mapValues(_.map(_._2).sum).toMap
-          val wmUs =
-            if (streaming) state.getCurrentWatermarkMs() * 1000L else Long.MaxValue
-          val (closed, open) = merged.partition { case (hrUs, _) => hrUs + HourUs <= wmUs }
-          var last = st.last
-          val outs = closed.toSeq.sortBy(_._1).map { case (hrUs, n) =>
-            // Long / on non-negatives == Spark div == DuckDB // here
-            val s = last match { case None => n; case Some(p) => (p + n) / 2 }
-            last = Some(s)
-            EwmaOut(etype, new Timestamp(hrUs / 1000L), n, s)
-          }
-          state.update(EwmaState(
-            open.toSeq.sortBy(_._1)
-              .map { case (u, n) => EwmaBucket(new Timestamp(u / 1000L), n) }.toList,
-            last))
-          if (open.nonEmpty) {
-            val nextCloseMs = (open.keys.min + HourUs) / 1000L
-            state.setTimeoutTimestamp(
-              math.max(nextCloseMs, state.getCurrentWatermarkMs() + 1))
-          }
-          outs.iterator
-      }
-  }
+      implicit outEnc: Encoder[EwmaOut]): Dataset[EwmaOut] =
+    step(events, watermarkDelay, _.event_type, (List.empty[(Long, Long)], Option.empty[Long])) {
+      (etype, batch, st, wmUs) =>
+        hours(st, batch, wmUs)(_.size.toLong, _ + _) { (last, hr, n) =>
+          // Long / on non-negatives == Spark div == DuckDB // here
+          val s = last.fold(n)(p => (p + n) / 2)
+          (Some(s), Some(EwmaOut(etype, new Timestamp(hr / 1000L), n, s)))
+        }
+    }
 
-  case class TwapPending(us: Long, eventId: Long, cents: Long)
-  case class TwapBucket(hr: Timestamp, n: Long, totalUs: Long, weighted: Long)
-  case class TwapState(open: List[TwapBucket], buf: List[TwapPending],
-      lastUs: Option[Long], lastCents: Option[Long])
   case class TwapOut(event_type: String, hr: Timestamp, n_intervals: Long,
       total_us: Long, weighted_cents_us: Long, twap_milli: Long)
 
@@ -572,82 +399,53 @@ object EventsStream {
     * event stays open — its last interval is still unbounded), so
     * closes process in time order and any replay emits identical rows.
     *
-    * Ordering is the q158-twin discipline: events buffer in state until
-    * the watermark proves nothing earlier can arrive, then process in
-    * exact (ts, event_id) order — the interval structure needs true
-    * adjacency, which per-batch arrival order cannot promise. State
-    * per type: open-hour aggregates (3 longs each) + the in-horizon
-    * buffer + ONE carried last event. Value cents enter via the q39
-    * DECIMAL(12,2) house cast upstream; per-hour weighted sums are
-    * cents x micros longs (bounded: one hour's attributed intervals
-    * start within it, and even a month-long holding gap at max cents
-    * stays under 2^57). Batch mode closes everything, the final
-    * carried event contributing no interval — exactly q228's
-    * open-interval drop. */
+    * Ordering: events are held until the watermark reaches them
+    * (ts <= wm), then process in exact (ts, event_id) order — the
+    * interval structure needs true adjacency, which per-batch arrival
+    * order cannot promise. State per type: open-hour aggregates (3
+    * longs each) + the held events + ONE carried last event. Value
+    * cents enter via the q39 DECIMAL(12,2) house cast upstream;
+    * per-hour weighted sums are cents x micros longs (bounded: one
+    * hour's attributed intervals start within it, and even a month-long
+    * holding gap at max cents stays under 2^57). Batch mode closes
+    * everything, the final carried event contributing no interval —
+    * exactly q228's open-interval drop. */
   def twapStream(events: Dataset[Event], watermarkDelay: String = "2 hours")(
-      implicit outEnc: org.apache.spark.sql.Encoder[TwapOut],
-      stEnc: org.apache.spark.sql.Encoder[TwapState]): Dataset[TwapOut] = {
-    val streaming = events.isStreaming
-    events
-      .withWatermark("ts", watermarkDelay)
-      .groupByKey(_.event_type)(org.apache.spark.sql.Encoders.STRING)
-      .flatMapGroupsWithState[TwapState, TwapOut](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (etype: String, batch: Iterator[Event], state: GroupState[TwapState]) =>
-          val st = state.getOption.getOrElse(TwapState(Nil, Nil, None, None))
-          val wmUs =
-            if (streaming) state.getCurrentWatermarkMs() * 1000L else Long.MaxValue
-          // cents via the same exact decimal path the batch query takes
-          val incoming = batch.map(e => TwapPending(micros(e.ts), e.event_id,
-            BigDecimal(e.value).setScale(2, BigDecimal.RoundingMode.HALF_UP)
-              .*(100).toLongExact)).toList
-          val (ready, buf) = (st.buf ++ incoming)
-            .partition(_.us <= wmUs)
-          var lastUs = st.lastUs
-          var lastCents = st.lastCents
-          val deltas = scala.collection.mutable.Map.empty[Long, (Long, Long, Long)]
-          ready.sortBy(p => (p.us, p.eventId)).foreach { p =>
-            (lastUs, lastCents) match {
-              case (Some(lu), Some(lc)) =>
-                val dt = p.us - lu
-                val hr = Math.floorDiv(lu, HourUs) * HourUs
-                val (n, t, w) = deltas.getOrElse(hr, (0L, 0L, 0L))
-                deltas(hr) = (n + 1, t + dt, w + lc * dt)
-              case _ => ()
-            }
-            lastUs = Some(p.us); lastCents = Some(p.cents)
+      implicit outEnc: Encoder[TwapOut]): Dataset[TwapOut] =
+    // state: open hours (hr -> intervals, micros, cents x micros), held
+    // (us, event_id, cents) events, and the last processed (us, cents)
+    step(events, watermarkDelay, _.event_type, (List.empty[(Long, (Long, Long, Long))],
+        List.empty[(Long, Long, Long)], Option.empty[(Long, Long)])) {
+      case (etype, batch, (open0, held0, last0), wmUs) =>
+        // cents via the same exact decimal path the batch query takes
+        val incoming = batch.map(e => (micros(e.ts), e.event_id,
+          BigDecimal(e.value).setScale(2, BigDecimal.RoundingMode.HALF_UP).*(100).toLongExact))
+        val (ready, held) = (held0 ++ incoming).partition(_._1 <= wmUs)
+        val (last, deltas) = ready.sortBy(p => (p._1, p._2))
+          .foldLeft((last0, List.empty[(Long, (Long, Long, Long))])) {
+            case ((l, acc), (us, _, cents)) =>
+              (Some((us, cents)), l.fold(acc) { case (lu, lc) =>
+                (hourOf(lu), (1L, us - lu, lc * (us - lu))) :: acc })
           }
-          val merged = (st.open.map(b =>
-              micros(b.hr) -> (b.n, b.totalUs, b.weighted)) ++ deltas.toSeq)
-            .groupBy(_._1).view.mapValues(vs =>
-              (vs.map(_._2._1).sum, vs.map(_._2._2).sum, vs.map(_._2._3).sum))
-            .toMap
-          val lastHr = lastUs.map(u => Math.floorDiv(u, HourUs) * HourUs)
-            .getOrElse(Long.MinValue)
-          val (closed, open) = merged.partition { case (hrUs, _) =>
-            if (!streaming) true
-            else hrUs + HourUs <= wmUs && hrUs < lastHr
-          }
-          val outs = closed.toSeq.sortBy(_._1).map { case (hrUs, (n, t, w)) =>
-            // positives: Long / == the batch integral div; an hour whose
-            // every attributed interval is zero-length (identical
-            // timestamps) reports 0 rather than dividing by it
-            TwapOut(etype, new Timestamp(hrUs / 1000L), n, t, w,
-              if (t > 0) w * 10L / t else 0L)
-          }
-          state.update(TwapState(
-            open.toSeq.sortBy(_._1).map { case (u, (n, t, w)) =>
-              TwapBucket(new Timestamp(u / 1000L), n, t, w) }.toList,
-            buf, lastUs, lastCents))
-          if (streaming && (open.nonEmpty || buf.nonEmpty)) {
-            val nextCloseMs =
-              (open.keys ++ buf.map(_.us)).min / 1000L + HourUs / 1000L
-            state.setTimeoutTimestamp(
-              math.max(nextCloseMs, state.getCurrentWatermarkMs() + 1))
-          }
-          outs.iterator
-      }
-  }
+        val lastHr = last.fold(Long.MinValue)(l => hourOf(l._1))
+        val (closed, open) = (open0 ++ deltas)
+          .groupMapReduce(_._1)(_._2) { case ((n1, t1, w1), (n2, t2, w2)) =>
+            (n1 + n2, t1 + t2, w1 + w2) }
+          .toList.sortBy(_._1).partition { case (hr, _) =>
+            wmUs == Long.MaxValue || (hr + HourUs <= wmUs && hr < lastHr) }
+        val outs = closed.map { case (hr, (n, t, w)) =>
+          // positives: Long / == the batch integral div; an hour whose
+          // every attributed interval is zero-length (identical
+          // timestamps) reports 0 rather than dividing by it
+          TwapOut(etype, new Timestamp(hr / 1000L), n, t, w, if (t > 0) w * 10L / t else 0L)
+        }
+        // 1 h after the earliest open hour or held event, down to its millisecond
+        (outs, (open, held, last),
+          (open.map(_._1) ++ held.map(_._1)).minOption.map(us => us / 1000L * 1000L + HourUs))
+    }
+
+  case class DriftOut(event_type: String, hr: Timestamp, n: Long,
+      prev_n: Long, drift_bp: Long)
 
   /** Streaming hour-over-hour distribution drift — the incremental twin
     * of batch q113: per event type, each CLOSED hour's 8-bin value
@@ -659,9 +457,7 @@ object EventsStream {
     * process in hour order, so any replay order emits identical rows.
     * Batch mode closes everything: the output IS the q113 result. */
   def driftStream(events: Dataset[Event], watermarkDelay: String = "2 hours")(
-      implicit outEnc: org.apache.spark.sql.Encoder[DriftOut],
-      stEnc: org.apache.spark.sql.Encoder[DriftState]): Dataset[DriftOut] = {
-    val streaming = events.isStreaming
+      implicit outEnc: Encoder[DriftOut]): Dataset[DriftOut] = {
     // local copies: an object-field read inside the closure would
     // capture the (non-serializable) enclosing object
     val nBins = graft.queries.AdvancedQueries.DRIFT_BINS
@@ -671,87 +467,44 @@ object EventsStream {
     def binOf(v: Double): Int =
       if (v.isNaN) nBins - 1
       else math.min(nBins - 1, math.max(0, math.floor(v / binW).toInt))
-    events
-      .withWatermark("ts", watermarkDelay)
-      .groupByKey(_.event_type)(org.apache.spark.sql.Encoders.STRING)
-      .flatMapGroupsWithState[DriftState, DriftOut](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (etype: String, batch: Iterator[Event], state: GroupState[DriftState]) =>
-          val st = state.getOption.getOrElse(DriftState(Nil, None, Nil))
-          val incoming = batch.toSeq
-            .groupBy(e => Math.floorDiv(micros(e.ts), HourUs) * HourUs)
-            .view.mapValues { es =>
-              val h = Array.fill(nBins)(0L)
-              es.foreach(e => h(binOf(e.value)) += 1L)
-              h.toSeq
-            }.toMap
-          val merged = (st.open.map(b => micros(b.hr) -> b.hist) ++ incoming.toSeq)
-            .groupBy(_._1).view
-            .mapValues(_.map(_._2).reduce((a, b) => a.lazyZip(b).map(_ + _)))
-            .toMap
-          val wmUs =
-            if (streaming) state.getCurrentWatermarkMs() * 1000L else Long.MaxValue
-          val (closed, open) = merged.partition { case (hrUs, _) => hrUs + HourUs <= wmUs }
-          var lastHr = st.lastHr.map(micros)
-          var lastHist = st.lastHist
-          val outs = closed.toSeq.sortBy(_._1).flatMap { case (hrUs, hist) =>
-            val n = hist.sum
-            val out = lastHr match {
-              case Some(p) if p + HourUs == hrUs =>
-                val pn = lastHist.sum
-                val drift = hist.lazyZip(lastHist).map((c, pc) =>
-                  math.abs(c * 10000 / n - pc * 10000 / pn)).sum
-                Some(DriftOut(etype, new Timestamp(hrUs / 1000L), n, pn, drift))
-              case _ => None
-            }
-            lastHr = Some(hrUs); lastHist = hist
-            out
+    // carry: the last closed hour and its histogram
+    step(events, watermarkDelay, _.event_type,
+        (List.empty[(Long, Seq[Long])], (Option.empty[Long], Seq.empty[Long]))) {
+      (etype, batch, st, wmUs) =>
+        hours(st, batch, wmUs)(
+          es => {
+            val h = Array.fill(nBins)(0L)
+            es.foreach(e => h(binOf(e.value)) += 1L)
+            h.toSeq
+          },
+          (a, b) => a.lazyZip(b).map(_ + _)) { case ((lastHr, lastHist), hr, hist) =>
+          val n = hist.sum
+          val out = lastHr.filter(_ + HourUs == hr).map { _ =>
+            val pn = lastHist.sum
+            val drift = hist.lazyZip(lastHist).map((c, pc) =>
+              math.abs(c * 10000 / n - pc * 10000 / pn)).sum
+            DriftOut(etype, new Timestamp(hr / 1000L), n, pn, drift)
           }
-          state.update(DriftState(
-            open.toSeq.sortBy(_._1)
-              .map { case (u, h) => DriftBucket(new Timestamp(u / 1000L), h) }.toList,
-            lastHr.map(u => new Timestamp(u / 1000L)), lastHist))
-          if (open.nonEmpty) {
-            val nextCloseMs = (open.keys.min + HourUs) / 1000L
-            state.setTimeoutTimestamp(
-              math.max(nextCloseMs, state.getCurrentWatermarkMs() + 1))
-          }
-          outs.iterator
-      }
+          ((Some(hr), hist), out)
+        }
+    }
   }
 
-  // Timestamps kept as-is (micros precision); a millis round-trip would
-  // shift session boundaries vs the batch query
-  case class PartialSession(start: Timestamp, end: Timestamp, n: Int, value: Double)
-  case class SessionBuffer(sessions: List[PartialSession])
   case class SessionOut(user_id: Long, session_start: Timestamp,
       session_end: Timestamp, n_events: Int, session_value: Double)
 
-  /** Full-precision epoch micros of a Timestamp — gap comparisons must
-    * run at the data's micros precision: `getTime` truncates to millis,
-    * and a sub-millisecond boundary gap would merge here while the
-    * batch q35 query (micros arithmetic) splits. */
-  private def micros(t: Timestamp): Long =
-    Math.floorDiv(t.getTime, 1000L) * 1000000L + t.getNanos / 1000L
-
-  /** Gap-merge: each incoming event is a singleton session; the union
-    * with the buffered partials, sorted by start, folds adjacent
-    * intervals whose gap is <= gapMs — exactly the batch q35 session
-    * rule (compared in micros), but incremental and ORDER-INDEPENDENT:
-    * a late event that bridges two buffered sessions merges all three. */
-  private def gapMerge(existing: List[PartialSession], incoming: Seq[Event],
-      gapMs: Long): List[PartialSession] = {
-    val gapUs = gapMs * 1000L
-    val all = (existing ++ incoming.map(e => PartialSession(e.ts, e.ts, 1, e.value)))
-      .sortBy(s => (micros(s.start), micros(s.end)))
-    all.foldLeft(List.empty[PartialSession]) {
-      case (cur :: done, s) if micros(s.start) - micros(cur.end) <= gapUs =>
-        PartialSession(cur.start,
-          if (micros(s.end) > micros(cur.end)) s.end else cur.end,
-          cur.n + s.n, cur.value + s.value) :: done
+  /** Gap-merge of (start us, end us, n, value) sessions: sorted by
+    * start, adjacent intervals whose gap is <= gapUs fold — exactly the
+    * batch q35 session rule (compared in micros), but incremental and
+    * ORDER-INDEPENDENT: a late event that bridges two held sessions
+    * merges all three. */
+  private def gapMerge(sessions: List[(Long, Long, Int, Double)],
+      gapUs: Long): List[(Long, Long, Int, Double)] =
+    sessions.sortBy(s => (s._1, s._2)).foldLeft(List.empty[(Long, Long, Int, Double)]) {
+      case ((s0, e0, n0, v0) :: done, (s, e, n, v)) if s - e0 <= gapUs =>
+        (s0, math.max(e, e0), n0 + n, v0 + v) :: done
       case (acc, s) => s :: acc
     }.reverse
-  }
 
   /** Stateful sessionization (gap = 30 min): flatMapGroupsWithState
     * with an EVENT-TIME timeout, so closed sessions depend only on the
@@ -778,50 +531,19 @@ object EventsStream {
     * (start/end/n are exact). */
   def sessionize(events: Dataset[Event], gapMs: Long = 30 * 60 * 1000L,
       watermarkDelay: String = "2 hours")(
-      implicit outEnc: org.apache.spark.sql.Encoder[SessionOut],
-      stEnc: org.apache.spark.sql.Encoder[SessionBuffer]): Dataset[SessionOut] = {
-
-    // resolved at plan time: batch execution has no watermark — all
-    // input is present and every session is final. (Not inferred from
-    // a getCurrentWatermarkMs failure: swallowing arbitrary exceptions
-    // there would turn a genuine streaming-side error into silently
-    // closing every open session.)
-    val streaming = events.isStreaming
-    events
-      .withWatermark("ts", watermarkDelay)
-      .groupByKey(_.user_id)(org.apache.spark.sql.Encoders.scalaLong)
-      .flatMapGroupsWithState[SessionBuffer, SessionOut](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (userId: Long, batch: Iterator[Event], state: GroupState[SessionBuffer]) =>
-          val existing = state.getOption.map(_.sessions).getOrElse(Nil)
-          val merged = gapMerge(existing, batch.toSeq, gapMs)
-          val gapUs = gapMs * 1000L
-          // strict <: an event AT the watermark can still arrive and an
-          // event at exactly end+gap still joins the session; watermark
-          // is millis — compare in micros at the conservative boundary
-          val (closed, open) =
-            if (!streaming) (merged, Nil)
-            else {
-              val wmUs = state.getCurrentWatermarkMs() * 1000L
-              merged.partition(s => micros(s.end) + gapUs < wmUs)
-            }
-          if (open.isEmpty) {
-            if (state.exists) state.remove()
-          } else {
-            state.update(SessionBuffer(open))
-            // fire when the earliest pending session becomes closable:
-            // round the micros close-time UP to millis, and keep it
-            // strictly beyond the current watermark
-            val nextCloseMs = open.map(s =>
-              Math.floorDiv(micros(s.end) + gapUs + 999L, 1000L)).min
-            state.setTimeoutTimestamp(math.max(nextCloseMs, state.getCurrentWatermarkMs() + 1))
-          }
-          closed.map(s => SessionOut(userId, s.start, s.end, s.n, s.value)).iterator
-      }
+      implicit outEnc: Encoder[SessionOut]): Dataset[SessionOut] = {
+    val gapUs = gapMs * 1000L
+    step(events, watermarkDelay, _.user_id, List.empty[(Long, Long, Int, Double)]) {
+      (userId, batch, held, wmUs) =>
+        val merged = gapMerge(
+          held ++ batch.map(e => (micros(e.ts), micros(e.ts), 1, e.value)), gapUs)
+        // strict <: an event at exactly end+gap still joins the session
+        val (closed, open) = merged.partition(_._2 + gapUs < wmUs)
+        (closed.map { case (s, e, n, v) => SessionOut(userId, timestamp(s), timestamp(e), n, v) },
+          open, open.map(_._2 + gapUs).minOption)
+    }
   }
 
-  case class FEvent(ts: Timestamp, tpe: String)
-  case class FunnelBuf(events: List[FEvent])
   case class FunnelOut(user_id: Long, t_view: Timestamp,
       t_click: Option[Timestamp], t_purchase: Option[Timestamp],
       reached_step: Long)
@@ -840,81 +562,46 @@ object EventsStream {
     * and for users with no view yet, a click/purchase is held only
     * while a view before it can still arrive (watermark < its ts) —
     * both prunes keep state bounded at any stream rate. The funnel is
-    * recomputed from the buffer, so arrival order never matters.
+    * recomputed from the held events, so arrival order never matters.
     *
     * Run in BATCH mode every funnel is final — the output equals the
     * same horizon-variant computed declaratively (spec-proven). */
   def funnelStream(events: Dataset[Event], horizonMs: Long,
       watermarkDelay: String = "2 hours")(
-      implicit outEnc: org.apache.spark.sql.Encoder[FunnelOut],
-      stEnc: org.apache.spark.sql.Encoder[FunnelBuf]): Dataset[FunnelOut] = {
+      implicit outEnc: Encoder[FunnelOut]): Dataset[FunnelOut] = {
     val hUs = horizonMs * 1000L
     val funnelTypes = Set("view", "click", "purchase")
-    val streaming = events.isStreaming
 
-    def funnelOf(userId: Long, evs: List[FEvent]): Option[FunnelOut] = {
-      val views = evs.filter(_.tpe == "view").map(e => micros(e.ts))
-      if (views.isEmpty) None
-      else {
-        val tv = views.min
-        val tc = evs.filter(e => e.tpe == "click" &&
-          micros(e.ts) > tv && micros(e.ts) <= tv + hUs)
-          .map(e => micros(e.ts)).minOption
-        val tp = tc.flatMap(c => evs.filter(e => e.tpe == "purchase" &&
-          micros(e.ts) > c && micros(e.ts) <= c + hUs)
-          .map(e => micros(e.ts)).minOption)
-        def ts(us: Long): Timestamp = {
-          val x = new Timestamp(Math.floorDiv(us, 1000L))
-          x.setNanos((Math.floorMod(us, 1000000L) * 1000L).toInt)
-          x
-        }
-        Some(FunnelOut(userId, ts(tv), tc.map(ts), tp.map(ts),
-          1L + tc.size + tp.size))
+    def funnelOf(userId: Long, evs: List[Event]): Option[FunnelOut] = {
+      def first(tpe: String, after: Long): Option[Long] = evs.filter(e =>
+        e.event_type == tpe && micros(e.ts) > after && micros(e.ts) <= after + hUs)
+        .map(e => micros(e.ts)).minOption
+      evs.filter(_.event_type == "view").map(e => micros(e.ts)).minOption.map { tv =>
+        val tc = first("click", tv)
+        val tp = tc.flatMap(first("purchase", _))
+        FunnelOut(userId, timestamp(tv), tc.map(timestamp), tp.map(timestamp),
+          1L + tc.size + tp.size)
       }
     }
 
-    events
-      .filter(e => funnelTypes.contains(e.event_type))
-      .withWatermark("ts", watermarkDelay)
-      .groupByKey(_.user_id)(org.apache.spark.sql.Encoders.scalaLong)
-      .flatMapGroupsWithState[FunnelBuf, FunnelOut](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (userId: Long, batch: Iterator[Event], state: GroupState[FunnelBuf]) =>
-          val incoming = batch.map(e => FEvent(e.ts, e.event_type)).toList
-          val all = state.getOption.map(_.events).getOrElse(Nil) ++ incoming
-          val wmUs =
-            if (streaming) state.getCurrentWatermarkMs() * 1000L
-            else Long.MaxValue
-          val viewsUs = all.filter(_.tpe == "view").map(e => micros(e.ts))
-          val minView = viewsUs.minOption
-          // prune: events beyond min-view + 2H can't affect this funnel;
-          // with no view, hold click/purchase only while an earlier view
-          // can still arrive
-          val kept = minView match {
-            case Some(tv) => all.filter(e => micros(e.ts) <= tv + 2 * hUs)
-            case None => all.filter(e => micros(e.ts) >= wmUs)
-          }
-          val finalized = minView.exists(tv => tv + 2 * hUs < wmUs) ||
-            (!streaming)
-          if (finalized || kept.isEmpty) {
-            if (state.exists) state.remove()
-            if (minView.isDefined) funnelOf(userId, kept).iterator else Iterator.empty
-          } else {
-            state.update(FunnelBuf(kept))
-            // fire when the funnel becomes finalizable (or, with no
-            // view yet, when the oldest held event stops being
-            // validatable)
-            val fireUs = minView.map(_ + 2 * hUs)
-              .getOrElse(kept.map(e => micros(e.ts)).min)
-            val fireMs = Math.floorDiv(fireUs + 999L, 1000L)
-            state.setTimeoutTimestamp(
-              math.max(fireMs, state.getCurrentWatermarkMs() + 1))
-            Iterator.empty
-          }
+    step(events.filter(e => funnelTypes.contains(e.event_type)), watermarkDelay,
+        _.user_id, List.empty[Event]) { (userId, batch, held, wmUs) =>
+      val all = held ++ batch
+      val minView = all.filter(_.event_type == "view").map(e => micros(e.ts)).minOption
+      // prune: events beyond min-view + 2H can't affect this funnel;
+      // with no view, hold click/purchase only while an earlier view
+      // can still arrive
+      val kept = minView match {
+        case Some(tv) => all.filter(e => micros(e.ts) <= tv + 2 * hUs)
+        case None => all.filter(e => micros(e.ts) >= wmUs)
       }
+      if (minView.exists(tv => tv + 2 * hUs < wmUs)) (funnelOf(userId, kept).toList, Nil, None)
+      // fire when the funnel becomes finalizable (or, with no view yet,
+      // when the oldest held event stops being validatable)
+      else (Nil, kept, minView.map(_ + 2 * hUs).orElse(kept.map(e => micros(e.ts)).minOption))
+    }
   }
 
-  case class AttrState(pending: List[PendEv], touches: List[PendEv])
   case class AttrOut(user_id: Long, conv_event_id: Long, touch_event_id: Long,
       touch_type: String, pos: Long, n_touches: Long, credit_bp: Long)
 
@@ -927,13 +614,13 @@ object EventsStream {
     * remainder to the earliest middles otherwise — then resets the
     * segment. Credits for a conversion therefore appear EXACTLY ONCE,
     * in one batch, summing to 10000; replay order cannot change them
-    * because events process in (ts, event_id) order under the
-    * transitionStream watermark-buffer discipline. Touches after a
-    * user's final purchase are never emitted — q231's exclusion.
+    * because events process in (ts, event_id) order
+    * ([[EventState.ordered]]). Touches after a user's final purchase
+    * are never emitted — q231's exclusion.
     *
-    * State per user = the open segment's touches plus the watermark
-    * buffer. `attributionWindow` (an event-time duration, micros) is
-    * the production bound: touches older than purchase-time minus the
+    * State per user = the open segment's touches plus the held events.
+    * `attributionWindow` (an event-time duration, micros) is the
+    * production bound: touches older than purchase-time minus the
     * window take no credit, and a buffered touch EXPIRES from state
     * once the watermark proves every future purchase would ignore it —
     * so state holds at most one window of touches per user however
@@ -943,57 +630,33 @@ object EventsStream {
   def attributionStream(events: Dataset[Event],
       watermarkDelay: String = "2 hours",
       attributionWindowUs: Long = Long.MaxValue)(
-      implicit outEnc: org.apache.spark.sql.Encoder[AttrOut],
-      stEnc: org.apache.spark.sql.Encoder[AttrState]): Dataset[AttrOut] = {
-    val streaming = events.isStreaming
-    events
-      .withWatermark("ts", watermarkDelay)
-      .groupByKey(_.user_id)(org.apache.spark.sql.Encoders.scalaLong)
-      .flatMapGroupsWithState[AttrState, AttrOut](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (uid: Long, batch: Iterator[Event], state: GroupState[AttrState]) =>
-          val st = state.getOption.getOrElse(AttrState(Nil, Nil))
-          val all = (st.pending ++
-            batch.map(e => PendEv(e.ts, e.event_id, e.event_type)))
-            .sortBy(e => (micros(e.ts), e.event_id))
-          val wmUs =
-            if (streaming) state.getCurrentWatermarkMs() * 1000L else Long.MaxValue
-          val (closed, open) = all.partition(e => micros(e.ts) < wmUs)
-          var touches = st.touches
-          val outs = scala.collection.mutable.ListBuffer[AttrOut]()
-          closed.foreach { e =>
-            if (e.event_type != "purchase") touches = touches :+ e
-            else {
-              val cutoff =
-                if (attributionWindowUs == Long.MaxValue) Long.MinValue
-                else micros(e.ts) - attributionWindowUs
-              val credited = touches.filter(t => micros(t.ts) >= cutoff)
-              val n = credited.size.toLong
-              credited.zipWithIndex.foreach { case (t, i) =>
-                val pos = i + 1L
-                val bp =
-                  if (n == 1) 10000L
-                  else if (n == 2) 5000L
-                  else if (pos == 1 || pos == n) 4000L
-                  else 2000L / (n - 2) + (if (pos - 1 <= 2000L % (n - 2)) 1L else 0L)
-                outs += AttrOut(uid, e.event_id, t.event_id, t.event_type,
-                  pos, n, bp)
-              }
-              touches = Nil
-            }
+      implicit outEnc: Encoder[AttrOut]): Dataset[AttrOut] =
+    step(events, watermarkDelay, _.user_id, (List.empty[Event], List.empty[Event])) {
+      (uid, batch, st, wmUs) =>
+        val (outs, (held, touches), fire) = ordered(st, batch, wmUs) { (touches, e) =>
+          if (e.event_type != "purchase") (touches :+ e, Nil)
+          else {
+            val cutoff =
+              if (attributionWindowUs == Long.MaxValue) Long.MinValue
+              else micros(e.ts) - attributionWindowUs
+            val credited = touches.filter(t => micros(t.ts) >= cutoff)
+            val n = credited.size.toLong
+            (Nil, credited.zipWithIndex.map { case (t, i) =>
+              val pos = i + 1L
+              val bp =
+                if (n == 1) 10000L
+                else if (n == 2) 5000L
+                else if (pos == 1 || pos == n) 4000L
+                else 2000L / (n - 2) + (if (pos - 1 <= 2000L % (n - 2)) 1L else 0L)
+              AttrOut(uid, e.event_id, t.event_id, t.event_type, pos, n, bp)
+            })
           }
-          // window expiry: once wm > touch_ts + window, every future
-          // purchase's cutoff already excludes the touch — drop it
-          val alive =
-            if (attributionWindowUs == Long.MaxValue || wmUs == Long.MaxValue)
-              touches
-            else touches.filter(t => micros(t.ts) + attributionWindowUs >= wmUs)
-          state.update(AttrState(open, alive))
-          if (open.nonEmpty)
-            state.setTimeoutTimestamp(
-              math.max(micros(open.head.ts) / 1000L + 1,
-                state.getCurrentWatermarkMs() + 1))
-          outs.iterator
-      }
-  }
+        }
+        // window expiry: once wm > touch_ts + window, every future
+        // purchase's cutoff already excludes the touch — drop it
+        val alive =
+          if (attributionWindowUs == Long.MaxValue) touches
+          else touches.filter(t => micros(t.ts) + attributionWindowUs >= wmUs)
+        (outs, (held, alive), fire)
+    }
 }

@@ -15,12 +15,17 @@ import org.scalatest.funsuite.AnyFunSuite
   * is an algorithm, not a cut, and stays allowed. Outside
   * `graft/Harness.scala`, no main source may build a SparkSession.
   * Outside `graft/streaming/TwinLog.scala`, no main source may name a
-  * twin log's tag columns `__batch` or `__covers`. */
+  * twin log's tag columns `__batch` or `__covers`. Outside
+  * `graft/streaming/EventState.scala`, no main source may call
+  * `.flatMapGroupsWithState`, read the watermark with
+  * `getCurrentWatermarkMs` or set a timer with `setTimeoutTimestamp`
+  * (the name alone, without the leading `.`, may appear in prose). */
 class RoundsLintSpec extends AnyFunSuite {
 
   private val rounds = "graft/operators/Rounds.scala"
   private val harness = "graft/Harness.scala"
   private val twinLog = "graft/streaming/TwinLog.scala"
+  private val eventState = "graft/streaming/EventState.scala"
 
   /** (pattern, the only main source allowed to contain it) */
   private val rules = Seq(
@@ -29,7 +34,10 @@ class RoundsLintSpec extends AnyFunSuite {
     """createDataFrame\(\s*[\w.]+\.rdd\b""".r -> rounds,
     """SparkSession\.builder\(""".r -> harness,
     "__batch".r -> twinLog,
-    "__covers".r -> twinLog)
+    "__covers".r -> twinLog,
+    """\.flatMapGroupsWithState\b""".r -> eventState,
+    "getCurrentWatermarkMs".r -> eventState,
+    "setTimeoutTimestamp".r -> eventState)
 
   private val root = Paths.get("src/main/scala")
 
@@ -43,6 +51,10 @@ class RoundsLintSpec extends AnyFunSuite {
 
   test("twin log columns appear only in TwinLog.scala") {
     assertOwned(twinLog, "read and write twin logs through TwinLog instead")
+  }
+
+  test("stateful event steps are wired only in EventState.scala") {
+    assertOwned(eventState, "run the per-key step through EventState.step instead")
   }
 
   private def assertOwned(owner: String, fix: String): Unit = {

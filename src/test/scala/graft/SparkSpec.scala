@@ -5,10 +5,12 @@ import java.util.concurrent.ConcurrentLinkedQueue
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.scalatest.funsuite.AnyFunSuite
 
-/** One shared local session for the whole forked test JVM. */
+/** One shared local session for the whole forked test JVM, with the
+  * engine's extensions on as in `Harness.session`: plans under test are
+  * the plans Verify and Bench run, whatever an earlier test installed. */
 object TestSession {
   lazy val spark: SparkSession = {
     val s = SparkSession.builder()
@@ -20,6 +22,7 @@ object TestSession {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .config("spark.sql.extensions", "graft.GraftExtensions")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
@@ -28,6 +31,21 @@ object TestSession {
 
 abstract class SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = TestSession.spark
+
+  /** A new session on the shared context built without the engine's
+    * extensions, as in an application that does not set
+    * `spark.sql.extensions`: no native SQL function, optimizer rule or
+    * planner strategy. (`spark.newSession()` would inherit them.) The
+    * constructor that takes the extensions is private to Scala code, so
+    * it is called by reflection. */
+  protected def bareSession(): SparkSession = {
+    val cls = classOf[org.apache.spark.sql.classic.SparkSession]
+    cls.getConstructor(classOf[org.apache.spark.SparkContext], classOf[Option[_]],
+        classOf[Option[_]], classOf[SparkSessionExtensions],
+        classOf[Map[_, _]], classOf[Map[_, _]])
+      .newInstance(spark.sparkContext, Some(cls.cast(spark).sharedState), None,
+        new SparkSessionExtensions, Map.empty, Map.empty)
+  }
 
   /** Runs `body` with the given session confs set, then restores them. */
   protected def withConf[T](kvs: (String, String)*)(body: => T): T = {

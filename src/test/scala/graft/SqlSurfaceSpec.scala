@@ -1,16 +1,13 @@
 package graft
 
-import org.apache.spark.sql.SparkSessionExtensions
-
-import graft.expressions.{SimHash60, SortedIntersectSize}
+import org.apache.spark.sql.SparkSession
 
 /** The SQL surface: registered native functions are callable from
   * `spark.sql`, and the extensions entry point wires up cleanly. */
 class SqlSurfaceSpec extends SparkSpec {
 
   test("native expressions callable from SQL after registration") {
-    SimHash60.register(spark)
-    SortedIntersectSize.register(spark)
+    GraftExtensions.register(spark)
     val r = spark.sql(
       """SELECT simhash60(array(1L, 1L, 2L)) AS sig,
         |       sorted_intersect_size(array(1L, 2L, 3L), array(2L, 3L, 4L)) AS n
@@ -28,15 +25,35 @@ class SqlSurfaceSpec extends SparkSpec {
     assert(out.map(_.getString(0)).toSeq == Seq("A", "N", "R"))
   }
 
-  test("GraftExtensions registers both functions without error") {
-    // builder-level wiring can't be exercised against the shared session
-    // (extensions apply at session construction); validate the injector
-    // runs and registers the expected function names
-    val ext = new SparkSessionExtensions
-    new GraftExtensions().apply(ext)
-    // registration into a fresh session state is covered implicitly by
-    // the injectFunction call not throwing; the function behavior itself
-    // is tested above through the registry path
-    succeed
+  /** Calls each of the five native SQL functions in `s`. */
+  private def callAll(s: SparkSession): Unit = {
+    val r = s.sql(
+      """SELECT simhash60(array(1L, 1L, 2L)),
+        |       sorted_intersect_size(array(1L, 2L, 3L), array(2L, 3L, 4L)),
+        |       hilbert32(0L, 0L),
+        |       pmd5_60(''),
+        |       common_prefix_len('abc', 'abd')
+        |""".stripMargin).collect().head
+    assert(r.getLong(0) == 1L)
+    assert(r.getInt(1) == 2)
+    assert(r.getLong(2) == 0L)
+    // the first 15 hex digits of md5('') = d41d8cd98f00b204...
+    assert(r.getLong(3) == java.lang.Long.parseLong("d41d8cd98f00b20", 16))
+    assert(r.getInt(4) == 2)
+  }
+
+  private val names =
+    Seq("simhash60", "sorted_intersect_size", "hilbert32", "pmd5_60", "common_prefix_len")
+
+  test("GraftExtensions and Engine.attach install all five native functions") {
+    // a new session gets a fresh function registry from the session's
+    // extensions (the test session is built with graft.GraftExtensions),
+    // so nothing registered on the shared session leaks in
+    callAll(spark.newSession())
+    // the other route: a session built without them gets them from attach
+    val bare = bareSession()
+    assert(names.forall(n => !bare.catalog.functionExists(n)))
+    Engine.attach(bare, "/root/testdata/sf0.001")
+    callAll(bare)
   }
 }

@@ -5,10 +5,10 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.expressions.{Attribute, Expression}
 import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
-import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.sql.execution.{FileSourceScanExec, LocalTableScanExec}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.datasources.binaryfile.BinaryFileFormat
-import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeExec}
 import org.apache.spark.sql.execution.window.WindowExec
 
 import graft.SparkSpec
@@ -133,5 +133,28 @@ class PipelineFanoutSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   test("a landing dir whose path holds a space and non-ASCII text gives the same rows") {
     assert(csvRows(corrections("受信 files")) == csvRows(corrections("files")))
+  }
+
+  test("the content scan reads only the winners' files and broadcasts none of them") {
+    for (name <- Seq("files", "受信 files")) {
+      val (master, files) = corrections(name)
+      val out = Pipeline.transform(spark, master, files)
+      assert(out.collect().length == 15)
+      val plan = out.queryExecution.executedPlan
+      // 10 files landed; the winners are E00001's XBRL correction,
+      // E00002's last correction, E00006's CSV and E99999's filing
+      val numFiles = collect(plan) {
+        case s: FileSourceScanExec if s.relation.fileFormat.isInstanceOf[BinaryFileFormat] =>
+          s.metrics("numFiles").value
+      }
+      assert(numFiles == Seq(4L), s"binaryFile scan files in '$name': $numFiles")
+      // the winners are a filter on the scan, not a broadcast local
+      // frame; the one broadcast left is the company master's
+      val broadcasts = collect(plan) { case b: BroadcastExchangeExec => b }
+      assert(broadcasts.size == 1, s"broadcasts in '$name': ${broadcasts.size}")
+      assert(broadcasts.forall(b => collect(b) { case l: LocalTableScanExec => l }.isEmpty &&
+        collect(b) { case s: FileSourceScanExec =>
+          s.relation.fileFormat.isInstanceOf[BinaryFileFormat] }.forall(!_)))
+    }
   }
 }

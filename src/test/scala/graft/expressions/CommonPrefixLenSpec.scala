@@ -39,7 +39,8 @@ class CommonPrefixLenSpec extends SparkSpec {
   test("column built under one session analyzes in a cloned session " +
       "(no temp-function registry dependence)") {
     val c = CommonPrefixLen(spark, col("a"), col("b"))
-    val s2 = spark.newSession()
+    val s2 = bareSession() // no native SQL functions
+    assert(!s2.catalog.functionExists("common_prefix_len"))
     val got = s2.createDataFrame(Seq(("banana", "bandana"))).toDF("a", "b")
       .select(c.as("n")).collect().head.getInt(0)
     assert(got == 3)

@@ -44,7 +44,8 @@ class Pmd5Spec extends SparkSpec {
     // session was active at construction. The expression now rides in
     // the Column (GraftSqlBridge.column), so any session analyzes it.
     val c = Pmd5Hash60(spark, col("s")) // built with `spark` active
-    val s2 = spark.newSession()         // shares no temp functions
+    val s2 = bareSession() // no native SQL functions
+    assert(!s2.catalog.functionExists("pmd5_60"))
     val got = s2.createDataFrame(Seq(Tuple1("banana"))).toDF("s")
       .select(c.as("h")).collect().head.getLong(0)
     assert(got == Portable.pmd5Local("banana"))

@@ -22,7 +22,8 @@ class SimHash60Spec extends SparkSpec {
     val c = SimHash60(spark, col("hs"))
     val want = Seq(Seq(1L, 1L, 2L)).toDF("hs")
       .select(c.as("sig")).collect().head.getLong(0)
-    val s2 = spark.newSession()
+    val s2 = bareSession() // no native SQL functions
+    assert(!s2.catalog.functionExists("simhash60"))
     val got = s2.createDataFrame(Seq(Tuple1(Seq(1L, 1L, 2L)))).toDF("hs")
       .select(c.as("sig")).collect().head.getLong(0)
     assert(got == want)

@@ -26,7 +26,8 @@ class SortedIntersectSizeSpec extends SparkSpec {
   test("column built under one session analyzes in a cloned session " +
       "(no temp-function registry dependence)") {
     val c = SortedIntersectSize(spark, col("a"), col("b"))
-    val s2 = spark.newSession()
+    val s2 = bareSession() // no native SQL functions
+    assert(!s2.catalog.functionExists("sorted_intersect_size"))
     val got = s2.createDataFrame(
         Seq((Seq(1L, 3L, 5L), Seq(3L, 4L, 5L)))).toDF("a", "b")
       .select(c.as("n")).collect().head.getInt(0)

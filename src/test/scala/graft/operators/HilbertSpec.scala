@@ -41,7 +41,8 @@ class HilbertSpec extends SparkSpec {
       import spark.implicits._
       Seq((3L, 5L)).toDF("x", "y").select(c.as("h")).collect().head.getLong(0)
     }
-    val s2 = spark.newSession()
+    val s2 = bareSession() // no native SQL functions
+    assert(!s2.catalog.functionExists("hilbert32"))
     val got = s2.createDataFrame(Seq((3L, 5L))).toDF("x", "y")
       .select(c.as("h")).collect().head.getLong(0)
     assert(got == want)

@@ -32,6 +32,19 @@ class TopKPerKeySpec extends SparkSpec {
     assert(sameRows(got, windowTopK(df, 3)))
   }
 
+  test("topK installs its planner strategy in a session built without the extensions") {
+    val rows = (0 until 200).map(i => (i % 7L, (i * 7) % 13L, i.toLong))
+    val df = bareSession().createDataFrame(rows).toDF("key", "v", "id").repartition(4)
+    val got = TopKPerKey.topK(df, Seq("key"), Seq("v" -> false, "id" -> true), 2)
+    // the custom logical node has no physical plan without the strategy
+    assert(got.queryExecution.sparkPlan.exists {
+      case _: FinalTopKPerKeyExec => true
+      case _ => false
+    })
+    val want = rows.groupBy(_._1).flatMap { case (_, g) => g.sortBy(t => (-t._2, t._3)).take(2) }
+    assert(got.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet == want.toSet)
+  }
+
   test("k larger than every group passes all rows through") {
     val df = Seq((1L, 5L, 1L), (1L, 4L, 2L), (2L, 9L, 3L))
       .toDF("key", "v", "id").repartition(4)

@@ -22,6 +22,7 @@ class TwinRegistrySpec extends AnyFunSuite {
   // protocol/infra files that are deliberately not twins themselves
   private val Infra = Set(
     "TwinLog", // the shared log protocol every log twin rides
+    "EventState", // the watermark step every stateful event twin rides
     "TwinRegistry" // this matrix
   )
 
