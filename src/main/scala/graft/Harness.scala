@@ -23,7 +23,7 @@ import org.apache.spark.sql.execution.FormattedMode
   * count plus the jobs, stages, tasks and shuffle MB it scheduled, and
   * the rows themselves when there are at most five;
   * `SPARK_GRAFT_EXTRA_CONF="k=v,k2=v2"` sets session confs first (A/B
-  * aid, e.g. `graft.topk.rewrite.enabled=false`). `explain` prints each
+  * aid, e.g. `spark.sql.adaptive.enabled=false`). `explain` prints each
   * query's formatted physical plan. No names means every query.
   */
 object Harness {

@@ -240,9 +240,6 @@ object TopKPerKeyStrategy extends SparkStrategy {
   val MaxKeysConf = "graft.topk.partial.maxKeys"
   val MaxKeysDefault = 262144
 
-  /** Auto-rewrite switch for the window-form pattern below. */
-  val RewriteConf = "graft.topk.rewrite.enabled"
-
   private def plans(keys: Seq[Expression], order: Seq[SortOrder], k: Int,
       child: LogicalPlan): SparkPlan = {
     val maxKeys = SQLConf.get.getConfString(MaxKeysConf, MaxKeysDefault.toString).toInt
@@ -318,8 +315,7 @@ object TopKPerKeyStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
     case TopKPerKeyNode(keys, order, k, child) =>
       plans(keys, order, k, child) :: Nil
-    case WindowTopK(keys, order, k, child, projectList)
-        if SQLConf.get.getConfString(RewriteConf, "true").toBoolean =>
+    case WindowTopK(keys, order, k, child, projectList) =>
       // the window spelling plans as the heap operator: no partition
       // sort, partial-stage shuffle reduction, AllTuples for the
       // ungrouped (keys empty) form

@@ -1,9 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
-import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 /** Streaming twin of q269's trigram stupid-backoff LM: the three count
   * tables the model needs are all additive, so THREE [[TwinLog]] additive logs
@@ -32,9 +31,16 @@ import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType
   */
 object BackoffLmStream {
 
-  def trigramDir(outDir: String): String = outDir + "_bk3"
-  def bigramDir(outDir: String): String = outDir + "_bk2"
-  def tokenDir(outDir: String): String = outDir + "_bk1"
+  private val TrigramLog = TwinLog.Additive("_bk3",
+    "w1 STRING, w2 STRING, w3 STRING, c123 BIGINT", Seq("c123"))
+  private val BigramLog = TwinLog.Additive("_bk2",
+    "w1 STRING, w2 STRING, c12 BIGINT", Seq("c12"))
+  private val TokenLog =
+    TwinLog.Additive("_bk1", "tok STRING, cnt BIGINT", Seq("cnt"))
+
+  def trigramDir(outDir: String): String = TrigramLog.dir(outDir)
+  def bigramDir(outDir: String): String = BigramLog.dir(outDir)
+  def tokenDir(outDir: String): String = TokenLog.dir(outDir)
 
   private def grams(docs: DataFrame, n: Int): DataFrame = docs
     .select(split(col("text"), " ").as("ts"))
@@ -57,38 +63,21 @@ object BackoffLmStream {
     docs.select(explode(split(col("text"), " ")).as("tok"))
       .groupBy("tok").agg(count(lit(1)).as("cnt"))
 
-  /** Summary schemas for empty-before-first-commit reads, derived from
-    * the REAL summarize pipelines over a zero-row frame (the
-    * SampleStream one-source-of-truth rule). */
-  private def emptyDocs(spark: SparkSession): DataFrame =
-    spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
-      StructType(Seq(StructField("doc_id", LongType),
-        StructField("text", StringType))))
-  private def triSchema(spark: SparkSession): StructType =
-    trigramSummary(emptyDocs(spark)).schema
-  private def biSchema(spark: SparkSession): StructType =
-    bigramSummary(emptyDocs(spark)).schema
-  private def tokSchema(spark: SparkSession): StructType =
-    tokenSummary(emptyDocs(spark)).schema
-
   /** Start the maintainer: ONE epoch appends the batch's trigram,
     * bigram and token deltas to the three logs under one batch id. */
   def start(docs: DataFrame, outDir: String, checkpointDir: String,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    TwinLog.start(docs, checkpointDir, trigger, additive = true)(
-      (trigramSummary(_), trigramDir(outDir)),
-      (bigramSummary(_), bigramDir(outDir)),
-      (tokenSummary(_), tokenDir(outDir)))
+    TwinLog.start(docs, checkpointDir, trigger, outDir)(
+      (trigramSummary(_), TrigramLog),
+      (bigramSummary(_), BigramLog),
+      (tokenSummary(_), TokenLog))
 
   def trigramCounts(spark: SparkSession, outDir: String): DataFrame =
-    TwinLog.merged(spark, trigramDir(outDir), triSchema(spark),
-      Seq("w1", "w2", "w3"), Seq("c123"))
+    TwinLog.merged(spark, outDir, TrigramLog)
   def bigramCounts(spark: SparkSession, outDir: String): DataFrame =
-    TwinLog.merged(spark, bigramDir(outDir), biSchema(spark),
-      Seq("w1", "w2"), Seq("c12"))
+    TwinLog.merged(spark, outDir, BigramLog)
   def tokenCounts(spark: SparkSession, outDir: String): DataFrame =
-    TwinLog.merged(spark, tokenDir(outDir), tokSchema(spark),
-      Seq("tok"), Seq("cnt"))
+    TwinLog.merged(spark, outDir, TokenLog)
 
   /** Score `docs` (doc_id, text) against the standing model — q269's
     * output shape (doc_id, n_trigrams, surprise_bits, n_tri, n_bi,
@@ -145,9 +134,5 @@ object BackoffLmStream {
   /** Fold all three logs' fully-committed prefixes into snapshots;
     * returns total files collected — [[TwinLog.compactAdditive]]. */
   def compactLog(spark: SparkSession, outDir: String): Long =
-    TwinLog.compactAdditive(spark, trigramDir(outDir), Seq("w1", "w2", "w3"),
-      Seq("c123")) +
-      TwinLog.compactAdditive(spark, bigramDir(outDir), Seq("w1", "w2"),
-        Seq("c12")) +
-      TwinLog.compactAdditive(spark, tokenDir(outDir), Seq("tok"), Seq("cnt"))
+    TwinLog.compactAdditive(spark, outDir, TrigramLog, BigramLog, TokenLog)
 }

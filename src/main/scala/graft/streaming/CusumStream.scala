@@ -1,8 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
-import org.apache.spark.sql.types._
 
 import graft.operators.Cusum
 
@@ -23,43 +22,34 @@ import graft.operators.Cusum
   *
   * The log mechanics (replay idempotence, snapshot compaction safe
   * under crashes and concurrent streams, empty-before-first-commit
-  * reads) are [[TwinLog]]'s — this object binds them to
-  * [[Cusum.daily]]'s keys (g, day) and sum (x). */
+  * reads) are [[TwinLog]]'s — this object declares [[Cusum.daily]]'s
+  * layout: keys (g, day), sum (x). */
 object CusumStream {
 
-  /** Append-only day-delta log for a monitor rooted at `outDir`. */
-  def logDir(outDir: String): String = outDir + "_cusumlog"
+  /** The day-delta log: [[Cusum.daily]]'s rows, summed per (g, day). */
+  private val Log =
+    TwinLog.Additive("_cusumlog", "g STRING, day DATE, x BIGINT", Seq("x"))
 
-  /** Summary schema derived from [[Cusum.daily]] itself (the
-    * DriftStream rule: one source of truth for empty-log reads). */
-  private def summarySchema(spark: SparkSession): StructType = {
-    val emptyEvents = spark.createDataFrame(
-      spark.sparkContext.emptyRDD[Row],
-      StructType(Seq(StructField("ts", TimestampType),
-        StructField("event_type", StringType),
-        StructField("value", DoubleType))))
-    Cusum.daily(emptyEvents).schema
-  }
+  /** Append-only day-delta log for a monitor rooted at `outDir`. */
+  def logDir(outDir: String): String = Log.dir(outDir)
 
   /** Start the monitor: per micro-batch, append the batch-local
     * (g, day, x) sums tagged with the epoch id. */
   def start(events: DataFrame, outDir: String, checkpointDir: String,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    TwinLog.start(events, checkpointDir, trigger, additive = true)(
-      (Cusum.daily(_), logDir(outDir)))
+    TwinLog.start(events, checkpointDir, trigger, outDir)(
+      (Cusum.daily(_), Log))
 
   /** Current changepoints: merge the live day sums by addition,
     * finish with the exact integer argmax. Reads the log only —
     * bounded by batches x day support, never the event history. */
   def changepoints(spark: SparkSession, outDir: String): DataFrame =
-    Cusum.changepoints(TwinLog.merged(spark, logDir(outDir),
-      summarySchema(spark), Seq("g", "day"), Seq("x")))
+    Cusum.changepoints(TwinLog.merged(spark, outDir, Log))
 
   /** Fold the fully-committed prefix of the log into one snapshot,
     * then garbage-collect the superseded files. Returns the number of
     * files collected. Safe concurrently with a running stream —
     * [[TwinLog.compactAdditive]]. */
   def compactLog(spark: SparkSession, outDir: String): Long =
-    TwinLog.compactAdditive(spark, logDir(outDir),
-      Seq("g", "day"), Seq("x"))
+    TwinLog.compactAdditive(spark, outDir, Log)
 }

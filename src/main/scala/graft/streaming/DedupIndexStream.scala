@@ -1,9 +1,9 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.types.StructType
 
 import graft.operators.Dedup
 
@@ -53,21 +53,15 @@ object DedupIndexStream {
         .select((col("doc_id") +: (0 until NB).map(b => col(s"b$b"))): _*),
       "doc_id", "doc_id", NB)
 
-  /** Schema for reads that arrive before the first commit — derived
-    * from [[bandRows]] itself (one source of truth). */
-  private def indexSchema(spark: SparkSession): StructType = {
-    val emptyDocs = spark.createDataFrame(
-      spark.sparkContext.emptyRDD[Row],
-      StructType(Seq(StructField("doc_id", LongType),
-        StructField("text", StringType))))
-    bandRows(emptyDocs).schema
-  }
+  /** The index log's row layout: [[bandRows]]'s columns. */
+  private val IndexLayout =
+    StructType.fromDDL("doc_id BIGINT, band INT, key BIGINT")
 
   /** The standing index (doc_id, band, key), persisted — replay/crash
     * guard: duplicate appends collapse (band rows are deterministic
     * functions of (doc_id, text)). EMPTY before the first commit. */
   private def index(spark: SparkSession, outDir: String): DataFrame =
-    TwinLog.read(spark, logDir(outDir), indexSchema(spark)).persist()
+    TwinLog.read(spark, logDir(outDir), IndexLayout).persist()
 
   /** Start the index maintainer: per micro-batch, band the batch's
     * documents and append their index rows tagged with the epoch. */

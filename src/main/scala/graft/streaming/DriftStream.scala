@@ -1,8 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
-import org.apache.spark.sql.types._
 
 import graft.operators.DriftStat
 
@@ -20,48 +19,37 @@ import graft.operators.DriftStat
   *
   * The log mechanics (replay idempotence, snapshot compaction safe
   * under crashes and concurrent streams, empty-before-first-commit
-  * reads) are [[TwinLog]]'s — this object binds them to
-  * [[DriftStat.histogram]]'s keys (week, cents) and sums (cp, cc). */
+  * reads) are [[TwinLog]]'s — this object declares
+  * [[DriftStat.histogram]]'s layout: keys (week, cents), sums (cp, cc). */
 object DriftStream {
+
+  /** The histogram-delta log: [[DriftStat.histogram]]'s rows, summed
+    * per (week, cents). */
+  private val Log = TwinLog.Additive("_driftlog",
+    "week BIGINT, cents BIGINT, cp BIGINT, cc BIGINT", Seq("cp", "cc"))
 
   /** Append-only histogram-delta log for a monitor rooted at
     * `outDir`. */
-  def logDir(outDir: String): String = outDir + "_driftlog"
-
-  /** The summary schema — needed to answer reads that arrive BEFORE
-    * the first micro-batch commits (no parquet directory yet): the
-    * monitor is simply empty, not broken. Derived from
-    * [[DriftStat.histogram]] itself, so a histogram schema change
-    * cannot silently diverge empty-log reads from real-log reads. */
-  private def summarySchema(spark: SparkSession): StructType = {
-    val emptyEvents = spark.createDataFrame(
-      spark.sparkContext.emptyRDD[Row],
-      StructType(Seq(StructField("ts", TimestampType),
-        StructField("event_type", StringType),
-        StructField("value", DoubleType))))
-    DriftStat.histogram(emptyEvents).schema
-  }
+  def logDir(outDir: String): String = Log.dir(outDir)
 
   /** Start the monitor: per micro-batch, append the batch-local
     * (week, cents) histogram tagged with the epoch id. */
   def start(events: DataFrame, outDir: String, checkpointDir: String,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    TwinLog.start(events, checkpointDir, trigger, additive = true)(
-      (DriftStat.histogram(_), logDir(outDir)))
+    TwinLog.start(events, checkpointDir, trigger, outDir)(
+      (DriftStat.histogram(_), Log))
 
   /** Current drift statistics: merge the live histogram by addition,
     * finish with the exact one-pass stats. Reads the log only —
     * bounded by batches x weeks x value support, never the event
     * history. */
   def stats(spark: SparkSession, outDir: String): DataFrame =
-    DriftStat.stats(TwinLog.merged(spark, logDir(outDir),
-      summarySchema(spark), Seq("week", "cents"), Seq("cp", "cc")))
+    DriftStat.stats(TwinLog.merged(spark, outDir, Log))
 
   /** Fold the fully-committed prefix of the log into one snapshot,
     * then garbage-collect the superseded files. Returns the number of
     * files collected. Safe concurrently with a running stream —
     * [[TwinLog.compactAdditive]]. */
   def compactLog(spark: SparkSession, outDir: String): Long =
-    TwinLog.compactAdditive(spark, logDir(outDir),
-      Seq("week", "cents"), Seq("cp", "cc"))
+    TwinLog.compactAdditive(spark, outDir, Log)
 }

@@ -1,9 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
-import org.apache.spark.sql.types.{BooleanType, LongType, StringType, StructField, StructType}
 
 import graft.operators.Dsir
 
@@ -43,10 +42,15 @@ object DsirStream {
     * sees a separate (initially empty) log instead of silently mixing
     * foreign bucket spaces — the additive-log version of the
     * SRP index's stamped-parameters guard. */
+  private def rawLog(buckets: Int) =
+    TwinLog.Additive(s"_dsraw_b$buckets", "bucket BIGINT, cr BIGINT", Seq("cr"))
+  private def targetLog(buckets: Int) =
+    TwinLog.Additive(s"_dstgt_b$buckets", "bucket BIGINT, ct BIGINT", Seq("ct"))
+
   def rawDir(outDir: String, buckets: Int): String =
-    s"${outDir}_dsraw_b$buckets"
+    rawLog(buckets).dir(outDir)
   def targetDir(outDir: String, buckets: Int): String =
-    s"${outDir}_dstgt_b$buckets"
+    targetLog(buckets).dir(outDir)
 
   /** The batch-local raw bucket count summary — q265's feature explode
     * stated over one micro-batch. `docs` carries (text, is_target). */
@@ -61,41 +65,25 @@ object DsirStream {
       Seq.empty)
       .groupBy("bucket").agg(count(lit(1)).as("ct"))
 
-  /** Summary schemas for empty-before-first-commit reads, derived from
-    * the REAL summarize pipelines over a zero-row frame (the
-    * SampleStream one-source-of-truth rule). */
-  private def emptyDocs(spark: SparkSession): DataFrame =
-    spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
-      StructType(Seq(StructField("doc_id", LongType),
-        StructField("text", StringType),
-        StructField("is_target", BooleanType))))
-  private def rawSchema(spark: SparkSession, buckets: Int): StructType =
-    rawSummary(emptyDocs(spark), buckets).schema
-  private def targetSchema(spark: SparkSession, buckets: Int): StructType =
-    targetSummary(emptyDocs(spark), buckets).schema
-
   /** Start the maintainer: ONE epoch appends the batch's raw and
     * target bucket deltas to both logs under the same batch id.
     * `docs` must carry (doc_id, text, is_target). */
   def start(docs: DataFrame, outDir: String, checkpointDir: String,
       buckets: Int = Dsir.DefaultBuckets,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    TwinLog.start(docs, checkpointDir, trigger, additive = true)(
-      (rawSummary(_, buckets), rawDir(outDir, buckets)),
-      (targetSummary(_, buckets), targetDir(outDir, buckets)))
+    TwinLog.start(docs, checkpointDir, trigger, outDir)(
+      (rawSummary(_, buckets), rawLog(buckets)),
+      (targetSummary(_, buckets), targetLog(buckets)))
 
   /** The merged raw bucket model (bucket, cr) after any stream prefix. */
   def rawCounts(spark: SparkSession, outDir: String,
       buckets: Int = Dsir.DefaultBuckets): DataFrame =
-    TwinLog.merged(spark, rawDir(outDir, buckets), rawSchema(spark, buckets),
-      Seq("bucket"), Seq("cr"))
+    TwinLog.merged(spark, outDir, rawLog(buckets))
 
   /** The merged target bucket model (bucket, ct). */
   def targetCounts(spark: SparkSession, outDir: String,
       buckets: Int = Dsir.DefaultBuckets): DataFrame =
-    TwinLog.merged(spark, targetDir(outDir, buckets),
-      targetSchema(spark, buckets),
-      Seq("bucket"), Seq("ct"))
+    TwinLog.merged(spark, outDir, targetLog(buckets))
 
   /** Score `docs` (doc_id, text) against the standing model: q265's
     * output shape (doc_id, n_feats, weight_bits), with never-seen
@@ -122,8 +110,5 @@ object DsirStream {
     * total files collected — [[TwinLog.compactAdditive]]. */
   def compactLog(spark: SparkSession, outDir: String,
       buckets: Int = Dsir.DefaultBuckets): Long =
-    TwinLog.compactAdditive(spark, rawDir(outDir, buckets), Seq("bucket"),
-      Seq("cr")) +
-      TwinLog.compactAdditive(spark, targetDir(outDir, buckets),
-        Seq("bucket"), Seq("ct"))
+    TwinLog.compactAdditive(spark, outDir, rawLog(buckets), targetLog(buckets))
 }

@@ -1,9 +1,9 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
-import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.LongType
 
 /** Streaming twin of q262's per-document LM surprise: a bigram
   * language model maintained INCREMENTALLY over an unbounded document
@@ -45,8 +45,13 @@ import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType
   */
 object LmStream {
 
-  def bigramDir(outDir: String): String = outDir + "_lmbg"
-  def tokenDir(outDir: String): String = outDir + "_lmtok"
+  private val BigramLog = TwinLog.Additive("_lmbg",
+    "w1 STRING, w2 STRING, c12 BIGINT", Seq("c12"))
+  private val TokenLog =
+    TwinLog.Additive("_lmtok", "tok STRING, cnt BIGINT", Seq("cnt"))
+
+  def bigramDir(outDir: String): String = BigramLog.dir(outDir)
+  def tokenDir(outDir: String): String = TokenLog.dir(outDir)
 
   /** The batch-local bigram count summary — q262's explode stated
     * over one micro-batch. */
@@ -66,36 +71,21 @@ object LmStream {
     docs.select(explode(split(col("text"), " ")).as("tok"))
       .groupBy(col("tok")).agg(count(lit(1)).as("cnt"))
 
-  /** Summary schemas for empty-before-first-commit reads, derived
-    * from the REAL summarize pipelines over a zero-row frame (the
-    * SampleStream one-source-of-truth rule: a summary schema change
-    * cannot silently diverge empty-log reads from real-log reads). */
-  private def emptyDocs(spark: SparkSession): DataFrame =
-    spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
-      StructType(Seq(StructField("doc_id", LongType),
-        StructField("text", StringType))))
-  private def bigramSchema(spark: SparkSession): StructType =
-    bigramSummary(emptyDocs(spark)).schema
-  private def tokenSchema(spark: SparkSession): StructType =
-    tokenSummary(emptyDocs(spark)).schema
-
   /** Start the maintainer: ONE epoch appends the batch's bigram and
     * token deltas to both logs under the same batch id. */
   def start(docs: DataFrame, outDir: String, checkpointDir: String,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    TwinLog.start(docs, checkpointDir, trigger, additive = true)(
-      (bigramSummary(_), bigramDir(outDir)),
-      (tokenSummary(_), tokenDir(outDir)))
+    TwinLog.start(docs, checkpointDir, trigger, outDir)(
+      (bigramSummary(_), BigramLog),
+      (tokenSummary(_), TokenLog))
 
   /** The merged bigram model (w1, w2, c12) after any stream prefix. */
   def bigramCounts(spark: SparkSession, outDir: String): DataFrame =
-    TwinLog.merged(spark, bigramDir(outDir), bigramSchema(spark),
-      Seq("w1", "w2"), Seq("c12"))
+    TwinLog.merged(spark, outDir, BigramLog)
 
   /** The merged vocabulary (tok, cnt); its row count is V. */
   def tokenCounts(spark: SparkSession, outDir: String): DataFrame =
-    TwinLog.merged(spark, tokenDir(outDir), tokenSchema(spark),
-      Seq("tok"), Seq("cnt"))
+    TwinLog.merged(spark, outDir, TokenLog)
 
   /** Score `docs` (doc_id, text) against the standing model: q262's
     * output shape (doc_id, n_bigrams, surprise_bits,
@@ -132,7 +122,5 @@ object LmStream {
     * total files collected. Safe with a running stream —
     * [[TwinLog.compactAdditive]]. */
   def compactLog(spark: SparkSession, outDir: String): Long =
-    TwinLog.compactAdditive(spark, bigramDir(outDir), Seq("w1", "w2"),
-      Seq("c12")) +
-      TwinLog.compactAdditive(spark, tokenDir(outDir), Seq("tok"), Seq("cnt"))
+    TwinLog.compactAdditive(spark, outDir, BigramLog, TokenLog)
 }

@@ -3,7 +3,6 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
-import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 import graft.operators.{Dsir, DsirIndex}
 
@@ -36,13 +35,12 @@ import graft.operators.{Dsir, DsirIndex}
   * aggregate row — nothing rescans document history. */
 object MixtureStream {
 
-  def logDir(outDir: String): String = outDir + "_mix"
+  /** The admission log: [[summary]]'s rows, summed per source. */
+  private val Log = TwinLog.Additive("_mix",
+    "source STRING, n_docs BIGINT, n_kept BIGINT, kept_chars BIGINT",
+    Seq("n_docs", "n_kept", "kept_chars"))
 
-  private val CountCols = Seq("n_docs", "n_kept", "kept_chars")
-
-  private def summarySchema: StructType = StructType(
-    StructField("source", StringType) +:
-      CountCols.map(c => StructField(c, LongType)))
+  def logDir(outDir: String): String = Log.dir(outDir)
 
   /** The batch-local per-source summary against the frozen model —
     * also the read-side merge target. */
@@ -71,7 +69,7 @@ object MixtureStream {
       require(docs.columns.contains(c),
         s"MixtureStream needs a '$c' column; stream has " +
           docs.columns.mkString("[", ", ", "]")))
-    TwinLog.start(docs, checkpointDir, trigger, additive = true)((
+    TwinLog.start(docs, checkpointDir, trigger, outDir)((
       b => {
         val spark = b.sparkSession
         require(spark.catalog.tableExists(modelTable),
@@ -79,15 +77,14 @@ object MixtureStream {
             "before the monitor starts")
         summary(spark.table(modelTable))(b)
       },
-      logDir(outDir)))
+      Log))
   }
 
   /** The raw admission table — merged per-source counts (including
     * total docs seen), the ops view behind [[mixture]]. Empty
     * (correct schema) before the first commit. */
   def admission(spark: SparkSession, outDir: String): DataFrame =
-    TwinLog.merged(spark, logDir(outDir), summarySchema,
-      Seq("source"), CountCols)
+    TwinLog.merged(spark, outDir, Log)
 
   /** The current mixture table — q280's exact output shape over
     * everything that has arrived: merged counts through
@@ -102,6 +99,5 @@ object MixtureStream {
   /** Fold the committed prefix into one snapshot (the TwinLog
     * additive compaction contract); returns files collected. */
   def compactLog(spark: SparkSession, outDir: String): Long =
-    TwinLog.compactAdditive(spark, logDir(outDir), Seq("source"),
-      CountCols)
+    TwinLog.compactAdditive(spark, outDir, Log)
 }

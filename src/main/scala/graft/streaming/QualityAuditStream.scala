@@ -3,7 +3,6 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
-import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 import graft.operators.GopherRules
 
@@ -41,13 +40,18 @@ import graft.operators.GopherRules
   * is bounded by the live slice, never the document history. */
 object QualityAuditStream {
 
-  def logDir(outDir: String): String = outDir + "_qaudit"
-
   private val CountCols = Seq("n_docs", "v_wordcount", "v_meanlen",
     "v_stopword", "v_diversity", "n_pass",
     "v_top2", "v_top3", "v_top4", "v_dup3", "n_rep_pass",
     "c4_sent", "c4_short_sent", "c4_unterminated", "c4_few_sent",
     "c4_pages", "c4_kept_sent")
+
+  /** The audit log: [[summary]]'s rows, every count summed per source. */
+  private val Log = TwinLog.Additive("_qaudit",
+    ("source STRING" +: CountCols.map(_ + " BIGINT")).mkString(", "),
+    CountCols)
+
+  def logDir(outDir: String): String = Log.dir(outDir)
 
   /** q273's, q277's AND q283's per-source counts over one frame — the
     * batch-local summary AND the read-side merge target. One structural
@@ -86,10 +90,6 @@ object QualityAuditStream {
           .as("c4_kept_sent"))
   }
 
-  private def summarySchema: StructType = StructType(
-    StructField("source", StringType) +:
-      CountCols.map(c => StructField(c, LongType)))
-
   /** Start the maintainer: per micro-batch, append the batch's
     * per-source count deltas under the epoch id. */
   def start(docs: DataFrame, outDir: String, checkpointDir: String,
@@ -98,8 +98,8 @@ object QualityAuditStream {
       require(docs.columns.contains(c),
         s"QualityAuditStream needs a '$c' column; stream has " +
           docs.columns.mkString("[", ", ", "]")))
-    TwinLog.start(docs, checkpointDir, trigger, additive = true)(
-      (summary(_), logDir(outDir)))
+    TwinLog.start(docs, checkpointDir, trigger, outDir)(
+      (summary(_), Log))
   }
 
   /** The current audit table — q273's and q277's exact output shapes
@@ -107,8 +107,7 @@ object QualityAuditStream {
     * read-derived pass rates. Empty (correct schema) before the first
     * commit. */
   def audit(spark: SparkSession, outDir: String): DataFrame =
-    TwinLog.merged(spark, logDir(outDir), summarySchema,
-        Seq("source"), CountCols)
+    TwinLog.merged(spark, outDir, Log)
       .withColumn("pass_bp", expr("n_pass * 10000 div n_docs"))
       .withColumn("rep_pass_bp", expr("n_rep_pass * 10000 div n_docs"))
       .withColumn("c4_pass_bp", expr("c4_pages * 10000 div n_docs"))
@@ -116,6 +115,5 @@ object QualityAuditStream {
   /** Fold the committed prefix into one snapshot (the TwinLog
     * additive compaction contract); returns files collected. */
   def compactLog(spark: SparkSession, outDir: String): Long =
-    TwinLog.compactAdditive(spark, logDir(outDir), Seq("source"),
-      CountCols)
+    TwinLog.compactAdditive(spark, outDir, Log)
 }

@@ -59,7 +59,8 @@ object SampleStream {
     * topSummary → estimate over zero rows of the caller's types): the
     * one-source-of-truth rule the sibling streams follow, so an
     * integer-grouped reservoir reads with the same schema before and
-    * after its first commit. Without it the empty frame falls back to
+    * after its first commit. Without it a committed log is read with
+    * the types it was written with, and the empty frame falls back to
     * the historical convention (STRING group, BIGINT id). */
   def sample(spark: SparkSession, outDir: String, groupCol: String,
       idCol: String, k: Int,
@@ -75,9 +76,11 @@ object SampleStream {
           .select(col(groupCol), col(idCol), col("w"), col("priority"))
           .schema.map(_.copy(nullable = true)))
       case None =>
-        StructType(Seq(StructField(groupCol, StringType),
+        val fallback = StructType(Seq(StructField(groupCol, StringType),
           StructField(idCol, LongType), StructField("w", LongType),
           StructField("priority", DoubleType)))
+        TwinLog.written(spark, logDir(outDir)).fold(fallback)(written =>
+          StructType(fallback.fieldNames.toSeq.map(written(_))))
     }
     // replay/crash guard: duplicate appends of the same member merge to
     // one row (all its columns are deterministic recomputations); a

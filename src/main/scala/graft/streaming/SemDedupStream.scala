@@ -122,11 +122,10 @@ object SemDedupStream {
           .collect().map(_.getLong(0)).toSeq
         val inTouched =
           col("cell").isin(touched.map(java.lang.Long.valueOf): _*)
-        // partition-dir inference reads `cell` back as INT — cast to
-        // the assignment's LONG so union/replay rows stay identical
+        // read with the assignment's schema, so the `cell` partition
+        // column comes back LONG and union/replay rows stay identical
         val standing = TwinLog.read(spark, asgDir(outDir), newAsg.schema)
           .filter(inTouched)
-          .withColumn("cell", col("cell").cast(LongType))
         // the touched-cell slice of the corpus so far — a crashed
         // attempt's own rows fold in through the distinct, so replays
         // see the same population
@@ -178,7 +177,6 @@ object SemDedupStream {
     val id = StructField(idCol, LongType)
     val asg = TwinLog.read(spark, asgDir(outDir), StructType(Seq(id,
         StructField("cell", LongType), StructField("cscore", DoubleType))))
-      .withColumn("cell", col("cell").cast(LongType))
     val drops = TwinLog.read(spark, dropDir(outDir), StructType(Seq(id)))
     asg.join(drops.withColumn("__drop", lit(true)), Seq(idCol), "left")
       .withColumn("drop", coalesce(col("__drop"), lit(false)))

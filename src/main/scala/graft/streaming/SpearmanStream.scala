@@ -1,8 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
-import org.apache.spark.sql.types._
 
 import graft.operators.SpearmanHist
 
@@ -25,43 +24,35 @@ import graft.operators.SpearmanHist
   *
   * The log mechanics (replay idempotence, snapshot compaction safe
   * under crashes and concurrent streams, empty-before-first-commit
-  * reads) are [[TwinLog]]'s — this object binds them to
-  * [[SpearmanHist.cells]]'s keys (source, xb, yb) and sum (cnt). */
+  * reads) are [[TwinLog]]'s — this object declares
+  * [[SpearmanHist.cells]]'s layout: keys (source, xb, yb), sum (cnt). */
 object SpearmanStream {
 
-  /** Append-only cell-delta log for a monitor rooted at `outDir`. */
-  def logDir(outDir: String): String = outDir + "_rholog"
+  /** The cell-delta log: [[SpearmanHist.cells]]'s rows, summed per
+    * (source, xb, yb). */
+  private val Log = TwinLog.Additive("_rholog",
+    "source STRING, xb BIGINT, yb BIGINT, cnt BIGINT", Seq("cnt"))
 
-  /** Summary schema derived from [[SpearmanHist.cells]] itself (the
-    * DriftStream rule: one source of truth for empty-log reads). */
-  private def summarySchema(spark: SparkSession): StructType = {
-    val emptyDocs = spark.createDataFrame(
-      spark.sparkContext.emptyRDD[Row],
-      StructType(Seq(StructField("source", StringType),
-        StructField("n_chars", LongType),
-        StructField("text", StringType))))
-    SpearmanHist.cells(emptyDocs).schema
-  }
+  /** Append-only cell-delta log for a monitor rooted at `outDir`. */
+  def logDir(outDir: String): String = Log.dir(outDir)
 
   /** Start the monitor: per micro-batch, append the batch-local
     * (source, xb, yb) cell counts tagged with the epoch id. */
   def start(docs: DataFrame, outDir: String, checkpointDir: String,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    TwinLog.start(docs, checkpointDir, trigger, additive = true)(
-      (SpearmanHist.cells(_), logDir(outDir)))
+    TwinLog.start(docs, checkpointDir, trigger, outDir)(
+      (SpearmanHist.cells(_), Log))
 
   /** Current rank correlations: merge the live cells by addition,
     * finish with the exact midrank/moment pass. Reads the log only —
     * bounded by batches x bucket support, never the corpus. */
   def rho(spark: SparkSession, outDir: String): DataFrame =
-    SpearmanHist.rho(TwinLog.merged(spark, logDir(outDir),
-      summarySchema(spark), Seq("source", "xb", "yb"), Seq("cnt")))
+    SpearmanHist.rho(TwinLog.merged(spark, outDir, Log))
 
   /** Fold the fully-committed prefix of the log into one snapshot,
     * then garbage-collect the superseded files. Returns the number of
     * files collected. Safe concurrently with a running stream —
     * [[TwinLog.compactAdditive]]. */
   def compactLog(spark: SparkSession, outDir: String): Long =
-    TwinLog.compactAdditive(spark, logDir(outDir),
-      Seq("source", "xb", "yb"), Seq("cnt"))
+    TwinLog.compactAdditive(spark, outDir, Log)
 }

@@ -3,7 +3,6 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
-import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 import graft.operators.Bpe
 
@@ -32,13 +31,12 @@ import graft.operators.Bpe
   * live slice — document text is never revisited. */
 object TokenBudgetStream {
 
-  def logDir(outDir: String): String = outDir + "_tokbudget"
+  /** The budget log: [[summary]]'s rows, summed per source. */
+  private val Log = TwinLog.Additive("_tokbudget",
+    "source STRING, n_docs BIGINT, n_words BIGINT, n_tokens BIGINT",
+    Seq("n_docs", "n_words", "n_tokens"))
 
-  private val CountCols = Seq("n_docs", "n_words", "n_tokens")
-
-  private def summarySchema: StructType = StructType(
-    StructField("source", StringType) +:
-      CountCols.map(c => StructField(c, LongType)))
+  def logDir(outDir: String): String = Log.dir(outDir)
 
   /** The batch-local per-source summary under frozen merges — also
     * the read-side merge target. */
@@ -71,16 +69,15 @@ object TokenBudgetStream {
       s"merge table $mergesTable must be trained (Bpe.saveMerges) " +
         "before the monitor starts")
     val merges = Bpe.loadMerges(spark, mergesTable)
-    TwinLog.start(docs, checkpointDir, trigger, additive = true)(
-      (summary(merges), logDir(outDir)))
+    TwinLog.start(docs, checkpointDir, trigger, outDir)(
+      (summary(merges), Log))
   }
 
   /** The current budget table — merged per-source counts with q286's
     * derived tokens-per-word rate. Empty (correct schema) before the
     * first commit. */
   def budget(spark: SparkSession, outDir: String): DataFrame =
-    TwinLog.merged(spark, logDir(outDir), summarySchema,
-      Seq("source"), CountCols)
+    TwinLog.merged(spark, outDir, Log)
       // nullif: a source whose only documents carry NULL text counts
       // docs but prices no words — its rate is UNKNOWN (NULL), never a
       // DIVIDE_BY_ZERO that bricks the read (ANSI is on in Spark 4)
@@ -90,6 +87,5 @@ object TokenBudgetStream {
   /** Fold the committed prefix into one snapshot (the TwinLog
     * additive compaction contract); returns files collected. */
   def compactLog(spark: SparkSession, outDir: String): Long =
-    TwinLog.compactAdditive(spark, logDir(outDir), Seq("source"),
-      CountCols)
+    TwinLog.compactAdditive(spark, outDir, Log)
 }

@@ -24,8 +24,10 @@ import org.apache.spark.sql.types.{LongType, StructType}
   *    results;
   *  - ADDITIVE deltas (summaries that MERGE BY ADDITION — DriftStream's
   *    per-(week, cents) counts, CusumStream's cent sums, the LM and
-  *    DSIR count models): a stray duplicate double-counts, so these
-  *    logs carry an explicit idempotence protocol:
+  *    DSIR count models), each declared once as an [[Additive]] (its
+  *    directory, row layout and sum columns): a stray duplicate
+  *    double-counts, so these logs carry an explicit idempotence
+  *    protocol:
   *     - raw delta rows are tagged `__batch` (`__covers` null): a
   *       replayed epoch appends byte-identical rows that [[merged]]'s
   *       full-row distinct collapses;
@@ -49,11 +51,13 @@ import org.apache.spark.sql.types.{LongType, StructType}
   *       folds to its own snapshot reach, never a sentinel arithmetic
   *       overflow.
   *
-  * A log whose first micro-batch has not committed reads as EMPTY with
-  * the caller's schema, and compacting it is a 0-file no-op that
-  * creates nothing. A fact-log compaction writes [[fileCount]] files
-  * for its input bytes (its old files stay until the write finishes,
-  * so a partly landed generation only adds duplicates).
+  * Reads never infer a schema: a log whose first micro-batch has not
+  * committed (no directory, or only an in-flight `_temporary`) reads
+  * as EMPTY with the caller's schema or the declared layout, and
+  * compacting it is a 0-file no-op that creates nothing. A fact-log
+  * compaction writes [[fileCount]] files for its input bytes (its old
+  * files stay until the write finishes, so a partly landed generation
+  * only adds duplicates).
   */
 object TwinLog {
 
@@ -97,44 +101,70 @@ object TwinLog {
       .trigger(trigger)
       .start()
 
-  /** Start a twin whose epoch only appends summaries: per micro-batch,
-    * each (summarize, dir) pair appends `summarize(batch)` to `dir`
-    * under the same epoch tag, in order — a crash between two appends
-    * heals on the epoch replay. `additive` logs also carry the
-    * snapshot tag ([[merged]]). */
-  def start(rows: DataFrame, checkpointDir: String, trigger: Trigger,
-      additive: Boolean = false)(
+  /** Start a twin whose epoch only appends FACT summaries: per
+    * micro-batch, each (summarize, dir) pair appends `summarize(batch)`
+    * to `dir` under the same epoch tag, in order — a crash between two
+    * appends heals on the epoch replay. */
+  def start(rows: DataFrame, checkpointDir: String, trigger: Trigger)(
       logs: (DataFrame => DataFrame, String)*): StreamingQuery =
     foreachEpoch(rows, checkpointDir, trigger) { (batch, batchId) =>
       logs.foreach { case (summarize, dir) =>
-        val tagged = summarize(batch).withColumn(Batch, lit(batchId))
-        write(if (additive) tagged.withColumn(Covers, lit(null).cast("long"))
-          else tagged, dir, Nil)
+        append(summarize(batch), dir, batchId)
       }
     }
 
-  /** The log's `schema` columns, replay-collapsed. `schema` names the
-    * projection and types the EMPTY frame read before the first
-    * commit. */
-  def read(spark: SparkSession, dir: String, schema: StructType): DataFrame =
+  /** Start a twin whose epoch appends ADDITIVE deltas: per micro-batch,
+    * each (summarize, log) pair appends `summarize(batch)` to `log`
+    * under `outDir`, tagged as a raw delta ([[merged]]). Every summary
+    * is checked against its log's layout first, so an epoch whose
+    * summary drifted from its declaration fails before it writes. */
+  def start(rows: DataFrame, checkpointDir: String, trigger: Trigger,
+      outDir: String)(
+      logs: (DataFrame => DataFrame, Additive)*): StreamingQuery =
+    foreachEpoch(rows, checkpointDir, trigger) { (batch, batchId) =>
+      logs.map { case (summarize, log) => log -> log.check(summarize(batch)) }
+        .foreach { case (log, rows) =>
+          write(rows.withColumn(Batch, lit(batchId))
+            .withColumn(Covers, lit(null).cast(LongType)), log.dir(outDir), Nil)
+        }
+    }
+
+  /** `dir` read with `schema`, in its column order (a partition column
+    * would come last) — never inferred from the files, so no job runs
+    * to plan it, and a log whose first append is still in flight (only
+    * `_temporary` exists) reads as EMPTY too. */
+  private def scan(spark: SparkSession, dir: String,
+      schema: StructType): DataFrame =
     if (!exists(spark, dir)) empty(spark, schema)
-    else spark.read.parquet(dir)
-      .select(schema.fieldNames.toSeq.map(col): _*).distinct()
+    else spark.read.schema(schema).parquet(dir)
+      .select(schema.fieldNames.toSeq.map(col): _*)
+
+  /** A FACT log's `schema` columns, replay-collapsed. EMPTY with
+    * `schema` before the first commit. */
+  def read(spark: SparkSession, dir: String, schema: StructType): DataFrame =
+    scan(spark, dir, schema).distinct()
 
   /** A RESULT log read with exactly `schema`: rows collapse only within
     * their epoch. EMPTY with `schema` before the first commit. */
   def results(spark: SparkSession, dir: String, schema: StructType): DataFrame =
-    if (!exists(spark, dir)) empty(spark, schema)
-    else spark.read.schema(schema.add(Batch, LongType)).parquet(dir)
-      .distinct()
-      .drop(Batch)
+    scan(spark, dir, schema.add(Batch, LongType)).distinct().drop(Batch)
 
-  /** The log's own columns, tags excluded; None before the first
+  /** The log's own columns and types as written, tags excluded; None
+    * until its first data file lands. Infers from the files — a probe
+    * for logs whose layout the caller does not know. */
+  private[streaming] def written(spark: SparkSession,
+      dir: String): Option[StructType] = {
+    val root = new Path(dir)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(root) || dataFiles(fs, root).isEmpty) None
+    else Some(StructType(spark.read.parquet(dir).schema
+      .filterNot(f => f.name == Batch || f.name == Covers)))
+  }
+
+  /** The log's own column names, tags excluded; None before the first
     * commit. */
   def columns(spark: SparkSession, dir: String): Option[Seq[String]] =
-    if (!exists(spark, dir)) None
-    else Some(spark.read.parquet(dir).columns.toSeq
-      .filterNot(c => c == Batch || c == Covers))
+    written(spark, dir).map(_.fieldNames.toSeq)
 
   /** Fold a FACT log into one generation: `fold(log)` (the raw log,
     * tags included) tagged `max(__batch) + 1`, repartitioned by `keys`
@@ -142,7 +172,8 @@ object TwinLog {
     * replaces are deleted. Returns the number of files collected. */
   def compact(spark: SparkSession, dir: String, keys: Seq[String],
       partitionBy: Seq[String] = Nil)(fold: DataFrame => DataFrame): Long =
-    rewrite(spark, dir, keys, partitionBy, fileCount) { log =>
+    rewrite(spark, dir, keys, partitionBy, fileCount,
+        spark.read.parquet(dir)) { log =>
       val gen = log.agg(max(col(Batch))).head() match {
         case r if r.isNullAt(0) => 1L // a log of empty files
         case r => r.getLong(0) + 1L
@@ -154,17 +185,17 @@ object TwinLog {
     * partitioned logs work; `_`/`.`-prefixed entries such as an
     * in-flight append's `_temporary` are skipped, as Spark's reader
     * skips them), write `next(log)` as `files(input bytes)` files,
-    * then delete the listed files. `next` returns None when nothing is
-    * safe to fold. */
+    * then delete the listed files. `log` is read only once data files
+    * exist; `next` returns None when nothing is safe to fold. */
   private def rewrite(spark: SparkSession, dir: String, keys: Seq[String],
-      partitionBy: Seq[String], files: Long => Int)(
+      partitionBy: Seq[String], files: Long => Int, log: => DataFrame)(
       next: DataFrame => Option[DataFrame]): Long = {
     if (!exists(spark, dir)) return 0L
     val root = new Path(dir)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val before = dataFiles(fs, root)
     if (before.isEmpty) return 0L
-    next(spark.read.parquet(dir)) match {
+    next(log) match {
       case None => 0L
       case Some(rows) =>
         val n = files(before.map(_.getLen).sum)
@@ -183,6 +214,43 @@ object TwinLog {
       else Nil
     }
 
+  /** An ADDITIVE log, declared once: the directory `suffix` under a
+    * twin's `outDir`, the row `layout` as DDL (for example
+    * `"w1 STRING, w2 STRING, c12 BIGINT"`) and the `sums` columns. The
+    * keys are the layout's other columns, in layout order — every
+    * summary is `groupBy(keys).agg(sums)`. [[start]] checks each
+    * epoch's summary against the layout, [[merged]] reads with it and
+    * [[compactAdditive]] folds by it. */
+  final case class Additive(suffix: String, layout: String, sums: Seq[String]) {
+    val schema: StructType = StructType.fromDDL(layout)
+    require(sums.nonEmpty && sums.forall(schema.fieldNames.contains),
+      s"sum columns ${sums.mkString("[", ", ", "]")} of log $suffix " +
+        s"must be columns of its layout $layout")
+    val keys: Seq[String] = schema.fieldNames.toSeq.filterNot(sums.contains)
+
+    def dir(outDir: String): String = outDir + suffix
+
+    /** The layout plus both tags — what the log holds on disk. */
+    private[TwinLog] def tagged: StructType =
+      schema.add(Batch, LongType).add(Covers, LongType)
+
+    /** `rows`, if their column names and types are the layout's
+      * (nullability aside); otherwise fails naming both schemas. */
+    private[TwinLog] def check(rows: DataFrame): DataFrame = {
+      def shape(s: StructType) = s.map(f => f.name -> f.dataType)
+      require(shape(rows.schema) == shape(schema),
+        s"summary for log $suffix has columns ${rows.schema.toDDL}; " +
+          s"its layout is $layout")
+      rows
+    }
+
+    /** `groupBy(keys).agg(sum(c) as c for c in sums)`. */
+    private[TwinLog] def fold(rows: DataFrame): DataFrame = {
+      val aggs = sums.map(c => sum(col(c)).as(c))
+      rows.groupBy(keys.map(col): _*).agg(aggs.head, aggs.tail: _*)
+    }
+  }
+
   /** The live slice of an ADDITIVE log — max-covers snapshot (if any)
     * plus raw deltas past it — collapsed against replays. */
   private def live(log: DataFrame): DataFrame = {
@@ -196,49 +264,43 @@ object TwinLog {
         || (col(Covers).isNull && col(Batch) > covers))
   }
 
-  /** The exact merged ADDITIVE summary after any stream prefix: live
-    * slice summed per key. Reads the log only — bounded by batches x
-    * key support, never the event history. An uncommitted monitor
-    * reads as EMPTY with the caller's summary schema. */
-  def merged(spark: SparkSession, dir: String, summarySchema: StructType,
-      keys: Seq[String], sums: Seq[String]): DataFrame = {
-    val aggs = sums.map(c => sum(col(c)).as(c))
-    val slice =
-      if (!exists(spark, dir))
-        empty(spark, summarySchema.add(Batch, LongType).add(Covers, LongType))
-      else live(spark.read.parquet(dir))
-    slice.groupBy(keys.map(col): _*).agg(aggs.head, aggs.tail: _*)
-  }
+  /** The exact merged ADDITIVE summary after any stream prefix: the
+    * live slice of `log` under `outDir`, summed per key — (keys, sums).
+    * Reads the log only — bounded by batches x key support, never the
+    * event history. An uncommitted log reads as EMPTY. */
+  def merged(spark: SparkSession, outDir: String, log: Additive): DataFrame =
+    log.fold(live(scan(spark, log.dir(outDir), log.tagged)))
 
-  /** Fold the fully-committed prefix of an ADDITIVE log's live slice
-    * into a one-file snapshot, then garbage-collect the superseded
-    * files.
-    * Returns the number of files collected (0 when there is nothing
-    * safe to fold). Safe concurrently with a running stream and with
-    * crashed prior compactions — see the object doc. */
-  def compactAdditive(spark: SparkSession, dir: String, keys: Seq[String],
-      sums: Seq[String]): Long =
-    rewrite(spark, dir, keys, Nil, _ => 1) { log =>
-      val slice = live(log)
-      val bounds = slice.agg(max(col(Covers)),
-        max(when(col(Covers).isNull, col(Batch)))).head()
-      val snapC = if (bounds.isNullAt(0)) -1L else bounds.getLong(0)
-      // no raw rows (e.g. a freshly-compacted log holds only the
-      // snapshot): the snapshot's reach IS the fold bound — subtracting
-      // from a sentinel would wrap and poison __covers forever
-      val covers =
-        if (bounds.isNullAt(1)) snapC
-        else math.max(snapC, bounds.getLong(1) - 1L)
-      if (covers < 0) None // nothing provably fully committed yet
-      else {
-        val aggs = sums.map(c => sum(col(c)).as(c))
-        val fold = slice.filter(col(Covers).isNotNull || col(Batch) <= covers)
-          .groupBy(keys.map(col): _*)
-          .agg(aggs.head, aggs.tail: _*)
-          .withColumn(Batch, lit(covers))
-          .withColumn(Covers, lit(covers))
-        val carry = slice.filter(col(Covers).isNull && col(Batch) > covers)
-        Some(fold.unionByName(carry))
+  /** Fold the fully-committed prefix of each `logs` live slice under
+    * `outDir` into a one-file snapshot, then garbage-collect the
+    * superseded files. Returns the number of files collected (0 for a
+    * log with nothing safe to fold). Safe concurrently with a running
+    * stream and with crashed prior compactions — see the object doc. */
+  def compactAdditive(spark: SparkSession, outDir: String,
+      logs: Additive*): Long =
+    logs.map { log =>
+      val dir = log.dir(outDir)
+      rewrite(spark, dir, log.keys, Nil, _ => 1,
+          scan(spark, dir, log.tagged)) { raw =>
+        val slice = live(raw)
+        val bounds = slice.agg(max(col(Covers)),
+          max(when(col(Covers).isNull, col(Batch)))).head()
+        val snapC = if (bounds.isNullAt(0)) -1L else bounds.getLong(0)
+        // no raw rows (e.g. a freshly-compacted log holds only the
+        // snapshot): the snapshot's reach IS the fold bound — subtracting
+        // from a sentinel would wrap and poison __covers forever
+        val covers =
+          if (bounds.isNullAt(1)) snapC
+          else math.max(snapC, bounds.getLong(1) - 1L)
+        if (covers < 0) None // nothing provably fully committed yet
+        else {
+          val fold = log.fold(
+              slice.filter(col(Covers).isNotNull || col(Batch) <= covers))
+            .withColumn(Batch, lit(covers))
+            .withColumn(Covers, lit(covers))
+          val carry = slice.filter(col(Covers).isNull && col(Batch) > covers)
+          Some(fold.unionByName(carry))
+        }
       }
-    }
+    }.sum
 }

@@ -72,4 +72,51 @@ class BpeSpec extends SparkSpec {
     assert(tv("a") == Seq("a") && tv("bc") == Seq("bc"))
     spark.catalog.clearCache()
   }
+
+  /** Sennrich et al. (2016) algorithm 1 in plain Scala over a
+    * (word, frequency) vocabulary: pair counts, the top pair under
+    * (count desc, left asc, right asc), greedy left-to-right merge;
+    * stops when no pair occurs twice. */
+  private def referenceMerges(vocab: Map[String, Long],
+      nMerges: Int): Seq[(String, String, Long)] = {
+    var words: Seq[(Seq[String], Long)] =
+      vocab.toSeq.map { case (w, f) => w.map(_.toString) -> f }
+    var merges = Vector.empty[(String, String, Long)]
+    var done = false
+    while (merges.size < nMerges && !done) {
+      val counts = words.flatMap { case (sym, f) =>
+          sym.zip(sym.tail).map(_ -> f) }
+        .groupMapReduce(_._1)(_._2)(_ + _).filter(_._2 >= 2)
+      if (counts.isEmpty) done = true
+      else {
+        val ((a, b), n) = counts.minBy { case ((l, r), c) => (-c, l, r) }
+        merges :+= ((a, b, n))
+        words = words.map { case (sym, f) => refMerge(sym, a, b) -> f }
+      }
+    }
+    merges
+  }
+
+  // the classic low/lower/newest/widest vocabulary
+  test("trainMerges == the Sennrich reference on the classic vocabulary") {
+    val vocab = Map("low" -> 5L, "lower" -> 2L, "newest" -> 6L,
+      "widest" -> 3L)
+    val docs = vocab.toSeq.zipWithIndex.map { case ((w, f), i) =>
+      (i.toLong, Seq.fill(f.toInt)(w).mkString(" ")) }.toDF("doc_id", "text")
+    val got = Bpe.trainMerges(docs, "text", rounds = 8)
+      .map { case (_, a, b, n) => (a, b, n) }
+    assert(got == referenceMerges(vocab, 8))
+    spark.catalog.clearCache()
+  }
+
+  test("the first trained merge on the corpus is q90's rank-1 pair") {
+    val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    val (_, a, b, n) = Bpe.trainMerges(docs, "text", rounds = 1).head
+    val q90 = graft.SparkEntry
+      .queries("q90_bpe_first_merge")(spark, "/root/testdata/sf0.001")
+      .filter(col("rnk") === 1)
+      .select(col("pair"), col("n")).as[(String, Long)].head()
+    assert((a + b, n) == q90)
+    spark.catalog.clearCache()
+  }
 }

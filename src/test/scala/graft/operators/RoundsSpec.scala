@@ -25,7 +25,6 @@ import graft.SparkSpec
   *   TheilSen.slopeMilli          4 -> 3    13 -> 12
   *   LongestMatch                 4 -> 4    6 -> 6
   *   Bpe.trainMerges              2 -> 2    5 -> 4
-  *   functions.Bpe.train          2 -> 2    5 -> 4
   *
   * With AQE off every job is one the driver issues (actions, eager
   * cuts, broadcast builds), so those counts are exact and pinned as
@@ -92,8 +91,6 @@ class RoundsSpec extends SparkSpec {
     .toDF("__snip")
   private def bpeDocs = Seq((1L, "aaab aaab"), (2L, "aaab ab"))
     .toDF("doc_id", "text")
-  private def wordCounts = Seq("low" -> 5L, "lower" -> 2L, "newest" -> 6L,
-    "widest" -> 3L).toDF("w", "f")
 
   /** (loop, call at a given round count, base round count, jobs per
     * round before with AQE off, top of the AQE-on range before). */
@@ -124,8 +121,6 @@ class RoundsSpec extends SparkSpec {
         Seq((1L, "quick")).toDF("eval_id", "text"), "eval_id", "text",
         cap = (1 << r) - 1, fanout = 1).collect(), 1, 4, 6),
     ("Bpe.trainMerges", r => Bpe.trainMerges(bpeDocs, "text", rounds = r),
-      1, 2, 5),
-    ("functions.Bpe.train", r => graft.functions.Bpe.train(wordCounts, r),
       1, 2, 5))
 
   for ((name, run, r, offBefore, onBefore) <- loops)
@@ -165,8 +160,7 @@ class RoundsSpec extends SparkSpec {
         LongestMatch.longestMatchFromSnips(snips,
           Seq((1L, "quick")).toDF("eval_id", "text"), "eval_id", "text",
           cap = 7, fanout = 1).collect(), 1),
-      ("Bpe.trainMerges", () => Bpe.trainMerges(bpeDocs, "text", rounds = 3), 0),
-      ("functions.Bpe.train", () => graft.functions.Bpe.train(wordCounts, 3), 0))
+      ("Bpe.trainMerges", () => Bpe.trainMerges(bpeDocs, "text", rounds = 3), 0))
     val over = cases.flatMap { case (name, run, allowed) =>
       val left = leftBy(run())
       if (left > allowed) Some(s"$name left $left persistent RDDs (allowed $allowed)")

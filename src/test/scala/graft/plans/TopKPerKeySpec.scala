@@ -1,5 +1,6 @@
 package graft.plans
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -204,18 +205,16 @@ class TopKPerKeySpec extends SparkSpec {
     // make sure the strategy is registered in this session
     TopKPerKey.topK(Seq((1L, 1L, 1L)).toDF("key", "v", "id"),
       Seq("key"), Seq("v" -> false, "id" -> true), 1).collect()
-    val df = (0 until 2000)
-      .map(i => (i % 40L, (i * 7) % 13L, i.toLong))
-      .toDF("key", "v", "id")
-      .repartition(16)
-    def windowForm = df
+    val rows = (0 until 2000).map(i => (i % 40L, (i * 7) % 13L, i.toLong))
+    val df = rows.toDF("key", "v", "id").repartition(16)
+    def windowForm(df: DataFrame) = df
       .withColumn("rn", row_number().over(
         Window.partitionBy(col("key")).orderBy(col("v").desc, col("id"))))
       .filter(col("rn") <= 3).drop("rn")
     val prev = spark.conf.get("spark.sql.adaptive.enabled")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try {
-      val q = windowForm
+      val q = windowForm(df)
       val plan = q.queryExecution.executedPlan
       assert(plan.exists { case _: FinalTopKPerKeyExec => true; case _ => false },
         s"the window spelling must auto-plan as the heap operator:\n$plan")
@@ -223,16 +222,20 @@ class TopKPerKeySpec extends SparkSpec {
         case _: org.apache.spark.sql.execution.window.WindowExec => true
         case _ => false
       }, "no WindowExec may remain after the rewrite")
-      // identical rows to the un-rewritten form
-      spark.conf.set(TopKPerKeyStrategy.RewriteConf, "false")
-      val off = windowForm
+      // identical rows to the un-rewritten form: a session without the
+      // extensions has no strategy and plans the window
+      val bare = bareSession()
+      bare.conf.set("spark.sql.adaptive.enabled", "false")
+      val off = windowForm(
+        bare.createDataFrame(rows).toDF("key", "v", "id").repartition(16))
       assert(off.queryExecution.executedPlan.exists {
         case _: org.apache.spark.sql.execution.window.WindowExec => true
         case _ => false
-      }, "conf off must restore the window plan")
-      assert(sameRows(q, off))
+      }, "a session without the strategy must keep the window plan")
+      // collected apart: planned in one session, `off` would be rewritten
+      def rowsOf(d: DataFrame) = d.collect().map(_.toString).sorted.toSeq
+      assert(rowsOf(q) == rowsOf(off))
       // rn = 1 (the argmax spelling) also fires
-      spark.conf.set(TopKPerKeyStrategy.RewriteConf, "true")
       val arg = df.withColumn("rn", row_number().over(
         Window.partitionBy(col("key")).orderBy(col("v").desc, col("id"))))
         .filter(col("rn") === 1).drop("rn")
@@ -250,7 +253,6 @@ class TopKPerKeySpec extends SparkSpec {
       }, "rn in the output needs the real window")
     } finally {
       spark.conf.set("spark.sql.adaptive.enabled", prev)
-      spark.conf.unset(TopKPerKeyStrategy.RewriteConf)
     }
   }
 

@@ -6,6 +6,7 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{StreamingQueryException, Trigger}
 import org.apache.spark.sql.types._
 
 import graft.SparkSpec
@@ -15,7 +16,9 @@ import graft.SparkSpec
   * generation landing and its delete leaves the read unchanged and a
   * re-run converges; compacting a never-committed log is a 0-file
   * no-op that creates nothing; an empty read carries the caller's
-  * schema; an additive snapshot lands atomically; and the fact-log
+  * schema, also while the first append is in flight; an additive
+  * log's declared layout is checked at declaration and before each
+  * append; an additive snapshot lands atomically; and the fact-log
   * compaction file-count rule. */
 class TwinLogSpec extends SparkSpec {
   import spark.implicits._
@@ -23,6 +26,10 @@ class TwinLogSpec extends SparkSpec {
   private val factSchema = StructType(Seq(
     StructField("cell", LongType), StructField("id", LongType),
     StructField("tag", StringType)))
+
+  /** An additive log of per-cell id sums, kept in the directory it is
+    * given (empty suffix). */
+  private val idSums = TwinLog.Additive("", "cell BIGINT, id BIGINT", Seq("id"))
 
   private def canon(df: DataFrame): Seq[String] =
     df.collect().map(_.toString).toSeq.sorted
@@ -80,7 +87,7 @@ class TwinLogSpec extends SparkSpec {
     val dir = Files.createTempDirectory("twinlog-none")
       .resolve("log").toString
     assert(TwinLog.compact(spark, dir, Seq("cell"))(fold) == 0L)
-    assert(TwinLog.compactAdditive(spark, dir, Seq("cell"), Seq("id")) == 0L)
+    assert(TwinLog.compactAdditive(spark, dir, idSums) == 0L)
     assert(!Files.exists(Paths.get(dir)), "compaction created the log dir")
   }
 
@@ -92,9 +99,52 @@ class TwinLogSpec extends SparkSpec {
       assert(df.schema == factSchema)
       assert(df.count() == 0L)
     }
-    val merged = TwinLog.merged(spark, dir, factSchema, Seq("cell"), Seq("id"))
+    val merged = TwinLog.merged(spark, dir, idSums)
     assert(merged.columns.toSeq == Seq("cell", "id"))
     assert(merged.count() == 0L)
+  }
+
+  test("a log whose first append is in flight (only _temporary/0) " +
+      "reads as empty with the declared columns") {
+    val root = Files.createTempDirectory("twinlog-inflight")
+    val dir = root.resolve("log").toString
+    Files.createDirectories(root.resolve("log").resolve("_temporary")
+      .resolve("0"))
+    val merged = TwinLog.merged(spark, dir, idSums)
+    assert(merged.columns.toSeq == Seq("cell", "id"))
+    assert(merged.count() == 0L)
+    val facts = TwinLog.read(spark, dir, factSchema)
+    assert(facts.columns.toSeq == factSchema.fieldNames.toSeq)
+    assert(facts.count() == 0L)
+  }
+
+  test("an additive epoch whose summary drifts from the declared layout " +
+      "fails naming the column") {
+    val root = Files.createTempDirectory("twinlog-layout")
+    Seq((1L, 10L, "a"), (2L, 20L, "b")).toDF("cell", "id", "tag")
+      .write.parquet(root.resolve("in").toString)
+    def run(summarize: DataFrame => DataFrame): String = {
+      val rows = spark.readStream.schema(factSchema)
+        .parquet(root.resolve("in").toString)
+      val q = TwinLog.start(rows,
+        Files.createTempDirectory(root, "cp").toString,
+        Trigger.AvailableNow(),
+        root.resolve("out").toString)((summarize, idSums))
+      intercept[StreamingQueryException](q.awaitTermination(120000))
+        .getMessage
+    }
+    val extra = run(_.groupBy("cell", "tag").agg(sum("id").as("id")))
+    assert(extra.contains("tag"), extra)
+    val retyped = run(_.select(col("cell"), col("id").cast(IntegerType)))
+    assert(retyped.contains("id INT") && retyped.contains("id BIGINT"),
+      retyped)
+    assert(!Files.exists(root.resolve("out")), "a drifted epoch wrote rows")
+  }
+
+  test("a sum column missing from the layout fails at declaration") {
+    val e = intercept[IllegalArgumentException](
+      TwinLog.Additive("_x", "cell BIGINT", Seq("id")))
+    assert(e.getMessage.contains("id"))
   }
 
   test("a result log collapses a replayed epoch but keeps equal rows " +
@@ -118,18 +168,17 @@ class TwinLogSpec extends SparkSpec {
         .withColumn("__batch", lit(b))
         .withColumn("__covers", lit(null).cast(LongType))
         .repartition(4).write.mode("append").parquet(dir)
-    val summary = StructType(Seq(
-      StructField("key", LongType), StructField("n", LongType)))
+    val summary = TwinLog.Additive("", "key BIGINT, n BIGINT", Seq("n"))
     def merged(d: String): Seq[String] =
-      canon(TwinLog.merged(spark, d, summary, Seq("key"), Seq("n")))
+      canon(TwinLog.merged(spark, d, summary))
     val before = merged(dir)
 
     // compact a copy; every file left in it is new
     val work = root.resolve("work")
     Files.createDirectories(work)
     for (f <- dataFiles(dir)) Files.copy(f, work.resolve(f.getFileName))
-    assert(TwinLog.compactAdditive(spark, work.toString, Seq("key"),
-      Seq("n")) == dataFiles(dir).size.toLong)
+    assert(TwinLog.compactAdditive(spark, work.toString, summary) ==
+      dataFiles(dir).size.toLong)
     val snapshot = dataFiles(work.toString).sortBy(_.toString)
     assert(snapshot.size == 1, s"snapshot written as ${snapshot.size} files")
     assert(merged(work.toString) == before, "compaction moved the summary")
