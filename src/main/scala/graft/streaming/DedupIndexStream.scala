@@ -173,7 +173,5 @@ object DedupIndexStream {
     * parallelism grows with the corpus instead of serializing through
     * one task. Returns the number of files collected. */
   def compactLog(spark: SparkSession, outDir: String): Long =
-    TwinLog.compact(spark, logDir(outDir), Seq("band", "key")) {
-      _.select(col("doc_id"), col("band"), col("key")).distinct()
-    }
+    TwinLog.compact(spark, logDir(outDir), Seq("band", "key"))()
 }

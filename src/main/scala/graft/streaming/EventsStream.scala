@@ -24,7 +24,8 @@ object EventsStream {
     * TIMESTAMP(NANOS) (surfacing as LongType under `nanosAsLong`) and
     * TIMESTAMP(MICROS, no zone) (surfacing as TimestampNTZType); a
     * streaming source schema must match the files, so it is probed
-    * from the directory's parquet footer at plan time (no job). */
+    * from the directory's parquet footer at plan time (an inferred
+    * read: planning it runs one job). */
   def eventSchema(tsType: DataType): StructType = StructType(Seq(
     StructField("event_id", LongType),
     StructField("ts", tsType),
@@ -42,7 +43,7 @@ object EventsStream {
     *
     * The physical `ts` type comes from `tsType` when given; otherwise
     * it is probed from the directory's parquet footers at plan time
-    * (no job). A watch directory that is still EMPTY at stream start
+    * (one schema-inference job). A watch directory that is still EMPTY at stream start
     * cannot be probed — the probe then falls back to the current
     * testdata generation's micros-NTZ; a producer that will write the
     * nanos layout into an initially-empty directory must pass

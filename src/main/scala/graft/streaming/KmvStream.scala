@@ -86,9 +86,6 @@ object KmvStream {
     * KEY-SUPPORT-BOUNDED (sources x k rows), so it stays one file
     * until the log itself outgrows one file's bytes. */
   def compactLog(spark: SparkSession, outDir: String, k: Int): Long =
-    TwinLog.compact(spark, logDir(outDir), Seq("source")) { log =>
-      graft.plans.TopKPerKey.topK(
-        log.select(col("source"), col("h")).distinct(),
-        Seq("source"), Seq(("h", true)), k)
-    }
+    TwinLog.compact(spark, logDir(outDir), Seq("source"))(
+      graft.plans.TopKPerKey.topK(_, Seq("source"), Seq(("h", true)), k))
 }

@@ -74,22 +74,21 @@ object MergeSink {
       .drop("__rn")
   }
 
-  /** Collapse the changelog into ONE resolved partition (kept at the
-    * current max batchId, so stream batches after the compaction still
-    * win resolution) via scratch-dir write + swap. Crash between
+  /** Collapse the changelog into ONE resolved partition, `_batch=-1`
+    * (below every stream batchId, so any later batch still wins
+    * resolution, and a replay of a batch the base already folded in
+    * overwrites only its own partition, never the base), via
+    * scratch-dir write + swap. Crash between
     * delete and rename loses no durability promise a changelog sink
     * ever made mid-maintenance: rerun the compaction from the scratch
     * copy's source-of-truth — the sink itself — like the index
     * compaction's documented recovery. Returns the resolved row count. */
   def compact(spark: SparkSession, dir: String, keyCol: String,
       opCol: String): Long = {
-    // directory partition discovery infers `_batch` as INT — cast up
-    val maxBatch = spark.read.parquet(dir)
-      .agg(max(col(BatchCol)).cast("long")).head().getLong(0)
     val tmp = dir + "_compact.tmp"
     val out = resolved(spark, dir, keyCol, opCol)
       .withColumn(opCol, lit("U"))
-      .withColumn(BatchCol, lit(maxBatch))
+      .withColumn(BatchCol, lit(-1L))
     out.write.mode("overwrite").partitionBy(BatchCol).parquet(tmp)
     val fs = new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)

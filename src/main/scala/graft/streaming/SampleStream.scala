@@ -53,15 +53,14 @@ object SampleStream {
     * batches x groups x (k+1) rows, never the corpus.
     *
     * `schemaFrom`: a (possibly non-empty) frame with the caller's
-    * (groupCol, idCol, weightCol) types — ONLY consulted when the
-    * reservoir has never committed, to derive the empty result's
-    * schema from the REAL pipeline ([[PrioritySample.withPriority]] →
-    * topSummary → estimate over zero rows of the caller's types): the
-    * one-source-of-truth rule the sibling streams follow, so an
-    * integer-grouped reservoir reads with the same schema before and
-    * after its first commit. Without it a committed log is read with
-    * the types it was written with, and the empty frame falls back to
-    * the historical convention (STRING group, BIGINT id). */
+    * (groupCol, idCol, weightCol) types — the log layout is derived
+    * from the REAL pipeline ([[PrioritySample.withPriority]] over zero
+    * rows of the caller's types), the one-source-of-truth rule the
+    * sibling streams follow, so an integer-grouped reservoir reads with
+    * the same schema before and after its first commit. Without it the
+    * log is read with the documented default layout (STRING group,
+    * BIGINT id). Either way the log's schema is declared, never
+    * inferred, so building the read runs no job. */
   def sample(spark: SparkSession, outDir: String, groupCol: String,
       idCol: String, k: Int,
       schemaFrom: Option[(DataFrame, String)] = None): DataFrame = {
@@ -75,12 +74,9 @@ object SampleStream {
             groupCol, idCol, weightCol)
           .select(col(groupCol), col(idCol), col("w"), col("priority"))
           .schema.map(_.copy(nullable = true)))
-      case None =>
-        val fallback = StructType(Seq(StructField(groupCol, StringType),
-          StructField(idCol, LongType), StructField("w", LongType),
-          StructField("priority", DoubleType)))
-        TwinLog.written(spark, logDir(outDir)).fold(fallback)(written =>
-          StructType(fallback.fieldNames.toSeq.map(written(_))))
+      case None => StructType(Seq(StructField(groupCol, StringType),
+        StructField(idCol, LongType), StructField("w", LongType),
+        StructField("priority", DoubleType)))
     }
     // replay/crash guard: duplicate appends of the same member merge to
     // one row (all its columns are deterministic recomputations); a
@@ -98,8 +94,6 @@ object SampleStream {
     * distinct already tolerates). */
   def compactLog(spark: SparkSession, outDir: String, groupCol: String,
       idCol: String, k: Int): Long =
-    TwinLog.compact(spark, logDir(outDir), Seq(groupCol)) { log =>
-      PrioritySample.topSummary(log.select(col(groupCol), col(idCol),
-        col("w"), col("priority")).distinct(), groupCol, idCol, k)
-    }
+    TwinLog.compact(spark, logDir(outDir), Seq(groupCol))(
+      PrioritySample.topSummary(_, groupCol, idCol, k))
 }

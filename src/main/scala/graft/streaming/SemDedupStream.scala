@@ -183,27 +183,13 @@ object SemDedupStream {
       .drop("__drop")
   }
 
-  /** The id column name is whatever the stream wrote — recovered from
-    * the log's columns (everything but the known ones). None before
-    * the first commit. */
-  private def idColOf(spark: SparkSession, dir: String): Option[String] =
-    TwinLog.columns(spark, dir).flatMap(
-      _.find(c => !Seq("cell", "cscore", "v", "nv").contains(c)))
-
   /** Fold both logs' accreted per-batch files back to distinct rows
     * through [[TwinLog.compact]], keeping the `cell` layout. Returns
     * files collected. */
-  def compactLogs(spark: SparkSession, outDir: String): Long = {
-    def one(dir: String, dataCols: String => Seq[String]): Long =
-      idColOf(spark, dir).map { id =>
-        val cols = dataCols(id) :+ "cell"
-        TwinLog.compact(spark, dir, Seq("cell"), partitionBy = Seq("cell")) {
-          _.select(cols.map(col): _*).distinct()
-        }
-      }.getOrElse(0L)
-    one(asgDir(outDir), id => Seq(id, "v", "nv", "cscore")) +
-      one(dropDir(outDir), id => Seq(id))
-  }
+  def compactLogs(spark: SparkSession, outDir: String): Long =
+    Seq(asgDir(outDir), dropDir(outDir)).map(dir =>
+      TwinLog.compact(spark, dir, Seq("cell"), partitionBy = Seq("cell"))())
+      .sum
 
   /** Corpus growth beyond the size the model was trained on, in bp of
     * the streamed total — the retrain trigger a deployment watches
@@ -211,10 +197,11 @@ object SemDedupStream {
     * bootstrap-ingest deployment (the trained seed corpus itself
     * streams through as the early batches); a seed corpus that never
     * streams makes this a conservative floor. One column-pruned
-    * distinct-id count of the log, never a vector read — so the
-    * duplicates a crashed compaction leaves behind do not count. */
-  def staleness(spark: SparkSession, outDir: String,
-      centDir: String): Long = {
+    * distinct count of `idCol` (the id column [[start]] was given),
+    * never a vector read — so the duplicates a crashed compaction
+    * leaves behind do not count. */
+  def staleness(spark: SparkSession, outDir: String, centDir: String,
+      idCol: String): Long = {
     val side = trainSidecar(centDir)
     require(fs(spark, side).exists(side),
       s"no training sidecar under $centDir — train() writes it")
@@ -222,9 +209,8 @@ object SemDedupStream {
     val nTrain =
       try new String(in.readAllBytes(), "UTF-8").trim.toLong
       finally in.close()
-    val nAsg = idColOf(spark, asgDir(outDir)).map(id =>
-      TwinLog.read(spark, asgDir(outDir),
-        StructType(Seq(StructField(id, LongType)))).count()).getOrElse(0L)
+    val nAsg = TwinLog.read(spark, asgDir(outDir),
+      StructType(Seq(StructField(idCol, LongType)))).count()
     if (nAsg == 0L) 0L else math.max(0L, nAsg - nTrain) * 10000L / nAsg
   }
 }

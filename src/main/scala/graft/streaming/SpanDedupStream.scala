@@ -98,17 +98,14 @@ object SpanDedupStream {
   /** True iff every standing span-log row was hashed under the
     * CURRENT scheme ([[C4Rules.SpanHashVersion]]). A log from before
     * the stamp existed has no `__hv` column at all; a log appended to
-    * across a scheme bump mixes versions (schema-picked-from-one-file
-    * reads surface foreign rows as NULL `__hv`) — both must not be
-    * folded as-is. The check prunes to the one stamp column (footer
-    * schema + a min over `__hv`), never the hashes themselves. */
+    * across a scheme bump mixes versions (a read that declares `__hv`,
+    * or whose inferred schema came from a stamped file, surfaces
+    * pre-stamp rows as NULL `__hv`) — both must not be folded as-is.
+    * The check prunes to the one stamp column and stops at the first
+    * foreign row, never reading the hashes themselves. */
   private def spanLogCurrent(raw: DataFrame): Boolean =
-    raw.columns.contains("__hv") && {
-      raw.agg(min(coalesce(col("__hv"), lit(0L)))).head() match {
-        case r if r.isNullAt(0) => true // zero-row log: nothing foreign
-        case r => r.getLong(0) == C4Rules.SpanHashVersion
-      }
-    }
+    raw.columns.contains("__hv") && raw.filter(coalesce(col("__hv"),
+      lit(0L)) =!= lit(C4Rules.SpanHashVersion)).isEmpty
 
   /** The standing span log, replay-collapsed. When the log is not
     * entirely at the current hash scheme, spans are re-derived from
@@ -117,8 +114,8 @@ object SpanDedupStream {
     * log's documents because pages append first). One-time cost until
     * [[compactLogs]] migrates the log. */
   def spanLog(spark: SparkSession, outDir: String): DataFrame =
-    if (!TwinLog.exists(spark, spanDir(outDir)) ||
-        spanLogCurrent(spark.read.parquet(spanDir(outDir))))
+    if (spanLogCurrent(TwinLog.read(spark, spanDir(outDir),
+        spanSchema.add("__hv", LongType))))
       TwinLog.read(spark, spanDir(outDir), spanSchema)
     else {
       org.slf4j.LoggerFactory.getLogger(getClass).warn(
@@ -152,13 +149,10 @@ object SpanDedupStream {
     * sanctioned re-hash — compaction is already a full-log rewrite;
     * reads stay hash-only). Returns files collected. */
   def compactLogs(spark: SparkSession, outDir: String): Long =
-    TwinLog.compact(spark, pageDir(outDir), Seq("doc_id")) {
-      _.select(col("doc_id"), col("kept")).distinct()
-    } + TwinLog.compact(spark, spanDir(outDir), Seq("doc_id")) { log =>
-      val spans =
-        if (spanLogCurrent(log))
-          log.select(col("doc_id"), col("spos"), col("sh")).distinct()
-        else C4Rules.spansOf(pages(spark, outDir), "doc_id")
-      spans.withColumn("__hv", lit(C4Rules.SpanHashVersion))
-    }
+    TwinLog.compact(spark, pageDir(outDir), Seq("doc_id"))() +
+      TwinLog.compact(spark, spanDir(outDir), Seq("doc_id")) { log =>
+        (if (spanLogCurrent(log)) log
+          else C4Rules.spansOf(pages(spark, outDir), "doc_id"))
+          .withColumn("__hv", lit(C4Rules.SpanHashVersion))
+      }
 }

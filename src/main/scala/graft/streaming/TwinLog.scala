@@ -51,13 +51,17 @@ import org.apache.spark.sql.types.{LongType, StructType}
   *       folds to its own snapshot reach, never a sentinel arithmetic
   *       overflow.
   *
-  * Reads never infer a schema: a log whose first micro-batch has not
-  * committed (no directory, or only an in-flight `_temporary`) reads
-  * as EMPTY with the caller's schema or the declared layout, and
-  * compacting it is a 0-file no-op that creates nothing. A fact-log
-  * compaction writes [[fileCount]] files for its input bytes (its old
-  * files stay until the write finishes, so a partly landed generation
-  * only adds duplicates).
+  * Reads never infer a schema and run no job to plan: every read
+  * declares its columns, and the additive live slice's covers bound is
+  * a scalar subquery evaluated with the read's own action. A log whose
+  * first micro-batch has not committed (no directory, or only an
+  * in-flight `_temporary`) reads as EMPTY with the caller's schema or
+  * the declared layout, and compacting it is a 0-file no-op that
+  * creates nothing. Compaction is the one read that infers: it runs
+  * only once data files are listed, and it is an action anyway. A
+  * fact-log compaction writes [[fileCount]] files for its input bytes
+  * (its old files stay until the write finishes, so a partly landed
+  * generation only adds duplicates).
   */
 object TwinLog {
 
@@ -149,36 +153,21 @@ object TwinLog {
   def results(spark: SparkSession, dir: String, schema: StructType): DataFrame =
     scan(spark, dir, schema.add(Batch, LongType)).distinct().drop(Batch)
 
-  /** The log's own columns and types as written, tags excluded; None
-    * until its first data file lands. Infers from the files — a probe
-    * for logs whose layout the caller does not know. */
-  private[streaming] def written(spark: SparkSession,
-      dir: String): Option[StructType] = {
-    val root = new Path(dir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(root) || dataFiles(fs, root).isEmpty) None
-    else Some(StructType(spark.read.parquet(dir).schema
-      .filterNot(f => f.name == Batch || f.name == Covers)))
-  }
-
-  /** The log's own column names, tags excluded; None before the first
-    * commit. */
-  def columns(spark: SparkSession, dir: String): Option[Seq[String]] =
-    written(spark, dir).map(_.fieldNames.toSeq)
-
-  /** Fold a FACT log into one generation: `fold(log)` (the raw log,
-    * tags included) tagged `max(__batch) + 1`, repartitioned by `keys`
-    * and laid out by `partitionBy`, landed BEFORE the files it
-    * replaces are deleted. Returns the number of files collected. */
+  /** Fold a FACT log into one generation: `fold` of the log's own
+    * columns (tag dropped, replays collapsed; no fold keeps the distinct
+    * rows) tagged `max(__batch) + 1`, repartitioned by `keys` and laid
+    * out by `partitionBy`, landed BEFORE the files it replaces are
+    * deleted. Returns the number of files collected. */
   def compact(spark: SparkSession, dir: String, keys: Seq[String],
-      partitionBy: Seq[String] = Nil)(fold: DataFrame => DataFrame): Long =
+      partitionBy: Seq[String] = Nil)(
+      fold: DataFrame => DataFrame = identity): Long =
     rewrite(spark, dir, keys, partitionBy, fileCount,
         spark.read.parquet(dir)) { log =>
       val gen = log.agg(max(col(Batch))).head() match {
         case r if r.isNullAt(0) => 1L // a log of empty files
         case r => r.getLong(0) + 1L
       }
-      Some(fold(log).withColumn(Batch, lit(gen)))
+      Some(fold(log.drop(Batch).distinct()).withColumn(Batch, lit(gen)))
     }
 
   /** The one rewrite: list the log's data files (recursively, so
@@ -186,7 +175,8 @@ object TwinLog {
     * in-flight append's `_temporary` are skipped, as Spark's reader
     * skips them), write `next(log)` as `files(input bytes)` files,
     * then delete the listed files. `log` is read only once data files
-    * exist; `next` returns None when nothing is safe to fold. */
+    * exist — which is what lets [[compact]] infer its schema — and
+    * `next` returns None when nothing is safe to fold. */
   private def rewrite(spark: SparkSession, dir: String, keys: Seq[String],
       partitionBy: Seq[String], files: Long => Int, log: => DataFrame)(
       next: DataFrame => Option[DataFrame]): Long = {
@@ -252,13 +242,12 @@ object TwinLog {
   }
 
   /** The live slice of an ADDITIVE log — max-covers snapshot (if any)
-    * plus raw deltas past it — collapsed against replays. */
+    * plus raw deltas past it — collapsed against replays. The covers
+    * bound is a scalar subquery (-1 with no snapshot), so building the
+    * slice runs no job. */
   private def live(log: DataFrame): DataFrame = {
     val distinctLog = log.distinct()
-    val covers = distinctLog.agg(max(col(Covers))).head() match {
-      case r if r.isNullAt(0) => -1L
-      case r => r.getLong(0)
-    }
+    val covers = coalesce(distinctLog.agg(max(col(Covers))).scalar(), lit(-1L))
     distinctLog.filter(
       (col(Covers).isNotNull && col(Covers) === covers)
         || (col(Covers).isNull && col(Batch) > covers))

@@ -64,12 +64,30 @@ class MergeSinkSpec extends SparkSpec {
     assert(snapshot(dir) == before, "compaction must not change the resolved table")
     val parts = new java.io.File(dir).listFiles()
       .filter(f => f.isDirectory && f.getName.startsWith(s"${MergeSink.BatchCol}="))
-    assert(parts.map(_.getName).toSeq == Seq(s"${MergeSink.BatchCol}=1"),
-      s"compaction must leave one partition at the max batch, got ${parts.toSeq}")
+    assert(parts.map(_.getName).toSeq == Seq(s"${MergeSink.BatchCol}=-1"),
+      s"compaction must leave one partition below every batch, got ${parts.toSeq}")
     // a post-compaction stream batch (higher id) still outranks the base
     MergeSink.applyBatch(Seq(("U", 2L, "b3", 22L))
       .toDF("op", "k", "name", "v"), dir, 2L)
     assert(snapshot(dir)(2L) == ("b3", 22L))
+  }
+
+  test("a replay of the last batch after a compaction leaves the read " +
+      "unchanged") {
+    val dir = Files.createTempDirectory("merge-sink").resolve("t").toString
+    MergeSink.applyBatch(Seq(
+      ("U", 1L, "a", 10L), ("U", 2L, "b", 20L), ("U", 3L, "c", 30L))
+      .toDF("op", "k", "name", "v"), dir, 0L)
+    val b1 = Seq(("D", 1L, null, 0L), ("U", 2L, "b2", 21L))
+      .toDF("op", "k", "name", "v")
+    MergeSink.applyBatch(b1, dir, 1L)
+    MergeSink.compact(spark, dir, "k", "op")
+    val before = snapshot(dir)
+    assert(before == Map(2L -> ("b2", 21L), 3L -> ("c", 30L)))
+    // at-least-once delivery: a restart re-delivers batch 1 unchanged
+    MergeSink.applyBatch(b1, dir, 1L)
+    assert(snapshot(dir) == before,
+      "a replayed batch overwrote the compacted base")
   }
 
   test("randomized op sequences match a driver-side map fold (3 seeds)") {

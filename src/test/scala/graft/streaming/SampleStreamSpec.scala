@@ -132,7 +132,8 @@ class SampleStreamSpec extends SparkSpec {
     PrioritySample.topSummary(pri, "grp", "doc_id", K)
       .withColumn("__batch", lit(0L))
       .write.mode("append").parquet(SampleStream.logDir(out))
-    val committed = SampleStream.sample(spark, out, "grp", "doc_id", K)
+    val committed = SampleStream.sample(spark, out, "grp", "doc_id", K,
+      schemaFrom = Some((docs, "w_in")))
     assert(emptySchema.schema == committed.schema,
       s"empty ${emptySchema.schema.simpleString} != committed " +
         committed.schema.simpleString)

@@ -118,7 +118,7 @@ class SemDedupStreamSpec extends SparkSpec {
     spark.catalog.clearCache()
 
     // staleness: trained on 3, streamed 6 -> (6-3)/6 = 5000 bp
-    assert(SemDedupStream.staleness(spark, out, cents) == 5000L)
+    assert(SemDedupStream.staleness(spark, out, cents, "vec_id") == 5000L)
   }
 
   test("staleness counts distinct ids: a compaction that crashed after " +
@@ -134,7 +134,7 @@ class SemDedupStreamSpec extends SparkSpec {
     runOnce(root, cents, out, cp)
     stage(root, "b", b2)
     runOnce(root, cents, out, cp)
-    assert(SemDedupStream.staleness(spark, out, cents) == 5000L)
+    assert(SemDedupStream.staleness(spark, out, cents, "vec_id") == 5000L)
     val before = streamed(out)
 
     // the crash: compactLogs' folded generation lands, its delete of
@@ -143,7 +143,7 @@ class SemDedupStreamSpec extends SparkSpec {
     spark.read.parquet(asg).drop("__batch").distinct()
       .withColumn("__batch", lit(2L))
       .write.mode("append").partitionBy("cell").parquet(asg)
-    assert(SemDedupStream.staleness(spark, out, cents) == 5000L,
+    assert(SemDedupStream.staleness(spark, out, cents, "vec_id") == 5000L,
       "duplicate assignment rows from a crashed compaction were counted")
     assert(streamed(out) == before, "the crashed compaction moved the read")
   }

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import java.nio.file.{Files, Path}
+import java.nio.file.{Files, Path, Paths}
 
 import scala.jdk.CollectionConverters._
 
@@ -152,6 +152,17 @@ class SpanDedupStreamSpec extends SparkSpec {
       C4Rules.pageRows(toDf(b1 ++ b2), "doc_id", "text"), "doc_id")
       .collect().map(_.toString).toSeq.sorted
     assert(migrated == fresh, "migrated span log != fresh derivation")
+  }
+
+  test("a log whose first append is in flight (only _temporary/0) " +
+      "reads as empty") {
+    val out = Files.createTempDirectory("spandedup-inflight")
+      .resolve("out").toString
+    for (dir <- Seq(SpanDedupStream.pageDir(out),
+        SpanDedupStream.spanDir(out)))
+      Files.createDirectories(Paths.get(dir, "_temporary", "0"))
+    assert(SpanDedupStream.spanLog(spark, out).count() == 0L)
+    assert(streamed(out).isEmpty)
   }
 
   test("a thin page and a boundary-free document never enter the logs") {

@@ -66,7 +66,7 @@ trait TwinConformance { self: SparkSpec =>
       read: String => DataFrame,
       mergeLaw: Boolean = true)
 
-  private def stageDf(inDir: Path, name: String, df: DataFrame): Unit = {
+  protected def stageDf(inDir: Path, name: String, df: DataFrame): Unit = {
     val scratch = inDir.getParent.resolve(s"scratch_$name")
     df.coalesce(1).write.parquet(scratch.toString)
     val part = Files.list(scratch).iterator().asScala
@@ -83,7 +83,7 @@ trait TwinConformance { self: SparkSpec =>
     rows
   }
 
-  private def runOnce(fx: TwinFixture, name: String, in: Path, out: String,
+  protected def runOnce(fx: TwinFixture, name: String, in: Path, out: String,
       cp: String): Unit = {
     val q = fx.start(
       spark.readStream.schema(fx.schema).parquet(in.toString), out, cp)

@@ -10,12 +10,13 @@ import org.apache.spark.sql.functions._
 import graft.SparkSpec
 import graft.operators.Curate
 
-/** The three operational properties (restart merge law, crash replay
-  * via real commit-marker deletion, empty batch) proven UNIFORMLY for
-  * every log twin — one ~15-line declaration per twin, the
-  * [[TwinConformance]] harness. Twin-specific semantics stay in each
-  * twin's own spec. */
-class TwinConformanceSpec extends SparkSpec with TwinConformance {
+/** Every log twin's stream, declared once: each `twinConformance`
+  * block below names a twin and builds its fixture (by-name, so
+  * standing indexes and frozen models are built inside the test that
+  * uses them). [[TwinConformanceSpec]] registers the harness's proofs
+  * for each block; [[TwinLogReadPlanSpec]] collects the fixtures
+  * instead, to plan each twin's reads on a standing log. */
+abstract class TwinFixtures extends SparkSpec with TwinConformance {
   import spark.implicits._
 
   // ---- shared fixture builders -------------------------------------
@@ -106,7 +107,7 @@ class TwinConformanceSpec extends SparkSpec with TwinConformance {
 
   // ---- model twins (read = scoring a fixed probe) ------------------
 
-  private val probe = Seq(
+  protected val probe = Seq(
     (9001L, "template shared body a common run"),
     (9002L, "entirely novel words nowhere in any training batch"))
     .toDF("doc_id", "text")
@@ -337,3 +338,10 @@ class TwinConformanceSpec extends SparkSpec with TwinConformance {
       mergeLaw = false)
   }
 }
+
+/** The three operational properties (restart merge law, crash replay
+  * via real commit-marker deletion, empty batch) proven UNIFORMLY for
+  * every log twin — one ~15-line declaration per twin in
+  * [[TwinFixtures]], the [[TwinConformance]] harness. Twin-specific
+  * semantics stay in each twin's own spec. */
+class TwinConformanceSpec extends TwinFixtures
